@@ -106,7 +106,7 @@ object Ann {
         "a retrieval shortlist (<= 1M rows, the top-N of an index " +
         "scan), not a corpus; shrink with bruteForceTopK/ivfTopK first")
     val spark = candidates.sparkSession
-    var state = candidates
+    val state0 = candidates
       .select(col(idCol).as("id"), col(scoreCol).cast("long")
         .as("score_micros"),
         transform(col(vecCol), x => x.cast("double")).as("__v"))
@@ -114,12 +114,10 @@ object Ann {
         sqrt(graft.functions.VectorFunctions.sumSquares(col("__v"))))
       .withColumn("maxsim_micros", lit(0L))
       .localCheckpoint(true)
-    graft.core.Caches.registerCheckpoint(state)
-    var selected: DataFrame = null
-    try {
-      var r = 1
-      var exhausted = false
-      while (r <= k && !exhausted) {
+    // the picks rotate beside the candidate state
+    graft.core.Loop.holding { held =>
+      var selected: DataFrame = null
+      held.adopt(graft.core.Loop.iterate(state0, rounds = k) { (state, r) =>
         val mmr = (lit(lambdaMicros) * col("score_micros") -
           lit(1000000L - lambdaMicros) * col("maxsim_micros"))
           .as("mmr_micros")
@@ -127,47 +125,36 @@ object Ann {
             col("__v"), col("__n"), col("maxsim_micros"), mmr)
           .orderBy(col("mmr_micros").desc, col("id").asc).limit(1)
           .collect()
-        if (pickRows.isEmpty) exhausted = true
-        else {
-          val p = pickRows.head
+        pickRows.headOption.map { p =>
           val pickFrame = spark.range(1).select(
             lit(r).as("rank"),
             lit(p.get(p.fieldIndex("id"))).as("id"),
             lit(p.getAs[Long]("score_micros")).as("score_micros"),
             lit(p.getAs[Long]("maxsim_micros")).as("maxsim_micros"),
             lit(p.getAs[Long]("mmr_micros")).as("mmr_micros"))
-          val grown = (if (selected == null) pickFrame
-            else selected.unionByName(pickFrame)).localCheckpoint(true)
-          if (selected != null) graft.core.Caches.releaseCheckpoint(selected)
+          val grown = held(if (selected == null) pickFrame
+            else selected.unionByName(pickFrame))
+          held.release(selected)
           selected = grown
           val selVec = p.getSeq[Double](p.fieldIndex("__v"))
           val selNorm = p.getAs[Double]("__n")
           val sim = round(Dedup.cosineWithNorms(col("__v"),
             typedLit(selVec), col("__n"), lit(selNorm)) * 1e6).cast("long")
-          val next = state
+          state
             .where(col("id") =!= lit(p.get(p.fieldIndex("id"))))
             .withColumn("maxsim_micros",
               greatest(col("maxsim_micros"), sim))
-            .localCheckpoint(true)
-          graft.core.Caches.releaseCheckpoint(state)
-          state = next
-          r += 1
         }
-      }
+      })
       // empty branch must carry the NORMAL path's id type — a bare
       // null literal is NullType, which breaks parquet writes and
       // unions with real runs
-      val out = (if (selected == null)
+      held(if (selected == null)
         spark.range(0).select(lit(0).as("rank"),
           lit(null).cast(candidates.schema(idCol).dataType).as("id"),
           lit(0L).as("score_micros"), lit(0L).as("maxsim_micros"),
           lit(0L).as("mmr_micros"))
-      else selected).localCheckpoint(true)
-      graft.core.Caches.registerCheckpoint(out)
-      out
-    } finally {
-      graft.core.Caches.releaseCheckpoint(state)
-      if (selected != null) graft.core.Caches.releaseCheckpoint(selected)
+      else selected)
     }
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Loop
+
 /** Distributed byte-pair-encoding (Sennrich et al. 2016) merge learning
   * and application — the tokenizer-TRAINING step in front of the
   * [[TextAnalysis.buildVocab]] → [[TextAnalysis.encodeTokens]] →
@@ -171,12 +173,12 @@ object Bpe {
     require(minPairCount >= 1L, s"minPairCount must be >= 1, got $minPairCount")
     require(batchSize >= 1 && batchSize <= 256,
       s"batchSize must be in [1, 256], got $batchSize")
-    var wt = wordTypes0.localCheckpoint(true)
     val merges = Seq.newBuilder[Merge]
     var rank = 0
-    var done = false
-    try {
-      while (rank < numMerges && !done) {
+    // the RETURNED state is registered (not released): the caller reads it
+    val wt = Loop.iterate(wordTypes0.localCheckpoint(true)) { (wt, _) =>
+      if (rank >= numMerges) None
+      else {
         val want = math.min(batchSize, numMerges - rank)
         // over-fetch so the disjointness scan has room to fill the batch;
         // the size only bounds batch yield, never correctness
@@ -186,9 +188,8 @@ object Bpe {
           .limit(topN).collect()
           .map(r => (r.getAs[String]("__l"), r.getAs[String]("__r"),
             r.getAs[Long]("__cnt")))
-        if (cands.isEmpty || cands.head._3 < minPairCount) {
-          done = true
-        } else {
+        if (cands.isEmpty || cands.head._3 < minPairCount) None
+        else {
           // greedy disjoint scan; exact mode stops at the first sharing
           // candidate and trims by the barrier (see scaladoc), approximate
           // mode skips sharing candidates and keeps filling the batch
@@ -225,25 +226,11 @@ object Bpe {
             m
           }.toSeq
           merges ++= batch
-          // ONE merge-application expression for the whole batch; `wt`
-          // stays the checkpoint LEAF until the new one exists
-          // (releaseCheckpoint on a derived frame is a silent no-op)
-          val next = wt
-            .withColumn("__syms", applyMergesExpr(col("__syms"), batch))
-            .localCheckpoint(true)
-          graft.core.Caches.releaseCheckpoint(wt)
-          wt = next
+          // ONE merge-application expression for the whole batch
+          Some(wt.withColumn("__syms", applyMergesExpr(col("__syms"), batch)))
         }
       }
-    } catch {
-      // mid-iteration failure: nothing escapes to the caller, so the
-      // in-flight round state must not outlive the call
-      case e: Throwable =>
-        graft.core.Caches.releaseCheckpoint(wt)
-        throw e
     }
-    // the RETURNED state is registered (not released): the caller reads it
-    graft.core.Caches.registerCheckpoint(wt)
     (merges.result(), wt)
   }
 

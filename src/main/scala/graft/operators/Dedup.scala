@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Loop
 import graft.operators.TextAnalysis.{hash28, hash60, shingles, tokens, MinhashPrime}
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -1182,18 +1183,7 @@ object Dedup {
       .union(p.select(col("d").as("s"), col("s").as("d")))
       .distinct()
       .localCheckpoint(true)
-    val spark = pairs.sparkSession
     val edgeCount = edgesRaw.count() // cheap: counts the checkpointed blocks
-    // Right-size the iteration's shuffle width to the EDGE data, not the
-    // session default: each round shuffles the (usually small) candidate-
-    // pair graph, and many rounds of default-partition-count tiny tasks are
-    // pure scheduler overhead — the dominant cost of this operator on a
-    // busy cluster. ~250k edges per partition keeps sub-threshold graphs at
-    // one task while letting mid-size graphs spread their per-round joins
-    // across the cluster; never above the session width.
-    val defaultParts = spark.sessionState.conf.numShufflePartitions
-    val parts = math.max(1,
-      math.min(defaultParts, math.ceil(edgeCount / 250e3).toInt))
     if (algorithm == "local" && edgeCount > LocalEdgeThreshold)
       throw new IllegalArgumentException(
         s"algorithm='local' on $edgeCount edges exceeds LocalEdgeThreshold " +
@@ -1213,25 +1203,16 @@ object Dedup {
       graft.core.Caches.releaseCheckpoint(p)
       graft.core.Caches.releaseCheckpoint(edgesRaw)
     }
-    val useStars = algorithm == "stars" || algorithm == "auto"
-    // Per-loop conf (every round's shuffle must land in `parts`
-    // partitions; AQE re-plans every stage of every round and buys
-    // nothing once the width is right-sized to the edge data) is scoped
-    // to a SESSION CLONE, never set on the caller's session: a
-    // concurrent query on the caller's session can therefore never
-    // observe the override, and no finally-restore can be skipped by a
-    // crash. The clone shares the SparkContext, so the checkpointed
-    // edge blocks move across for free; the loop's checkpointed result
-    // is rebound to the caller's session on the way out for the same
-    // reason (downstream consumer plans must use CALLER conf).
-    val isolated = org.apache.spark.sql.GraftSqlBridge.cloneSession(spark)
-    isolated.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    isolated.conf.set("spark.sql.adaptive.enabled", "false")
-    val edgesIso = org.apache.spark.sql.GraftSqlBridge.rebind(edgesRaw, isolated)
+    // the rounds run loop-width on a session clone ([[Loop.session]]);
+    // the result rebinds to the caller's session (downstream plans must
+    // use CALLER conf)
+    val edgesIso = Loop.rebind(edgesRaw,
+      Loop.session(pairs.sparkSession, edgeCount))
     val out =
-      if (useStars) starsLoop(edgesIso, maxIter, edgeCount, releaseInputs)
-      else labelPropLoop(edgesIso, parts, maxIter, releaseInputs)
-    org.apache.spark.sql.GraftSqlBridge.rebind(out, spark)
+      if (algorithm == "stars" || algorithm == "auto")
+        starsLoop(edgesIso, maxIter, edgeCount, releaseInputs)
+      else labelPropLoop(edgesIso, maxIter, releaseInputs)
+    Loop.rebind(out, pairs.sparkSession)
   }
 
   /** Path-compressed, size-united union-find over the collected (bounded —
@@ -1300,52 +1281,42 @@ object Dedup {
     * already-checkpointed round output.
     */
   private def labelPropLoop(
-      edgesRaw: DataFrame, parts: Int, maxIter: Int,
-      releaseInputs: () => Unit): DataFrame = {
-    // Co-partition edges on the join key once: localCheckpoint preserves the
-    // hash partitioning, so every round's join re-shuffles only the (much
-    // smaller) labels side.
-    val edges = edgesRaw.repartition(parts, col("s")).localCheckpoint(true)
-    var converged = false
-    var iter = 0
-    var labelsCkpt = edges.select(col("s").as("node"), col("s").as("comp"))
-      .distinct().localCheckpoint(true)
+      edgesRaw: DataFrame, maxIter: Int,
+      releaseInputs: () => Unit): DataFrame = Loop.holding { held =>
+    // Co-partition edges on the join key once (at the loop session's
+    // width): localCheckpoint preserves the hash partitioning, so every
+    // round's join re-shuffles only the (much smaller) labels side.
+    val edges = held(edgesRaw.repartition(
+      edgesRaw.sparkSession.sessionState.conf.numShufflePartitions, col("s")))
+    val labels0 =
+      held(edges.select(col("s").as("node"), col("s").as("comp")).distinct())
     releaseInputs()
-    var labels = labelsCkpt
-    while (!converged && iter < maxIter) {
-      val msgs = edges
-        .join(labels, edges("s") === labels("node"))
-        .select(edges("d").as("node"), labels("comp"), lit(false).as("own"))
-      // Every node has exactly one own=true row (labels covers all nodes),
-      // so prev is never null and comp <=> prev iff the node's label held.
-      // The changed-row count rides on the checkpoint's own job via
-      // observe() — convergence detection costs zero extra actions.
-      val obs = org.apache.spark.sql.Observation(s"cc_lp_$iter")
-      val next = msgs
-        .union(labels.select(col("node"), col("comp"), lit(true).as("own")))
-        .groupBy("node")
-        .agg(
-          min("comp").as("comp"),
-          min(when(col("own"), col("comp"))).as("prev"))
-        .observe(obs, count(when(col("comp") =!= col("prev"), 1)).as("changed"))
-        .localCheckpoint(true)
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      // this round's output is materialized — the previous round's
-      // checkpoint is dead; free it instead of waiting on the GC cleaner
-      graft.core.Caches.releaseCheckpoint(labelsCkpt)
-      labelsCkpt = next
-      labels = next.select(col("node"), col("comp"))
-      iter += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxIter rounds; " +
-        "raise maxIter (rounds needed ~ component diameter)")
-    graft.core.Caches.releaseCheckpoint(edges)
-    // the caller's result reads the final round's checkpoint: keep it
-    // pinned, but let a Caches scope (e.g. the streaming ingest sink)
-    // release it once the result is materialized
-    graft.core.Caches.registerCheckpoint(labelsCkpt)
-    labels
+    // The changed-row count rides on each round's checkpoint job via
+    // observe() — convergence detection costs zero extra actions.
+    var obs: org.apache.spark.sql.Observation = null
+    Loop.iterate(labels0, rounds = maxIter,
+      until = (_, _) => obs.get("changed").asInstanceOf[Long] == 0L,
+      unconverged = Some(
+        s"connectedComponents did not converge within $maxIter rounds; " +
+          "raise maxIter (rounds needed ~ component diameter)")) {
+      (state, r) =>
+        val labels = state.select(col("node"), col("comp"))
+        val msgs = edges
+          .join(labels, edges("s") === labels("node"))
+          .select(edges("d").as("node"), labels("comp"), lit(false).as("own"))
+        // Every node has exactly one own=true row (labels covers all
+        // nodes), so prev is never null and comp <=> prev iff the node's
+        // label held.
+        obs = org.apache.spark.sql.Observation(s"cc_lp_${r - 1}")
+        Some(msgs
+          .union(labels.select(col("node"), col("comp"), lit(true).as("own")))
+          .groupBy("node")
+          .agg(
+            min("comp").as("comp"),
+            min(when(col("own"), col("comp"))).as("prev"))
+          .observe(obs,
+            count(when(col("comp") =!= col("prev"), 1)).as("changed")))
+    }.select(col("node"), col("comp"))
   }
 
   /** Alternating large-star/small-star on canonically oriented edges
@@ -1390,73 +1361,68 @@ object Dedup {
       }
       (l("n"), l("x"), l("s"))
     }
-    // Every endpoint must come back labeled — including nodes whose only
-    // "pair" is a self-loop, which the canonical orientation drops below.
-    val allNodes = edgesRaw.select(col("s").as("node")).distinct()
-      .localCheckpoint(true)
-    // child → parent orientation; self-loops dropped
-    var edges = edgesRaw
-      .select(greatest(col("s"), col("d")).as("u"), least(col("s"), col("d")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct().localCheckpoint(true)
-    releaseInputs()
-    // both return paths below read allNodes — scope-registered, not freed
-    graft.core.Caches.registerCheckpoint(allNodes)
-    if (edges.isEmpty) {
-      graft.core.Caches.releaseCheckpoint(edges)
-      return allNodes.select(col("node"), col("node").as("comp"))
+    Loop.holding { held =>
+      // Every endpoint must come back labeled — including nodes whose only
+      // "pair" is a self-loop, which the canonical orientation drops below.
+      val allNodes = held(edgesRaw.select(col("s").as("node")).distinct())
+      // child → parent orientation; self-loops dropped
+      val edges0 = held(edgesRaw
+        .select(greatest(col("s"), col("d")).as("u"), least(col("s"), col("d")).as("v"))
+        .where(col("u") =!= col("v"))
+        .distinct())
+      releaseInputs()
+      if (edges0.isEmpty) allNodes.select(col("node"), col("node").as("comp"))
+      else {
+        var sig = {
+          val r = edges0.agg(sigExprs.head, sigExprs.tail: _*).head()
+          sigOf(Seq("n", "x", "s").zipWithIndex
+            .map { case (k, i) => k -> r.get(i) }.toMap)
+        }
+        // the fixpoint signature rides on each round's checkpoint job via
+        // observe() — no extra action per round
+        var obs: org.apache.spark.sql.Observation = null
+        val edges = Loop.iterate(edges0, rounds = budget,
+          until = (_, _) => {
+            val nextSig = sigOf(obs.get)
+            val converged = nextSig == sig
+            sig = nextSig
+            converged
+          },
+          unconverged = Some(
+            s"connectedComponents(stars) did not converge within $budget rounds")) {
+          (edges, r) =>
+            // large-star: symmetric view keyed on each node; m = min of
+            // closed neighborhood; larger neighbors re-attach to m
+            val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+            val mins = sym.groupBy("u")
+              .agg(min(least(col("u"), col("v"))).as("m"))
+            // no checkpoint on the intermediate: both consumers below read
+            // it through an identical Exchange on "u", which ReuseExchange
+            // computes once — the round stays a single job, and the
+            // round-end checkpoint of `small` keeps lineage depth constant
+            val large = sym.where(col("v") > col("u"))
+              .join(mins, "u")
+              .select(col("v").as("u"), col("m").as("v"))
+              .distinct()
+            // small-star: keyed on the larger endpoint; node and all its
+            // smaller neighbors attach to the minimum
+            obs = org.apache.spark.sql.Observation(s"cc_stars_${r - 1}")
+            val mins2 = large.groupBy("u").agg(min(col("v")).as("m"))
+            Some(large.join(mins2, "u")
+              .select(col("v").as("n"), col("m"))
+              .union(mins2.select(col("u").as("n"), col("m")))
+              .where(col("n") =!= col("m"))
+              .select(col("n").as("u"), col("m").as("v"))
+              .distinct()
+              .observe(obs, sigExprs.head, sigExprs.tail: _*))
+        }
+        val starLabels = edges.select(col("u").as("node"), col("v").as("comp"))
+          .union(edges.select(col("v").as("node"), col("v").as("comp")))
+          .distinct()
+        // self-loop-only nodes label themselves
+        allNodes.join(starLabels, Seq("node"), "left")
+          .select(col("node"), coalesce(col("comp"), col("node")).as("comp"))
+      }
     }
-    var sig = {
-      val r = edges.agg(sigExprs.head, sigExprs.tail: _*).head()
-      sigOf(Seq("n", "x", "s").zipWithIndex
-        .map { case (k, i) => k -> r.get(i) }.toMap)
-    }
-    var converged = false
-    var iter = 0
-    while (!converged && iter < budget) {
-      // large-star: symmetric view keyed on each node; m = min of closed
-      // neighborhood; larger neighbors re-attach to m
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u")
-        .agg(min(least(col("u"), col("v"))).as("m"))
-      // no checkpoint on the intermediate: both consumers below read it
-      // through an identical Exchange on "u", which ReuseExchange computes
-      // once — the round stays a single job, and the round-end checkpoint
-      // of `small` keeps lineage depth constant across rounds
-      val large = sym.where(col("v") > col("u"))
-        .join(mins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-      // small-star: keyed on the larger endpoint; node and all its smaller
-      // neighbors attach to the minimum. The fixpoint signature rides on
-      // the checkpoint's own job via observe() — no extra action per round.
-      val obs = org.apache.spark.sql.Observation(s"cc_stars_$iter")
-      val mins2 = large.groupBy("u").agg(min(col("v")).as("m"))
-      val small = large.join(mins2, "u")
-        .select(col("v").as("n"), col("m"))
-        .union(mins2.select(col("u").as("n"), col("m")))
-        .where(col("n") =!= col("m"))
-        .select(col("n").as("u"), col("m").as("v"))
-        .distinct()
-        .observe(obs, sigExprs.head, sigExprs.tail: _*)
-        .localCheckpoint(true)
-      val nextSig = sigOf(obs.get)
-      converged = nextSig == sig
-      sig = nextSig
-      // round output materialized — the previous round's checkpoint is dead
-      graft.core.Caches.releaseCheckpoint(edges)
-      edges = small
-      iter += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents(stars) did not converge within $budget rounds")
-    // the result reads the final round's edges: keep pinned, scope-register
-    graft.core.Caches.registerCheckpoint(edges)
-    val starLabels = edges.select(col("u").as("node"), col("v").as("comp"))
-      .union(edges.select(col("v").as("node"), col("v").as("comp")))
-      .distinct()
-    // self-loop-only nodes label themselves
-    allNodes.join(starLabels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("comp"), col("node")).as("comp"))
   }
 }

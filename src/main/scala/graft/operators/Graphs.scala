@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Loop
+
 /** Iterative graph analytics over edge DataFrames — the operator class
   * (alongside [[Dedup.connectedComponents]]) for link-structure signals
   * in a crawl corpus: PageRank-style authority feeds per-domain quality
@@ -24,48 +26,12 @@ import org.apache.spark.sql.functions._
   * Scale shape per iteration: one broadcast-or-shuffle join of edges
   * against the (node, pr) table, one groupBy on the destination —
   * map-side partial sums of longs — and a left join back to the node
-  * set. Lineage is truncated with an eager localCheckpoint per
-  * iteration (released as soon as the next is materialized), so
-  * `iterations` bounds neither the plan depth nor analysis time.
+  * set. Lineage is truncated with an eager localCheckpoint every 4th
+  * iteration and after the last ([[graft.core.Loop.iterate]] releases
+  * each as soon as the next is materialized), so `iterations` bounds
+  * neither the plan depth nor analysis time.
   */
 object Graphs {
-
-  /** Session clone whose shuffle width is right-sized to an iterative
-    * loop's data — [[Dedup.connectedComponents]]' discipline extended to
-    * the whole graph tier: each round of these loops shuffles the
-    * (often small relative to the cluster) edge/state tables, and many
-    * rounds of default-width tiny tasks are pure scheduler overhead,
-    * measured as the DOMINANT cost of the iterative queries at bench
-    * scale (~220 sub-50 ms jobs per query at 32-way width over
-    * sub-million-row graphs). ~250k rows per partition, never above the
-    * session width — so at cluster scale with large graphs the width is
-    * UNCHANGED and only the pathological small-input case collapses.
-    * AQE is off inside the loop for the connectedComponents reason:
-    * it re-plans every stage of every round and buys nothing once the
-    * width is right-sized. Conf overrides live on the CLONE only —
-    * concurrent queries on the caller's session can never observe them
-    * — and results rebind to the caller's session on the way out.
-    */
-  private def loopSession(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Long,
-      keepAqe: Boolean = false): org.apache.spark.sql.SparkSession = {
-    val defaultParts = spark.sessionState.conf.numShufflePartitions
-    val parts = math.max(1,
-      math.min(defaultParts, math.ceil(rows / 250e3).toInt))
-    val iso = org.apache.spark.sql.GraftSqlBridge.cloneSession(spark)
-    iso.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // the frontier-driven BFS loops RELY on AQE's runtime broadcast
-    // re-planning (a small frontier broadcasts and the pinned edges
-    // never move); the label/peel loops have no such shape and AQE's
-    // per-stage re-planning is pure overhead once the width is right
-    if (!keepAqe) iso.conf.set("spark.sql.adaptive.enabled", "false")
-    iso
-  }
-
-  private def rebind(
-      df: DataFrame, s: org.apache.spark.sql.SparkSession): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.rebind(df, s)
 
   /** PageRank by power iteration. `edges` is a DIRECTED edge list
     * (duplicate edges are collapsed); rank mass flows src → dst with
@@ -242,21 +208,18 @@ object Graphs {
           s"shortestPaths: negative edge weight ${minW.getLong(0)} — " +
             "bounded-round Bellman-Ford is only a shortest path under " +
             "non-negative weights; shift or reject them upstream")
-      var dist = seeds
+      val dist0 = seeds
         .select(col(seedCol).cast("string").as("node"))
         .where(col("node").isNotNull).distinct()
         .withColumn("dist", lit(0L))
         .localCheckpoint(true)
-      if (dist.limit(1).count() == 0) {
-        graft.core.Caches.releaseCheckpoint(dist)
-        throw new IllegalArgumentException("shortestPaths: no seeds")
-      }
-      // round-1 frontier is the seed table itself (same checkpoint)
-      var frontier = dist
-      var r = 1
-      var exhausted = false
-      try {
-        while (r <= maxRounds && !exhausted) {
+      // the frontier rotates beside the distance table; round 1's is the
+      // seed table itself, which the distance loop (not this block) holds
+      Loop.holding { held =>
+        var frontier = dist0
+        Loop.iterate(dist0, rounds = maxRounds) { (dist, r) =>
+          if (r == 1 && dist.limit(1).count() == 0)
+            throw new IllegalArgumentException("shortestPaths: no seeds")
           val improved = e
             .join(frontier.select(col("node").as("__s"),
               col("dist").as("__fd")), "__s")
@@ -266,31 +229,14 @@ object Graphs {
               Seq("node"), "left")
             .where(col("__old").isNull || col("__cand") < col("__old"))
             .select(col("node"), col("__cand").as("dist"))
-          val nextFrontier = improved.localCheckpoint(true)
-          // release order: the OLD frontier first (it may be the same
-          // checkpoint as `dist` in round 1 — release is idempotent),
-          // then merge + swap the distance table
-          if (!(frontier eq dist)) graft.core.Caches.releaseCheckpoint(frontier)
+          val nextFrontier = held(improved)
+          held.release(frontier)
           frontier = nextFrontier
-          exhausted = frontier.limit(1).count() == 0
-          if (!exhausted) {
-            val merged = dist.unionByName(frontier)
-              .groupBy("node").agg(min(col("dist")).as("dist"))
-              .localCheckpoint(true)
-            graft.core.Caches.releaseCheckpoint(dist)
-            dist = merged
-          }
-          r += 1
+          if (frontier.limit(1).count() == 0) None
+          else Some(dist.unionByName(frontier)
+            .groupBy("node").agg(min(col("dist")).as("dist")))
         }
-      } catch {
-        case t: Throwable =>
-          if (!(frontier eq dist)) graft.core.Caches.releaseCheckpoint(frontier)
-          graft.core.Caches.releaseCheckpoint(dist)
-          throw t
       }
-      if (!(frontier eq dist)) graft.core.Caches.releaseCheckpoint(frontier)
-      graft.core.Caches.registerCheckpoint(dist)
-      dist
     } finally e.unpersist()
   }
 
@@ -330,46 +276,27 @@ object Graphs {
       s"maxHops must be in 1..100, got $maxHops")
     val e = graft.core.Caches.pin(kHopEdges(edges, srcCol, dstCol))
     try {
-      var visited = seeds
+      val visited0 = seeds
         .select(col(seedCol).cast("string").as("node"))
         .where(col("node").isNotNull).distinct()
         .withColumn("hops", lit(0L))
         .localCheckpoint(true)
-      if (visited.limit(1).count() == 0) {
-        // release BEFORE throwing — the loud path must not leak the
-        // just-materialized seed checkpoint
-        graft.core.Caches.releaseCheckpoint(visited)
-        throw new IllegalArgumentException("kHopReachability: no seeds")
-      }
-      var h = 1
-      var exhausted = false
-      try {
-        while (h <= maxHops && !exhausted) {
+      Loop.iterate(visited0, rounds = maxHops,
+        // fixpoint probe on the fresh checkpoint: no node is new at hop h
+        until = (visited, h) =>
+          visited.where(col("hops") === h).limit(1).count() == 0) {
+        (visited, h) =>
+          // the loud empty-seed path — the loop releases the seed checkpoint
+          if (h == 1 && visited.limit(1).count() == 0)
+            throw new IllegalArgumentException("kHopReachability: no seeds")
           val frontier = visited.where(col("hops") === (h - 1))
           val next = e
             .join(frontier.select(col("node").as("__s")), "__s")
             .select(col("__d").as("node")).distinct()
             .join(visited.select("node"), Seq("node"), "left_anti")
             .withColumn("hops", lit(h.toLong))
-          val grown = visited.unionByName(next).localCheckpoint(true)
-          // the checkpoint materialized `grown`; the previous visited
-          // checkpoint has no reader left
-          graft.core.Caches.releaseCheckpoint(visited)
-          visited = grown
-          // fixpoint probe AFTER the swap, so a failure mid-count leaves
-          // exactly one live checkpoint for the catch below to release
-          exhausted = visited.where(col("hops") === h).limit(1).count() == 0
-          h += 1
-        }
-      } catch {
-        case t: Throwable =>
-          // a mid-loop failure must not leak the in-flight visited
-          // checkpoint — mirror the loud empty-seed path above
-          graft.core.Caches.releaseCheckpoint(visited)
-          throw t
+          Some(visited.unionByName(next))
       }
-      graft.core.Caches.registerCheckpoint(visited)
-      visited
     } finally e.unpersist()
   }
 
@@ -459,48 +386,38 @@ object Graphs {
       dstCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val e0 = undirectedEdges(edges, srcCol, dstCol).localCheckpoint(true)
-    // peel rounds run loop-width on a session clone ([[loopSession]])
-    val e0i = rebind(e0, loopSession(edges.sparkSession, e0.count()))
-    // finally: a peel failure must release the input checkpoint too
-    val e = try peelTo(e0i, k) finally graft.core.Caches.releaseCheckpoint(e0)
-    graft.core.Caches.registerCheckpoint(e)
-    rebind(degreesOf(e).where(col("__deg") >= k)
-      .select(col("node"), col("__deg").as("degree")), edges.sparkSession)
+    Loop.holding { held =>
+      val e0 = held(undirectedEdges(edges, srcCol, dstCol))
+      // peel rounds run loop-width on a session clone ([[Loop.session]])
+      val e0i = Loop.rebind(e0, Loop.session(edges.sparkSession, e0.count()))
+      val e = held.adopt(peelTo(e0i, k))
+      Loop.rebind(degreesOf(e).where(col("__deg") >= k)
+        .select(col("node"), col("__deg").as("degree")), edges.sparkSession)
+    }
   }
 
   /** Peel the (checkpointed) edge set to its k-core fixpoint. Always
-    * returns a FRESH checkpoint the caller owns (never the input), with
-    * every intermediate round released as the next lands.
+    * returns a FRESH checkpoint (never the input, which stays the
+    * caller's), with every intermediate round released as the next
+    * lands.
     */
   private def peelTo(e0: DataFrame, k: Int): DataFrame = {
-    var e = e0
-    var n = e.count()
-    var owned = false
+    var n = e0.count()
     if (n == 0L) return e0.limit(0).localCheckpoint(true)
-    var done = false
-    try {
-      while (!done) {
-        val keep = degreesOf(e).where(col("__deg") >= k).select("node")
-        val e2 = e
-          .join(keep.withColumnRenamed("node", "__a"), Seq("__a"), "left_semi")
-          .join(keep.withColumnRenamed("node", "__b"), Seq("__b"), "left_semi")
-          .localCheckpoint(true)
-        if (owned) graft.core.Caches.releaseCheckpoint(e)
-        owned = true
-        e = e2
-        // count AFTER the swap (cheap — e2 is materialized) so a failure
-        // here leaves exactly one owned checkpoint for the catch
+    // a projection, not the leaf: the loop leaves `e0` to the caller
+    Loop.iterate(e0.select("__a", "__b"),
+      // count the fresh checkpoint (cheap — it is materialized)
+      until = (e, _) => {
         val n2 = e.count()
-        done = n2 == n || n2 == 0L
+        val done = n2 == n || n2 == 0L
         n = n2
-      }
-    } catch {
-      case t: Throwable =>
-        if (owned) graft.core.Caches.releaseCheckpoint(e)
-        throw t
+        done
+      }) { (e, _) =>
+      val keep = degreesOf(e).where(col("__deg") >= k).select("node")
+      Some(e
+        .join(keep.withColumnRenamed("node", "__a"), Seq("__a"), "left_semi")
+        .join(keep.withColumnRenamed("node", "__b"), Seq("__b"), "left_semi"))
     }
-    e
   }
 
   /** Full coreness decomposition: every node's core NUMBER (the largest
@@ -520,14 +437,13 @@ object Graphs {
       dstCol: String): DataFrame = {
     def nodesIn(e: DataFrame): DataFrame =
       e.select(explode(array(col("__a"), col("__b"))).as("node")).distinct()
-    var e = undirectedEdges(edges, srcCol, dstCol).localCheckpoint(true)
-    // peel rounds run loop-width on a session clone ([[loopSession]]);
-    // the checkpointed edges rebind for free, the result rebinds back
-    e = rebind(e, loopSession(edges.sparkSession, e.count()))
-    var acc: DataFrame = null
-    var next: DataFrame = null
-    var k = 1L
-    try {
+    Loop.holding { held =>
+      val e0 = held(undirectedEdges(edges, srcCol, dstCol))
+      // peel rounds run loop-width on a session clone ([[Loop.session]]);
+      // the checkpointed edges rebind for free, the result rebinds back
+      var e = Loop.rebind(e0, Loop.session(edges.sparkSession, e0.count()))
+      var acc: DataFrame = null
+      var k = 1L
       while (e.count() > 0L) {
         // jump k to the core's current minimum degree: every level in
         // between would peel nothing (all degrees ≥ minDeg), and on dense
@@ -537,38 +453,23 @@ object Graphs {
         val minDeg = degreesOf(e).agg(min(col("__deg")).as("m"))
           .head().getAs[Long]("m")
         k = math.max(k, minDeg)
-        next = peelTo(e, (k + 1).toInt)
+        val next = held.adopt(peelTo(e, (k + 1).toInt))
         val dropped = nodesIn(e)
           .join(nodesIn(next), Seq("node"), "left_anti")
           .withColumn("coreness", lit(k))
-        val acc2 = (if (acc == null) dropped else acc.unionByName(dropped))
-          .localCheckpoint(true)
-        if (acc != null) graft.core.Caches.releaseCheckpoint(acc)
-        acc = acc2
-        graft.core.Caches.releaseCheckpoint(e)
+        val grown = held(if (acc == null) dropped else acc.unionByName(dropped))
+        held.release(acc)
+        acc = grown
+        held.release(e)
         e = next
-        next = null
         k += 1
       }
-    } catch {
-      case t: Throwable =>
-        // release every live per-level checkpoint before rethrowing:
-        // the current core, the accumulator, and a peeled-but-unswapped
-        // next core if the failure hit between peel and swap
-        graft.core.Caches.releaseCheckpoint(e)
-        if (acc != null) graft.core.Caches.releaseCheckpoint(acc)
-        if (next != null && (next ne e)) graft.core.Caches.releaseCheckpoint(next)
-        throw t
-    }
-    graft.core.Caches.releaseCheckpoint(e)
-    if (acc == null)
-      edges.sparkSession.emptyDataFrame
-        .withColumn("node", lit(null).cast("string"))
-        .withColumn("coreness", lit(null).cast("bigint"))
-        .where(lit(false))
-    else {
-      graft.core.Caches.registerCheckpoint(acc)
-      rebind(acc, edges.sparkSession)
+      if (acc == null)
+        edges.sparkSession.emptyDataFrame
+          .withColumn("node", lit(null).cast("string"))
+          .withColumn("coreness", lit(null).cast("bigint"))
+          .where(lit(false))
+      else Loop.rebind(acc, edges.sparkSession)
     }
   }
 
@@ -601,9 +502,9 @@ object Graphs {
         .where(col("__src").isNotNull && col("__dst").isNotNull)
         .distinct())
     // half-iterations checkpoint node-sized tables per step — run them
-    // loop-width on a session clone ([[loopSession]]; the scores side is
+    // loop-width on a session clone ([[Loop.session]]; the scores side is
     // a broadcast either way, so no AQE-dependent join shape is lost)
-    val e = rebind(e0, loopSession(edges.sparkSession, e0.count()))
+    val e = Loop.rebind(e0, Loop.session(edges.sparkSession, e0.count()))
     val nodes = graft.core.Caches.pin(
       e.select(col("__src").as("node"))
         .unionByName(e.select(col("__dst").as("node"))).distinct())
@@ -624,37 +525,27 @@ object Graphs {
             (coalesce(col("__r"), lit(0L)).cast("double") / col("__t"))
               .as(outCol))
       }
-      var h = nodes.select(col("node"), lit(1.0 / n).as("h"))
-      var a: DataFrame = null
-      val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def ck(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(true); live += c; c
-      }
-      (1 to iterations).foreach { _ =>
-        // checkpoint EVERY half: each score table is read twice (the
-        // next half AND the final join / normalization total), and the
-        // totals' scalar crossJoins would otherwise re-run the whole
-        // upstream chain per consumer — measured 15 s of recompute at 2
-        // iterations without this; node-sized tables, so the
-        // materialization is cheap
-        val prevA = a
-        a = ck(half(h, "h", "__src", "__dst", "a"))
-        if (prevA != null) {
-          live -= prevA; graft.core.Caches.releaseCheckpoint(prevA)
+      Loop.holding { held =>
+        var h = nodes.select(col("node"), lit(1.0 / n).as("h"))
+        var a: DataFrame = null
+        (1 to iterations).foreach { _ =>
+          // checkpoint EVERY half: each score table is read twice (the
+          // next half AND the final join / normalization total), and the
+          // totals' scalar crossJoins would otherwise re-run the whole
+          // upstream chain per consumer — measured 15 s of recompute at 2
+          // iterations without this; node-sized tables, so the
+          // materialization is cheap
+          val prevA = a
+          a = held(half(h, "h", "__src", "__dst", "a"))
+          held.release(prevA)
+          val prevH = h
+          h = held(half(a, "a", "__dst", "__src", "h"))
+          held.release(prevH)
         }
-        val prevH = h
-        h = ck(half(a, "a", "__dst", "__src", "h"))
-        if (live.contains(prevH)) {
-          live -= prevH; graft.core.Caches.releaseCheckpoint(prevH)
-        }
+        Loop.rebind(held(h.join(a.withColumnRenamed("a", "__a"), "node")
+          .select(col("node"), round(col("h"), 6).as("hub"),
+            round(col("__a"), 6).as("authority"))), edges.sparkSession)
       }
-      val out = h.join(a.withColumnRenamed("a", "__a"), "node")
-        .select(col("node"), round(col("h"), 6).as("hub"),
-          round(col("__a"), 6).as("authority"))
-        .localCheckpoint(true)
-      live.foreach(graft.core.Caches.releaseCheckpoint(_))
-      graft.core.Caches.registerCheckpoint(out)
-      rebind(out, edges.sparkSession)
     } finally { e0.unpersist(); nodes.unpersist() }
   }
 
@@ -819,9 +710,7 @@ object Graphs {
       iterations: Int,
       damping: Double): DataFrame = {
     val nodes = nodesWithReset
-    var pr = nodes.select(col("node"), col("__init").as("pr"))
-    var prevCk: Option[DataFrame] = None
-    (1 to iterations).foreach { i =>
+    def powerStep(pr: DataFrame): DataFrame = {
       // pr·w/Σw — for the unweighted form w = 1.0, so this is exactly
       // pr/Σw (multiplying by 1.0 is an IEEE identity; the unweighted
       // oracle's pr/deg expression stays bit-for-bit)
@@ -832,58 +721,25 @@ object Graphs {
             .cast("long").as("__nano"))
         .groupBy("node")
         .agg(sum(col("__nano")).as("__in"))
-      var next = nodes.join(sums, Seq("node"), "left")
+      nodes.join(sums, Seq("node"), "left")
         .select(col("node"),
           (col("__reset") + lit(damping) *
             (coalesce(col("__in"), lit(0L)) / lit(1e9))).as("pr"))
-      // Truncate lineage every few iterations and at the end — enough to
-      // keep plan depth and analysis time flat at ANY iteration count,
-      // without paying an eager materialization job for every single
-      // iteration (a 3-iteration run is ONE executed DAG this way).
-      if (i % 4 == 0 || i == iterations) {
-        next = next.localCheckpoint(true)
-        // the new checkpoint is materialized — the previous one has no
-        // remaining reader and holds executor storage; free it now
-        prevCk.foreach(graft.core.Caches.releaseCheckpoint(_))
-        prevCk = Some(next)
-      }
-      pr = next
     }
-    // the final checkpoint is the RESULT — the caller owns its lifecycle
-    // (a collectPins scope releases it after materializing downstream)
-    graft.core.Caches.registerCheckpoint(pr)
-    pr
+    // Truncate lineage every 4 iterations and at the end — enough to
+    // keep plan depth and analysis time flat at ANY iteration count,
+    // without paying an eager materialization job for every single
+    // iteration (a 3-iteration run is ONE executed DAG this way): loop
+    // round r chains iterations 4r-3..4r lazily and is checkpointed.
+    // The last checkpoint is the RESULT, registered with Caches (a
+    // collectPins scope releases it after materializing downstream).
+    Loop.iterate(nodes.select(col("node"), col("__init").as("pr")),
+        rounds = (iterations + 3) / 4) { (pr, r) =>
+      Some((4 * r - 3 to math.min(4 * r, iterations))
+        .foldLeft(pr)((p, _) => powerStep(p)))
+    }
   }
 
-  /** Synchronous label-propagation community detection (Raghavan 2007's
-    * LPA, deterministic variant) — the community signal the rest of the
-    * graph tier lacks: connected components merge everything touching,
-    * PageRank ranks within the blob; LPA finds the dense regions (a
-    * crawl graph's topical clusters, a transaction graph's merchant
-    * neighborhoods) without a resolution parameter.
-    *
-    * Every node starts as its own label; each round every node adopts
-    * the MOST FREQUENT label among its neighbors' previous-round labels
-    * (ties → smallest label — a total order, so the fixed synchronous
-    * schedule is engine-reproducible where classic asynchronous LPA is
-    * visit-order-dependent). Fixed `iterations` rather than a
-    * convergence test: sync LPA can 2-cycle on bipartite-ish regions,
-    * and a bounded round count is the standard remedy. Neighborhoods
-    * are undirected (both directions of every edge); self-loops drop;
-    * isolated nodes do not appear (the edge-list convention of every
-    * operator here).
-    *
-    * Scale shapes per round: one edges⋈labels join (labels node-sized;
-    * AQE-skew-splittable — no per-source pinning, same discipline as
-    * [[pageRank]]'s prep), one (node, label) count aggregate with
-    * map-side partials, and a per-node argmax as min(struct(-count,
-    * label)) — an AGGREGATE, not a window, because round 1's count
-    * table holds one row per (hub, neighbor) and a window would pin a
-    * mega-hub's whole neighborhood in one task; the struct-min's
-    * partials spread it (struct order = count desc, label asc, the
-    * same winner a window tie-break would pick). Labels re-checkpoint
-    * per round so plan depth stays flat.
-    */
   /** FUSED forward+backward min-label fixpoint: one loop carries both
     * `F(u) = min{v : v →* u}` (labels flow src → dst) and
     * `B(u) = min{v : u →* v}` (dst → src), iterating until NEITHER
@@ -898,52 +754,32 @@ object Graphs {
       e: DataFrame,
       nodes: DataFrame,
       maxIters: Int,
-      what: String): DataFrame = {
-    var lab = nodes.select(col("node"),
-      col("node").as("__f"), col("node").as("__b"))
-      .localCheckpoint(true)
-    var iter = 0
-    var changed = true
-    try {
-      while (changed) {
-        iter += 1
-        if (iter > maxIters) {
-          graft.core.Caches.releaseCheckpoint(lab)
-          throw new IllegalStateException(
-            s"$what did not converge in $maxIters iterations — the " +
-              "reachability depth exceeds maxIters; raise it")
-        }
-        val candF = e
-          .join(lab.select(col("node").as("__s"), col("__f").as("__inf")),
-            "__s")
-          .groupBy(col("__d").as("node")).agg(min(col("__inf")).as("__cf"))
-        val candB = e
-          .join(lab.select(col("node").as("__d"), col("__b").as("__inb")),
-            "__d")
-          .groupBy(col("__s").as("node")).agg(min(col("__inb")).as("__cb"))
-        val merged = lab.select("node", "__f", "__b")
-          .join(candF, Seq("node"), "left")
-          .join(candB, Seq("node"), "left")
-          .select(col("node"),
-            least(col("__f"), coalesce(col("__cf"), col("__f"))).as("__f"),
-            least(col("__b"), coalesce(col("__cb"), col("__b"))).as("__b"),
-            ((col("__cf").isNotNull && col("__cf") < col("__f")) ||
-              (col("__cb").isNotNull && col("__cb") < col("__b")))
-              .as("__chg"))
-          .localCheckpoint(true)
-        // probe AFTER the swap-material exists; release the old leaf
-        graft.core.Caches.releaseCheckpoint(lab)
-        lab = merged
-        changed = lab.where(col("__chg")).limit(1).count() > 0
-      }
-    } catch {
-      case t: Throwable =>
-        graft.core.Caches.releaseCheckpoint(lab)
-        throw t
+      what: String): DataFrame =
+    Loop.iterate(
+      nodes.select(col("node"), col("node").as("__f"), col("node").as("__b"))
+        .localCheckpoint(true),
+      rounds = maxIters,
+      until = (lab, _) => lab.where(col("__chg")).limit(1).count() == 0,
+      unconverged = Some(s"$what did not converge in $maxIters iterations — " +
+        "the reachability depth exceeds maxIters; raise it")) { (lab, _) =>
+      val candF = e
+        .join(lab.select(col("node").as("__s"), col("__f").as("__inf")),
+          "__s")
+        .groupBy(col("__d").as("node")).agg(min(col("__inf")).as("__cf"))
+      val candB = e
+        .join(lab.select(col("node").as("__d"), col("__b").as("__inb")),
+          "__d")
+        .groupBy(col("__s").as("node")).agg(min(col("__inb")).as("__cb"))
+      Some(lab.select("node", "__f", "__b")
+        .join(candF, Seq("node"), "left")
+        .join(candB, Seq("node"), "left")
+        .select(col("node"),
+          least(col("__f"), coalesce(col("__cf"), col("__f"))).as("__f"),
+          least(col("__b"), coalesce(col("__cb"), col("__b"))).as("__b"),
+          ((col("__cf").isNotNull && col("__cf") < col("__f")) ||
+            (col("__cb").isNotNull && col("__cb") < col("__b")))
+            .as("__chg")))
     }
-    graft.core.Caches.registerCheckpoint(lab)
-    lab
-  }
 
   /** Strongly connected components of a DIRECTED graph — each node's
     * SCC labeled by the smallest member id (string order). The
@@ -992,18 +828,16 @@ object Graphs {
     val e0 = graft.core.Caches.pin(kHopEdges(edges, srcCol, dstCol))
     try {
       // the peel's many per-round jobs run loop-width on a session clone
-      // ([[loopSession]]); the pinned edges move across for free (shared
+      // ([[Loop.session]]); the pinned edges move across for free (shared
       // cache manager) and the result rebinds to the caller at the end
-      val iso = loopSession(edges.sparkSession, e0.count())
-      val e0i = rebind(e0, iso)
-      var active = e0i.select(col("__s").as("node"))
-        .unionByName(e0i.select(col("__d").as("node")))
-        .distinct().localCheckpoint(true)
-      var eAct: DataFrame = e0i.toDF()
-      var eActIsCheckpoint = false
-      var out: DataFrame = null
-      var phase = 0
-      try {
+      val e0i = Loop.rebind(e0, Loop.session(edges.sparkSession, e0.count()))
+      Loop.holding { held =>
+        var active = held(e0i.select(col("__s").as("node"))
+          .unionByName(e0i.select(col("__d").as("node"))).distinct())
+        // the pinned input is never held: releasing it is a no-op
+        var eAct: DataFrame = e0i.toDF()
+        var out: DataFrame = null
+        var phase = 0
         while (active.limit(1).count() > 0) {
           phase += 1
           if (phase > maxPhases) {
@@ -1012,50 +846,64 @@ object Graphs {
                 "phases — the SCC condensation is deeper than maxPhases " +
                 "(e.g. a long path of singleton SCCs); raise it")
           }
-          val fb = minLabelFixpointFB(eAct, active, maxIters,
-            s"SCC fixpoint (phase $phase)")
+          val fb = held.adopt(minLabelFixpointFB(eAct, active, maxIters,
+            s"SCC fixpoint (phase $phase)"))
           val settled = fb
             .where(col("__f") === col("__b"))
             .select(col("node"), col("__f").as("scc"))
           val grown =
-            (if (out == null) settled else out.unionByName(settled))
-              .localCheckpoint(true)
-          if (out != null) graft.core.Caches.releaseCheckpoint(out)
+            held(if (out == null) settled else out.unionByName(settled))
+          held.release(out)
           out = grown
-          val remaining = active
-            .join(settled.select("node"), Seq("node"), "left_anti")
-            .localCheckpoint(true)
-          graft.core.Caches.releaseCheckpoint(active)
+          val remaining =
+            held(active.join(settled.select("node"), Seq("node"), "left_anti"))
+          held.release(active)
           active = remaining
-          graft.core.Caches.releaseCheckpoint(fb)
-          val eNext = eAct
+          held.release(fb)
+          val eNext = held(eAct
             .join(active.select(col("node").as("__s")), "__s")
             .join(active.select(col("node").as("__d")), "__d")
-            .select("__s", "__d")
-            .localCheckpoint(true)
-          if (eActIsCheckpoint) graft.core.Caches.releaseCheckpoint(eAct)
+            .select("__s", "__d"))
+          held.release(eAct)
           eAct = eNext
-          eActIsCheckpoint = true
         }
-      } catch {
-        case t: Throwable =>
-          graft.core.Caches.releaseCheckpoint(active)
-          if (eActIsCheckpoint) graft.core.Caches.releaseCheckpoint(eAct)
-          if (out != null) graft.core.Caches.releaseCheckpoint(out)
-          throw t
-      }
-      graft.core.Caches.releaseCheckpoint(active)
-      if (eActIsCheckpoint) graft.core.Caches.releaseCheckpoint(eAct)
-      if (out == null) {
-        // no edges at all — empty result with the contract schema
-        e0.select(col("__s").as("node"), col("__d").as("scc")).limit(0)
-      } else {
-        graft.core.Caches.registerCheckpoint(out)
-        rebind(out, edges.sparkSession)
+        if (out == null) {
+          // no edges at all — empty result with the contract schema
+          e0.select(col("__s").as("node"), col("__d").as("scc")).limit(0)
+        } else Loop.rebind(out, edges.sparkSession)
       }
     } finally e0.unpersist()
   }
 
+  /** Synchronous label-propagation community detection (Raghavan 2007's
+    * LPA, deterministic variant) — the community signal the rest of the
+    * graph tier lacks: connected components merge everything touching,
+    * PageRank ranks within the blob; LPA finds the dense regions (a
+    * crawl graph's topical clusters, a transaction graph's merchant
+    * neighborhoods) without a resolution parameter.
+    *
+    * Every node starts as its own label; each round every node adopts
+    * the MOST FREQUENT label among its neighbors' previous-round labels
+    * (ties → smallest label — a total order, so the fixed synchronous
+    * schedule is engine-reproducible where classic asynchronous LPA is
+    * visit-order-dependent). Fixed `iterations` rather than a
+    * convergence test: sync LPA can 2-cycle on bipartite-ish regions,
+    * and a bounded round count is the standard remedy. Neighborhoods
+    * are undirected (both directions of every edge); self-loops drop;
+    * isolated nodes do not appear (the edge-list convention of every
+    * operator here).
+    *
+    * Scale shapes per round: one edges⋈labels join (labels node-sized;
+    * AQE-skew-splittable — no per-source pinning, same discipline as
+    * [[pageRank]]'s prep), one (node, label) count aggregate with
+    * map-side partials, and a per-node argmax as min(struct(-count,
+    * label)) — an AGGREGATE, not a window, because round 1's count
+    * table holds one row per (hub, neighbor) and a window would pin a
+    * mega-hub's whole neighborhood in one task; the struct-min's
+    * partials spread it (struct order = count desc, label asc, the
+    * same winner a window tie-break would pick). Labels re-checkpoint
+    * per round so plan depth stays flat.
+    */
   def labelPropagationCommunities(
       edges: DataFrame,
       srcCol: String,
@@ -1077,35 +925,26 @@ object Graphs {
         .select(col("e.__s").as("__s"), col("e.__d").as("__d"))
         .distinct())
     try {
-      // label rounds run loop-width on a session clone ([[loopSession]])
-      val iso = loopSession(edges.sparkSession, sym0.count())
-      val sym = rebind(sym0, iso)
-      var labels = sym.select(col("__s").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .localCheckpoint(true)
-      try {
-        (1 to iterations).foreach { _ =>
-          val counts = sym
-            .join(labels.select(col("node").as("__d"),
-              col("label").as("__nl")), "__d")
-            .groupBy(col("__s").as("node"), col("__nl").as("label"))
-            .agg(count(lit(1)).as("__c"))
-          val next = counts
-            .groupBy(col("node"))
-            .agg(min(struct((-col("__c")).as("nc"),
-              col("label").as("l"))).as("__m"))
-            .select(col("node"), col("__m.l").as("label"))
-            .localCheckpoint(true)
-          graft.core.Caches.releaseCheckpoint(labels)
-          labels = next
-        }
-      } catch {
-        case t: Throwable =>
-          graft.core.Caches.releaseCheckpoint(labels)
-          throw t
+      // label rounds run loop-width on a session clone ([[Loop.session]])
+      val sym = Loop.rebind(sym0,
+        Loop.session(edges.sparkSession, sym0.count()))
+      val labels = Loop.iterate(
+          sym.select(col("__s").as("node")).distinct()
+            .withColumn("label", col("node"))
+            .localCheckpoint(true),
+          rounds = iterations) { (labels, _) =>
+        val counts = sym
+          .join(labels.select(col("node").as("__d"),
+            col("label").as("__nl")), "__d")
+          .groupBy(col("__s").as("node"), col("__nl").as("label"))
+          .agg(count(lit(1)).as("__c"))
+        Some(counts
+          .groupBy(col("node"))
+          .agg(min(struct((-col("__c")).as("nc"),
+            col("label").as("l"))).as("__m"))
+          .select(col("node"), col("__m.l").as("label")))
       }
-      graft.core.Caches.registerCheckpoint(labels)
-      rebind(labels.select(col("node"), col("label").as("community")),
+      Loop.rebind(labels.select(col("node"), col("label").as("community")),
         edges.sparkSession)
     } finally sym0.unpersist()
   }
@@ -1232,7 +1071,7 @@ object Graphs {
       val m2 = sym0.count()
       require(m2 > 0L, "louvainCommunities: empty graph")
       // local-move phases run loop-width on a session clone
-      val sym = rebind(sym0, loopSession(edges.sparkSession, m2))
+      val sym = Loop.rebind(sym0, Loop.session(edges.sparkSession, m2))
       val m = m2 / 2
       require(m <= 700000000L,
         s"louvainCommunities: $m undirected edges — the exact 2m²-scaled " +
@@ -1241,67 +1080,58 @@ object Graphs {
       val degs = graft.core.Caches.pin(
         sym.groupBy(col("__s").as("node")).agg(count(lit(1)).as("__k")))
       try {
-        var labels = degs.select(col("node"))
-          .withColumn("__c", col("node"))
-          .localCheckpoint(true)
-        try {
-          (0 until rounds * 2).foreach { phase =>
-            val parity = phase % 2
-            val commDeg = labels
-              .join(degs, "node")
-              .groupBy(col("__c"))
-              .agg(sum(col("__k")).as("__tot"), count(lit(1)).as("__sz"))
-            val kic = sym
-              .join(labels.select(col("node").as("__d"),
-                col("__c").as("__nc")), "__d")
-              .groupBy(col("__s").as("node"), col("__nc"))
-              .agg(count(lit(1)).as("__kic"))
-            val cur = labels
-              .join(degs, "node")
-              .join(commDeg.select(col("__c"), col("__tot").as("__tota"),
-                col("__sz").as("__sza")), "__c")
-              .where(pmod(TextAnalysis.hash60(col("node")), lit(2L))
-                === parity)
-              .select(col("node"), col("__c").as("__ca"), col("__k"),
-                (col("__tota") - col("__k")).as("__dega"), col("__sza"))
-            val withA = cur.join(
-              kic.select(col("node"), col("__nc").as("__ca"),
-                col("__kic").as("__kia")),
-              Seq("node", "__ca"), "left")
-            val cand = withA
-              .join(kic, "node")
-              .where(col("__nc") =!= col("__ca"))
-              .join(commDeg.select(col("__c").as("__nc"),
-                col("__tot").as("__degb"), col("__sz").as("__szb")),
-                "__nc")
-              // Grappolo minimum-label rule: singleton -> singleton only
-              // toward a smaller label (breaks same-parity swap cycles)
-              .where(!(col("__sza") === 1L && col("__szb") === 1L &&
-                col("__nc") > col("__ca")))
-              .select(col("node"), col("__nc"),
-                (lit(2L * m) * (col("__kic") -
-                  coalesce(col("__kia"), lit(0L))) -
-                  col("__k") * (col("__degb") - col("__dega")))
-                  .as("__gain"))
-            val moves = cand.where(col("__gain") > 0L)
-              .groupBy(col("node"))
-              .agg(min(struct((-col("__gain")).as("g"),
-                col("__nc").as("c"))).as("__m"))
-              .select(col("node"), col("__m.c").as("__newc"))
-            val next = labels.join(moves, Seq("node"), "left")
-              .select(col("node"),
-                coalesce(col("__newc"), col("__c")).as("__c"))
-              .localCheckpoint(true)
-            graft.core.Caches.releaseCheckpoint(labels)
-            labels = next
-          }
-        } catch {
-          case t: Throwable =>
-            graft.core.Caches.releaseCheckpoint(labels)
-            throw t
+        val labels = Loop.iterate(
+            degs.select(col("node"))
+              .withColumn("__c", col("node"))
+              .localCheckpoint(true),
+            rounds = rounds * 2) { (labels, r) =>
+          val parity = (r - 1) % 2
+          val commDeg = labels
+            .join(degs, "node")
+            .groupBy(col("__c"))
+            .agg(sum(col("__k")).as("__tot"), count(lit(1)).as("__sz"))
+          val kic = sym
+            .join(labels.select(col("node").as("__d"),
+              col("__c").as("__nc")), "__d")
+            .groupBy(col("__s").as("node"), col("__nc"))
+            .agg(count(lit(1)).as("__kic"))
+          val cur = labels
+            .join(degs, "node")
+            .join(commDeg.select(col("__c"), col("__tot").as("__tota"),
+              col("__sz").as("__sza")), "__c")
+            .where(pmod(TextAnalysis.hash60(col("node")), lit(2L))
+              === parity)
+            .select(col("node"), col("__c").as("__ca"), col("__k"),
+              (col("__tota") - col("__k")).as("__dega"), col("__sza"))
+          val withA = cur.join(
+            kic.select(col("node"), col("__nc").as("__ca"),
+              col("__kic").as("__kia")),
+            Seq("node", "__ca"), "left")
+          val cand = withA
+            .join(kic, "node")
+            .where(col("__nc") =!= col("__ca"))
+            .join(commDeg.select(col("__c").as("__nc"),
+              col("__tot").as("__degb"), col("__sz").as("__szb")),
+              "__nc")
+            // Grappolo minimum-label rule: singleton -> singleton only
+            // toward a smaller label (breaks same-parity swap cycles)
+            .where(!(col("__sza") === 1L && col("__szb") === 1L &&
+              col("__nc") > col("__ca")))
+            .select(col("node"), col("__nc"),
+              (lit(2L * m) * (col("__kic") -
+                coalesce(col("__kia"), lit(0L))) -
+                col("__k") * (col("__degb") - col("__dega")))
+                .as("__gain"))
+          val moves = cand.where(col("__gain") > 0L)
+            .groupBy(col("node"))
+            .agg(min(struct((-col("__gain")).as("g"),
+              col("__nc").as("c"))).as("__m"))
+            .select(col("node"), col("__m.c").as("__newc"))
+          Some(labels.join(moves, Seq("node"), "left")
+            .select(col("node"),
+              coalesce(col("__newc"), col("__c")).as("__c")))
         }
-        graft.core.Caches.registerCheckpoint(labels)
-        rebind(labels.select(col("node"), col("__c").as("community")),
+        Loop.rebind(labels.select(col("node"), col("__c").as("community")),
           edges.sparkSession)
       } finally degs.unpersist()
     } finally sym0.unpersist()
@@ -1539,40 +1369,30 @@ object Graphs {
       require(nSeeds <= 64,
         s"harmonicCentrality: $nSeeds seeds — the per-seed BFS state is " +
           "|seeds| x reachable; sample seeds to <= 64 upstream")
-      var visited = seedSet
-        .withColumn("node", col("seed"))
-        .withColumn("hops", lit(0L))
-        .localCheckpoint(true)
-      var h = 1
-      var exhausted = false
-      try {
-        while (h <= maxHops && !exhausted) {
-          val frontier = visited.where(col("hops") === (h - 1))
-          val next = e
-            .join(frontier.select(col("seed"), col("node").as("__s")), "__s")
-            .select(col("seed"), col("__d").as("node")).distinct()
-            .join(visited.select("seed", "node"), Seq("seed", "node"),
-              "left_anti")
-            .withColumn("hops", lit(h.toLong))
-          val grown = visited.unionByName(next).localCheckpoint(true)
-          graft.core.Caches.releaseCheckpoint(visited)
-          visited = grown
-          exhausted = visited.where(col("hops") === h).limit(1).count() == 0
-          h += 1
-        }
-        val out = visited.where(col("hops") > 0L)
+      Loop.holding { held =>
+        val visited = held.adopt(Loop.iterate(
+          seedSet
+            .withColumn("node", col("seed"))
+            .withColumn("hops", lit(0L))
+            .localCheckpoint(true),
+          rounds = maxHops,
+          until = (visited, h) =>
+            visited.where(col("hops") === h).limit(1).count() == 0) {
+          (visited, h) =>
+            val frontier = visited.where(col("hops") === (h - 1))
+            val next = e
+              .join(frontier.select(col("seed"), col("node").as("__s")), "__s")
+              .select(col("seed"), col("__d").as("node")).distinct()
+              .join(visited.select("seed", "node"), Seq("seed", "node"),
+                "left_anti")
+              .withColumn("hops", lit(h.toLong))
+            Some(visited.unionByName(next))
+        })
+        held(visited.where(col("hops") > 0L)
           .groupBy(col("node"))
           .agg(count(lit(1)).as("n_sources"),
             sum(round(lit(1000000.0) / col("hops")).cast("long"))
-              .as("harmonic_micros"))
-          .localCheckpoint(true)
-        graft.core.Caches.releaseCheckpoint(visited)
-        graft.core.Caches.registerCheckpoint(out)
-        out
-      } catch {
-        case t: Throwable =>
-          graft.core.Caches.releaseCheckpoint(visited)
-          throw t
+              .as("harmonic_micros")))
       }
     } finally e.unpersist()
   }
@@ -1621,110 +1441,86 @@ object Graphs {
     try {
       val seedSet = seeds.select(col(seedCol).cast("string").as("seed"))
         .where(col("seed").isNotNull).distinct().localCheckpoint(true)
-      graft.core.Caches.registerCheckpoint(seedSet)
-      try {
+      val visited0 = try {
         val n = seedSet.count()
         require(n > 0, "sampledBetweenness: no seeds")
         require(n <= 64,
           s"sampledBetweenness: $n seeds — the per-seed state is " +
             "|seeds| x reachable; sample seeds to <= 64 upstream")
-      } catch {
-        case t: Throwable =>
-          graft.core.Caches.releaseCheckpoint(seedSet)
-          throw t
-      }
-      var visited = seedSet
-        .withColumn("node", col("seed"))
-        .withColumn("dist", lit(0L))
-        .withColumn("sigma", lit(1.0))
-        .localCheckpoint(true)
-      graft.core.Caches.releaseCheckpoint(seedSet)
+        seedSet
+          .withColumn("node", col("seed"))
+          .withColumn("dist", lit(0L))
+          .withColumn("sigma", lit(1.0))
+          .localCheckpoint(true)
+      } finally graft.core.Caches.releaseCheckpoint(seedSet)
       var maxDist = 0
-      try {
-        // ---- forward: σ-accumulating BFS ----
-        var h = 1
-        var exhausted = false
-        while (h <= maxHops && !exhausted) {
-          val frontier = visited.where(col("dist") === (h - 1))
-          val next = e
-            .join(frontier.select(col("seed"), col("node").as("__s"),
-              col("sigma")), "__s")
-            .groupBy(col("seed"), col("__d").as("node"))
-            .agg(sum(col("sigma")).as("sigma"))
-            .join(visited.select("seed", "node"), Seq("seed", "node"),
-              "left_anti")
-            .withColumn("dist", lit(h.toLong))
-            .select("seed", "node", "dist", "sigma")
-          val grown = visited.unionByName(next).localCheckpoint(true)
-          graft.core.Caches.releaseCheckpoint(visited)
-          visited = grown
+      // ---- forward: σ-accumulating BFS ----
+      val visited = Loop.iterate(visited0, rounds = maxHops,
+        until = (visited, h) => {
           val mx = visited.where(col("dist") === h)
             .agg(max(col("sigma")).as("m")).head().getAs[Any]("m")
-          exhausted = mx == null
-          if (!exhausted) {
+          if (mx != null) {
             require(mx.asInstanceOf[Double] < 9007199254740992.0,
               s"sampledBetweenness: σ exceeded 2^53 at hop $h — path " +
                 "counts are no longer exactly representable; lower " +
                 "maxHops or sparsify upstream")
             maxDist = h
           }
-          h += 1
-        }
-        // ---- backward: per-level dependency accumulation ----
-        val deltas = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        try {
-          var lvl = maxDist
-          while (lvl >= 1) {
-            // δ of the level being drained: complete by induction
-            // (contributions only flow from deeper levels)
-            val dAtLvl = deltas.lastOption match {
-              case Some(d) => d.where(col("dist") === lvl)
-              case None => visited.limit(0)
-                .select(col("seed"), col("node"), col("dist"),
-                  lit(0L).as("delta_micros"))
-            }
-            val wNodes = visited.where(col("dist") === lvl)
-              .join(dAtLvl.select(col("seed"), col("node"),
-                col("delta_micros")), Seq("seed", "node"), "left")
-              .select(col("seed"), col("node").as("__d"),
-                col("sigma").as("__sw"),
-                coalesce(col("delta_micros"), lit(0L)).as("__dw"))
-            val contrib = e
-              .join(wNodes, "__d")
-              .join(visited.where(col("dist") === (lvl - 1))
-                .select(col("seed"), col("node").as("__s"),
-                  col("sigma").as("__su"), col("dist")), Seq("seed", "__s"))
-              .select(col("seed"), col("__s").as("node"), col("dist"),
-                round((col("__su") / col("__sw")) *
-                  (lit(1000000.0) + col("__dw"))).cast("long").as("__c"))
-              .groupBy(col("seed"), col("node"), col("dist"))
-              .agg(sum(col("__c")).as("delta_micros"))
-            val merged = (deltas.lastOption match {
-              case Some(d) => d.unionByName(contrib)
-              case None => contrib
-            }).localCheckpoint(true)
-            deltas += merged
-            if (deltas.length > 1)
-              graft.core.Caches.releaseCheckpoint(deltas(deltas.length - 2))
-            lvl -= 1
-          }
-          val deltaAll = deltas.lastOption.getOrElse(
-            visited.limit(0).select(col("seed"), col("node"), col("dist"),
-              lit(0L).as("delta_micros")))
-          val out = visited.where(col("dist") > 0L)
-            .join(deltaAll.select(col("seed"), col("node"),
+          mx == null
+        }) { (visited, h) =>
+        val frontier = visited.where(col("dist") === (h - 1))
+        Some(visited.unionByName(e
+          .join(frontier.select(col("seed"), col("node").as("__s"),
+            col("sigma")), "__s")
+          .groupBy(col("seed"), col("__d").as("node"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .join(visited.select("seed", "node"), Seq("seed", "node"),
+            "left_anti")
+          .withColumn("dist", lit(h.toLong))
+          .select("seed", "node", "dist", "sigma")))
+      }
+      // ---- backward: per-level dependency accumulation ----
+      Loop.holding { held =>
+        held.adopt(visited)
+        val noDelta = visited.limit(0).select(col("seed"), col("node"),
+          col("dist"), lit(0L).as("delta_micros"))
+        var delta: DataFrame = null // δ of every level drained so far
+        var lvl = maxDist
+        while (lvl >= 1) {
+          // δ of the level being drained: complete by induction
+          // (contributions only flow from deeper levels)
+          val dAtLvl =
+            if (delta == null) noDelta else delta.where(col("dist") === lvl)
+          val wNodes = visited.where(col("dist") === lvl)
+            .join(dAtLvl.select(col("seed"), col("node"),
               col("delta_micros")), Seq("seed", "node"), "left")
-            .groupBy(col("node"))
-            .agg(count(lit(1)).as("n_seeds"),
-              sum(coalesce(col("delta_micros"), lit(0L)))
-                .as("betweenness_micros"))
-            .localCheckpoint(true)
-          graft.core.Caches.registerCheckpoint(out)
-          out
-        } finally {
-          deltas.lastOption.foreach(d => graft.core.Caches.releaseCheckpoint(d))
+            .select(col("seed"), col("node").as("__d"),
+              col("sigma").as("__sw"),
+              coalesce(col("delta_micros"), lit(0L)).as("__dw"))
+          val contrib = e
+            .join(wNodes, "__d")
+            .join(visited.where(col("dist") === (lvl - 1))
+              .select(col("seed"), col("node").as("__s"),
+                col("sigma").as("__su"), col("dist")), Seq("seed", "__s"))
+            .select(col("seed"), col("__s").as("node"), col("dist"),
+              round((col("__su") / col("__sw")) *
+                (lit(1000000.0) + col("__dw"))).cast("long").as("__c"))
+            .groupBy(col("seed"), col("node"), col("dist"))
+            .agg(sum(col("__c")).as("delta_micros"))
+          val merged =
+            held(if (delta == null) contrib else delta.unionByName(contrib))
+          held.release(delta)
+          delta = merged
+          lvl -= 1
         }
-      } finally graft.core.Caches.releaseCheckpoint(visited)
+        held(visited.where(col("dist") > 0L)
+          .join((if (delta == null) noDelta else delta).select(col("seed"),
+            col("node"), col("delta_micros")), Seq("seed", "node"), "left")
+          .groupBy(col("node"))
+          .agg(count(lit(1)).as("n_seeds"),
+            sum(coalesce(col("delta_micros"), lit(0L)))
+              .as("betweenness_micros")))
+      }
     } finally e.unpersist()
   }
 }

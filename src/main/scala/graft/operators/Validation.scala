@@ -1183,13 +1183,16 @@ object Validation {
           g.join(o, cond).drop("__rp_pid_o")
             .drop(keyCols.map("__rp_o_" + _): _*)
         }
-      withOff.withColumn("__rp_run", coalesce(
+      val out = withOff.withColumn("__rp_run", coalesce(
           sum(col(sumCol)).over(w.partitionBy(col("__rp_pid") +: keys: _*)
             .orderBy(col(orderCol)).rowsBetween(Long.MinValue, -1)),
           lit(0L)))
         .withColumn(outCol, col("__rp_run") + col("__rp_off"))
         .drop("__rp_pid", "__rp_run", "__rp_off")
         .localCheckpoint(true)
+      // the caller's result reads it: a collectPins scope frees it
+      graft.core.Caches.registerCheckpoint(out)
+      out
     } finally g.unpersist()
   }
 

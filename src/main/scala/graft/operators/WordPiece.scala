@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Loop
+
 /** WordPiece tokenizer — the third member of the tokenizer tier next to
   * [[Bpe]] (frequency merges) and [[Unigram]] (likelihood pruning): the
   * BERT-family subword model (Schuster & Nakajima 2012; Devlin et al.
@@ -113,10 +115,10 @@ object WordPiece {
     require(batchSize >= 1 && batchSize <= 256,
       s"batchSize must be in [1, 256], got $batchSize")
     val spark = docs.sparkSession
-    var wt = wordTypes(docs, textCol, lowercase).localCheckpoint(true)
-    try {
+    Loop.holding { held =>
+      val wt0 = held(wordTypes(docs, textCol, lowercase))
       // the alphabet is driver-bounded by the corpus's distinct chars ×2
-      val alphabet = wt.select(explode(col("__syms")).as("__s"))
+      val alphabet = wt0.select(explode(col("__syms")).as("__s"))
         .distinct().collect().map(_.getString(0)).sorted
       require(alphabet.nonEmpty,
         "WordPiece.train: corpus has no tokens — nothing to train on")
@@ -133,45 +135,42 @@ object WordPiece {
       pieces += UnkToken
       alphabet.foreach(pieces += _)
       var accepted = 0
-      var done = budget <= 0
-      while (!done) {
-        val want = math.min(batchSize, budget - accepted)
-        val topN = want * 4 + 8
-        val cands = scoredPairs(wt, minPairCount)
-          .orderBy(col("__score").desc, col("__l").asc, col("__r").asc)
-          .limit(topN).collect()
-          .map(r => (r.getAs[String]("__l"), r.getAs[String]("__r")))
-        if (cands.isEmpty) done = true
+      held.adopt(Loop.iterate(wt0) { (wt, _) =>
+        if (accepted >= budget) None
         else {
-          // compatible batching: accept symbol-disjoint candidates in
-          // score order, skip sharing ones (the exact=false contract)
-          val used = scala.collection.mutable.Set.empty[String]
-          val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-          cands.iterator.foreach { case (l, r) =>
-            if (batch.size < want && !used.contains(l) && !used.contains(r)) {
-              batch += ((l, r)); used += l; used += r
+          val want = math.min(batchSize, budget - accepted)
+          val topN = want * 4 + 8
+          val cands = scoredPairs(wt, minPairCount)
+            .orderBy(col("__score").desc, col("__l").asc, col("__r").asc)
+            .limit(topN).collect()
+            .map(r => (r.getAs[String]("__l"), r.getAs[String]("__r")))
+          if (cands.isEmpty) None
+          else {
+            // compatible batching: accept symbol-disjoint candidates in
+            // score order, skip sharing ones (the exact=false contract)
+            val used = scala.collection.mutable.Set.empty[String]
+            val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+            cands.iterator.foreach { case (l, r) =>
+              if (batch.size < want && !used.contains(l) && !used.contains(r)) {
+                batch += ((l, r)); used += l; used += r
+              }
             }
+            // non-empty by construction: the top candidate always fits
+            batch.foreach { case (l, r) =>
+              pieces += (if (r.startsWith(ContinuationPrefix))
+                l + r.substring(ContinuationPrefix.length) else l + r)
+            }
+            accepted += batch.size
+            Some(wt.withColumn("__syms", graft.functions.BpeApplyMerges(
+              col("__syms"), batch.toSeq, ContinuationPrefix)))
           }
-          // non-empty by construction: the top candidate always fits
-          batch.foreach { case (l, r) =>
-            pieces += (if (r.startsWith(ContinuationPrefix))
-              l + r.substring(ContinuationPrefix.length) else l + r)
-          }
-          accepted += batch.size
-          val next = wt
-            .withColumn("__syms", graft.functions.BpeApplyMerges(
-              col("__syms"), batch.toSeq, ContinuationPrefix))
-            .localCheckpoint(true)
-          graft.core.Caches.releaseCheckpoint(wt)
-          wt = next
-          if (accepted >= budget) done = true
         }
-      }
+      })
       // vocabSize caps merge products; [UNK] + the alphabet are never
       // evicted (the Unigram chars-floor discipline — coverage first)
       import spark.implicits._
       pieces.iterator.zipWithIndex.toSeq.toDF("piece", "token_id")
-    } finally graft.core.Caches.releaseCheckpoint(wt)
+    }
   }
 
   /** Encode a corpus under a trained vocabulary: per document, greedy

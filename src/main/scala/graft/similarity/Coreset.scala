@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Loop
 import graft.functions.VectorFunctions
 
 /** Diverse-subset selection by greedy k-center (Gonzalez 1985, the
@@ -23,7 +24,7 @@ import graft.functions.VectorFunctions
   * center, both codegen'd dot products against a broadcast-literal
   * center) plus one TakeOrdered-style 1-row argmax; the running
   * min-distance column is checkpoint-rotated with release-on-throw
-  * ([[graft.operators.Graphs]]' loop discipline). `k` is LOUDLY
+  * ([[graft.core.Loop.iterate]]). `k` is LOUDLY
   * bounded — the driver holds k centers and the plan grows by one
   * column op per round, not per row.
   */
@@ -66,32 +67,21 @@ object Coreset {
     val seedVec = seedRow.head.getSeq[Double](1).toArray
     val picked = scala.collection.mutable.ArrayBuffer(
       (0, seedId, 0.0))
-    var cur = base.select(col("__id"), col("__v"),
-      distTo(seedVec).as("__d")).localCheckpoint(true)
-    try {
-      var r = 1
-      while (r < k) {
-        val far = cur.orderBy(col("__d").desc, col("__id")).limit(1)
-          .select(col("__id"), col("__v"), col("__d")).head(1)
-        // fewer distinct points than k: stop early rather than repeat
-        if (far.isEmpty || far.head.getDouble(2) == 0.0) { r = k }
-        else {
-          val id = far.head.getString(0)
-          val vec = far.head.getSeq[Double](1).toArray
-          picked += ((r, id, far.head.getDouble(2)))
-          val next = cur.select(col("__id"), col("__v"),
-            least(col("__d"), distTo(vec)).as("__d")).localCheckpoint(true)
-          graft.core.Caches.releaseCheckpoint(cur)
-          cur = next
-          r += 1
-        }
+    // the last state only feeds `picked`: release it on return
+    graft.core.Caches.releaseCheckpoint(Loop.iterate(
+      base.select(col("__id"), col("__v"), distTo(seedVec).as("__d"))
+        .localCheckpoint(true), rounds = k - 1) { (cur, r) =>
+      val far = cur.orderBy(col("__d").desc, col("__id")).limit(1)
+        .select(col("__id"), col("__v"), col("__d")).head(1)
+      // fewer distinct points than k: stop early rather than repeat
+      if (far.isEmpty || far.head.getDouble(2) == 0.0) None
+      else {
+        picked += ((r, far.head.getString(0), far.head.getDouble(2)))
+        val vec = far.head.getSeq[Double](1).toArray
+        Some(cur.select(col("__id"), col("__v"),
+          least(col("__d"), distTo(vec)).as("__d")))
       }
-    } catch {
-      case t: Throwable =>
-        graft.core.Caches.releaseCheckpoint(cur)
-        throw t
-    }
-    graft.core.Caches.releaseCheckpoint(cur)
+    })
     picked.toSeq.toDF("center_rank", idCol, "dist")
   }
 }

@@ -1,0 +1,57 @@
+package graft.core
+
+import graft.SparkTestBase
+
+/** Lifecycle contract of [[Loop]]: a throw anywhere in a loop releases
+  * every checkpoint it holds, and a returned result keeps exactly the
+  * checkpoints it reads — registered with the caller's pin scope.
+  */
+class LoopSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private def pinnedNow: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("a step that throws in round 3 leaves nothing persisted") {
+    val before = pinnedNow
+    val ex = intercept[IllegalStateException] {
+      Loop.iterate(spark.range(10).toDF("x").localCheckpoint(true)) { (s, r) =>
+        if (r == 3) throw new IllegalStateException(s"boom in round $r")
+        Some(s.select(($"x" + 1).as("x")))
+      }
+    }
+    assert(ex.getMessage == "boom in round 3")
+    assert((pinnedNow -- before).isEmpty,
+      "the round-2 state must be released when round 3 throws")
+  }
+
+  test("an exhausted round budget throws `unconverged` and leaves nothing persisted") {
+    val before = pinnedNow
+    var probes = 0
+    val ex = intercept[IllegalStateException] {
+      Loop.iterate(spark.range(4).toDF("x").localCheckpoint(true),
+        rounds = 3, until = (_, _) => { probes += 1; false },
+        unconverged = Some("no fixpoint in 3 rounds")) { (s, _) =>
+        Some(s.select(($"x" * 2).as("x")))
+      }
+    }
+    assert(ex.getMessage == "no fixpoint in 3 rounds" && probes == 3)
+    assert((pinnedNow -- before).isEmpty)
+  }
+
+  test("on return the checkpoints the result reads stay pinned in the caller's scope; the rest are released") {
+    val before = pinnedNow
+    val (out, pins) = Caches.collectPins {
+      Loop.holding { held =>
+        val a = held(spark.range(5).toDF("x"))
+        val b = held(a.select(($"x" * 2).as("y")))
+        held(spark.range(3).toDF("z")) // the result never reads this one
+        a.join(b, $"x" === $"y")
+      }
+    }
+    assert(out.count() == 3L)
+    assert((pinnedNow -- before).size == 2, "a and b stay pinned for the result")
+    pins.release()
+    assert((pinnedNow -- before).isEmpty)
+  }
+}

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -465,6 +466,40 @@ class GraphsSpec extends SparkTestBase {
     }
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "SCC must not leak pins/checkpoints")
+  }
+
+  test("checkpoint-rotating operators leak nothing on success or on a loud failure") {
+    val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
+      ("e", "c")).toDF("src", "dst")
+    val empty = e.where($"src" === "zz")
+    // fails the first job that evaluates an edge
+    val poisoned = e.withColumn("dst",
+      when($"src" === "d", raise_error(lit("poisoned edge")))
+        .otherwise($"dst"))
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // (operator, success run, loud-failure run)
+    val cases = Seq[(String, () => DataFrame, () => DataFrame)](
+      ("pageRank", () => Graphs.pageRank(e, "src", "dst", iterations = 5),
+        () => Graphs.pageRank(empty, "src", "dst")),
+      ("kCore", () => Graphs.kCore(e, "src", "dst", 2),
+        () => Graphs.kCore(poisoned, "src", "dst", 2)),
+      ("coreness", () => Graphs.coreness(e, "src", "dst"),
+        () => Graphs.coreness(poisoned, "src", "dst")),
+      ("labelPropagationCommunities",
+        () => Graphs.labelPropagationCommunities(e, "src", "dst"),
+        () => Graphs.labelPropagationCommunities(poisoned, "src", "dst")),
+      ("louvainCommunities",
+        () => Graphs.louvainCommunities(e, "src", "dst"),
+        () => Graphs.louvainCommunities(empty, "src", "dst")))
+    cases.foreach { case (name, ok, loud) =>
+      val before = pinned
+      val (out, pins) = graft.core.Caches.collectPins(ok())
+      assert(out.count() > 0L, s"$name: empty result")
+      pins.release()
+      assert((pinned -- before).isEmpty, s"$name leaked on success")
+      intercept[Exception](loud())
+      assert((pinned -- before).isEmpty, s"$name leaked on a loud failure")
+    }
   }
 
   test("kHopEdges is hub-skew-safe: pair-keyed hash-aggregate dedup, no src-only exchange, exact on a planted mega-hub") {

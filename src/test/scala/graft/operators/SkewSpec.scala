@@ -65,11 +65,16 @@ class SkewSpec extends SparkTestBase {
   test("connectedComponents throws when maxIter is hit unconverged") {
     // an 8-node path needs ~4 rounds of min-label propagation; cap at 2
     val path = (1L until 8L).map(i => (i, i + 1)).toDF("a", "b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val ex = intercept[IllegalStateException] {
       Dedup.connectedComponents(path, "a", "b", maxIter = 2,
         algorithm = "labelprop")
     }
     assert(ex.getMessage.contains("did not converge"))
+    // the loud path releases the loop's live checkpoints: the round
+    // state and the co-partitioned edges
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+      "an unconverged labelprop run must not leave checkpoints persisted")
     // same graph with enough rounds still collapses to one component
     val ok = Dedup.connectedComponents(path, "a", "b", maxIter = 10,
       algorithm = "labelprop")

@@ -741,6 +741,18 @@ class ValidationSpec extends SparkTestBase {
       Seq(("A", Option.empty[Double])).toDF("g", "v"), Seq("g"), "v"))
   }
 
+  test("groupedQuantiles under collectPins: pins.release() frees its rank checkpoint") {
+    val d = Seq(("A", 1.0), ("A", 3.0), ("B", 2.0)).toDF("g", "v")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (out, pins) = graft.core.Caches.collectPins {
+      Validation.groupedQuantiles(d, Seq("g"), "v", Seq(0.5, 1.0))
+    }
+    assert(out.count() == 4L) // materialize before releasing
+    pins.release()
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+      "keyedRangePrefix's checkpoint must belong to the pin scope")
+  }
+
   test("bhAdjust: textbook step-up q-values, ties at largest index, partition invariance, loud guards") {
     import spark.implicits._
     // classic worked example (m = 5, α = 0.05): candidate terms
