@@ -36,15 +36,46 @@ object Loop {
     * round and buys nothing once the width is right-sized. Conf overrides
     * live on the CLONE only — concurrent queries on the caller's session
     * never observe them — and results go back through [[rebind]].
+    *
+    * The clone is REUSED, not rebuilt per call: one clone per caller
+    * session (by identity), loop width and caller runtime conf
+    * (`spark.conf.getAll`), so a changed caller conf gets a fresh clone.
+    * Spark keys its generated-code cache on (task class loader, source),
+    * and every session runs its tasks under its own class loader — a
+    * fresh clone per call recompiles every executor-side class its plans
+    * touch, on every call. The clones live in a `MaxClones`-entry LRU,
+    * so discarded caller sessions are not pinned for long. A clone's conf
+    * is set once, before it is published, and never mutated afterwards,
+    * which is what lets concurrent operator calls share it. It sees the
+    * caller's temp views and function registry as they were at clone
+    * time; no loop resolves a view or UDF by name (every plan on it is a
+    * [[rebind]] of caller-built frames), so that snapshot is never read.
     */
   def session(spark: SparkSession, rows: Long): SparkSession = {
     val defaultParts = spark.sessionState.conf.numShufflePartitions
     val parts = math.max(1,
       math.min(defaultParts, math.ceil(rows / 250e3).toInt))
-    val iso = GraftSqlBridge.cloneSession(spark)
-    iso.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    iso.conf.set("spark.sql.adaptive.enabled", "false")
-    iso
+    // SparkSession keeps reference equality: the key holds the caller by identity
+    val key = (spark, parts, spark.conf.getAll)
+    clones.synchronized {
+      Option(clones.get(key)).getOrElse {
+        val iso = GraftSqlBridge.cloneSession(spark)
+        iso.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        iso.conf.set("spark.sql.adaptive.enabled", "false")
+        clones.put(key, iso)
+        iso
+      }
+    }
+  }
+
+  /** How many loop sessions [[session]] keeps: a few callers × widths. */
+  private val MaxClones = 8
+
+  private type CloneKey = (SparkSession, Int, Map[String, String])
+
+  private val clones = new java.util.LinkedHashMap[CloneKey, SparkSession](16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[CloneKey, SparkSession]): Boolean = size > MaxClones
   }
 
   /** `df`'s plan on `spark` (same SparkContext): checkpointed frames move

@@ -26,6 +26,15 @@ object Sessions {
 
   /** Build (or get) a SparkSession with graft defaults applied.
     *
+    * Generated code lives as long as the application: Spark's codegen
+    * cache (`spark.sql.codegen.cache.maxEntries`, a static conf) defaults
+    * to a 100-entry LRU, but one perfbench pass already touches about 320
+    * generated classes on `graph_loops` and about 170 on
+    * `corpus_curation` (driver-side and task-side copies are separate
+    * entries), so at 100 a pass evicts its own classes before their next
+    * use. The default here is 1000; together with the reused loop
+    * sessions of [[Loop.session]] a repeated pass compiles nothing.
+    *
     * @param appName      Spark application name.
     * @param master       optional master override; defaults to `local[*]`
     *                     when running outside a managed environment.
@@ -57,7 +66,8 @@ object Sessions {
       "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.session.timeZone" -> "UTC"
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.codegen.cache.maxEntries" -> "1000"
     ) ++ localOnly
     (defaults ++ extraConfigs).foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()

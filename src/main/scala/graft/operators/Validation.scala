@@ -1124,11 +1124,14 @@ object Validation {
       val local = min(col(minCol)).over(
         w.partitionBy(col("__sm_pid")).orderBy(col(orderCol).desc)
           .rowsBetween(Long.MinValue, 0))
-      g.join(broadcast(offsets), Seq("__sm_pid"))
+      val out = g.join(broadcast(offsets), Seq("__sm_pid"))
         .withColumn(outCol,
           least(local, coalesce(col("__sm_off"), lit(Long.MaxValue))))
         .drop("__sm_pid", "__sm_off")
         .localCheckpoint(true)
+      // the caller's result reads it: a collectPins scope frees it
+      graft.core.Caches.registerCheckpoint(out)
+      out
     } finally g.unpersist()
   }
 

@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkTestBase
+import org.apache.spark.sql.SparkSession
 
 /** Lifecycle contract of [[Loop]]: a throw anywhere in a loop releases
   * every checkpoint it holds, and a returned result keeps exactly the
@@ -53,5 +54,35 @@ class LoopSpec extends SparkTestBase {
     assert((pinnedNow -- before).size == 2, "a and b stay pinned for the result")
     pins.release()
     assert((pinnedNow -- before).isEmpty)
+  }
+
+  test("Loop.session reuses one clone per caller session, loop width and caller conf") {
+    // width = ceil(rows / 250k) capped at the caller's 4 partitions:
+    // 10 and 20 rows run 1 wide, 600k rows 3 wide
+    val rows: Seq[(String, SparkSession => Boolean)] = Seq(
+      "the same caller, width and conf get the same clone" -> { c =>
+        Loop.session(c, 10L) eq Loop.session(c, 20L)
+      },
+      "a different width gets a different clone" -> { c =>
+        Loop.session(c, 10L) ne Loop.session(c, 600000L)
+      },
+      "a changed caller conf gets a different clone" -> { c =>
+        val before = Loop.session(c, 10L)
+        c.conf.set("spark.sql.caseSensitive", "true")
+        before ne Loop.session(c, 10L)
+      },
+      "a conf set on a clone never shows on the caller" -> { c =>
+        val iso = Loop.session(c, 600000L)
+        iso.conf.get("spark.sql.shuffle.partitions") == "3" &&
+          iso.conf.get("spark.sql.adaptive.enabled") == "false" &&
+          c.conf.get("spark.sql.shuffle.partitions") == "4" &&
+          c.conf.get("spark.sql.adaptive.enabled") == "true"
+      })
+    for ((row, holds) <- rows) {
+      val caller = spark.newSession()
+      caller.conf.set("spark.sql.shuffle.partitions", "4")
+      caller.conf.set("spark.sql.adaptive.enabled", "true")
+      assert(holds(caller), row)
+    }
   }
 }

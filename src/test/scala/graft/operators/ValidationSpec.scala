@@ -753,6 +753,18 @@ class ValidationSpec extends SparkTestBase {
       "keyedRangePrefix's checkpoint must belong to the pin scope")
   }
 
+  test("bhAdjust under collectPins: pins.release() frees its step-up checkpoint") {
+    val ps = Seq(0.005, 0.011, 0.02, 0.04, 0.13).toDF("p")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (out, pins) = graft.core.Caches.collectPins {
+      Validation.bhAdjust(ps, "p")
+    }
+    assert(out.count() == 5L) // materialize before releasing
+    pins.release()
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+      "rangeSuffixMin's checkpoint must belong to the pin scope")
+  }
+
   test("bhAdjust: textbook step-up q-values, ties at largest index, partition invariance, loud guards") {
     import spark.implicits._
     // classic worked example (m = 5, α = 0.05): candidate terms
