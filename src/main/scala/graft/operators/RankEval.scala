@@ -159,21 +159,8 @@ object RankEval {
       groupCols: Seq[String]): DataFrame = {
     require(groupCols.nonEmpty,
       "aucRocByGroup needs group columns — use aucRoc for the global form")
-    val y = col(labelCol).cast("int")
-    val bad = df.agg(
-      count(when(y.isNull || (y =!= 0 && y =!= 1), 1)).as("__bady"),
-      count(when(col(scoreCol).isNull, 1)).as("__bads")).head()
-    require(bad.getAs[Long]("__bady") == 0L,
-      s"aucRocByGroup: ${bad.getAs[Long]("__bady")} row(s) have a label " +
-        s"that is null or outside {0, 1} after casting `$labelCol` to int")
-    require(bad.getAs[Long]("__bads") == 0L,
-      s"aucRocByGroup: ${bad.getAs[Long]("__bads")} row(s) have a NULL " +
-        s"`$scoreCol`")
     val groups = groupCols.map(col)
-    val g = df
-      .groupBy(groups :+ col(scoreCol).as("__s"): _*)
-      .agg(sum(y.cast("long")).as("__pos"),
-        sum(lit(1L) - y.cast("long")).as("__neg"))
+    val g = aucScoreCounts(df, scoreCol, labelCol, groupCols, "aucRocByGroup")
     val w = Window.partitionBy(groups: _*).orderBy(col("__s"))
       .rowsBetween(Window.unboundedPreceding, -1)
     g.withColumn("__below", coalesce(sum(col("__neg")).over(w), lit(0L)))
@@ -189,20 +176,34 @@ object RankEval {
             (lit(2L) * col("n_pos") * col("n_neg"))), 6).as("auc")): _*)
   }
 
-  def aucRoc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
+  def aucRoc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
+    aucFromScoreCounts(aucScoreCounts(df, scoreCol, labelCol, Nil, "aucRoc"))
+
+  /** Per-(groups…, score) label counts `(groups…, __s, __pos, __neg)`:
+    * the sum-mergeable cells [[aucRoc]], [[aucRocByGroup]] and the
+    * streamed AUC log ([[graft.streaming.StreamingOps.aucLogSink]]) are
+    * computed FROM, after the loud contracts (labels 0/1 after an int
+    * cast, non-NULL scores; both counted in one aggregate). `who`
+    * prefixes the messages.
+    */
+  private[graft] def aucScoreCounts(
+      df: DataFrame,
+      scoreCol: String,
+      labelCol: String,
+      groupCols: Seq[String],
+      who: String): DataFrame = {
     val y = col(labelCol).cast("int")
     val bad = df.agg(
-      count(when(y.isNull || (y =!= 0 && y =!= 1), 1)).as("__bady"),
-      count(when(col(scoreCol).isNull, 1)).as("__bads")).head()
-    require(bad.getAs[Long]("__bady") == 0L,
-      s"aucRoc: ${bad.getAs[Long]("__bady")} row(s) have a label that is " +
-        s"null or outside {0, 1} after casting `$labelCol` to int")
-    require(bad.getAs[Long]("__bads") == 0L,
-      s"aucRoc: ${bad.getAs[Long]("__bads")} row(s) have a NULL `$scoreCol`")
-    aucFromScoreCounts(df
-      .groupBy(col(scoreCol).as("__s"))
+      count(when(y.isNull || (y =!= 0 && y =!= 1), 1)),
+      count(when(col(scoreCol).isNull, 1))).head()
+    require(bad.getLong(0) == 0L,
+      s"$who: ${bad.getLong(0)} row(s) have a label that is null or " +
+        s"outside {0, 1} after casting `$labelCol` to int")
+    require(bad.getLong(1) == 0L,
+      s"$who: ${bad.getLong(1)} row(s) have a NULL `$scoreCol`")
+    df.groupBy(groupCols.map(col) :+ col(scoreCol).as("__s"): _*)
       .agg(sum(y.cast("long")).as("__pos"),
-        sum(lit(1L) - y.cast("long")).as("__neg")))
+        sum(lit(1L) - y.cast("long")).as("__neg"))
   }
 
   /** The AUC tail shared by [[aucRoc]] and

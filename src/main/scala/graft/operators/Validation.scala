@@ -682,12 +682,18 @@ object Validation {
     * literals (log10 is not portable — the [[graft.operators.RankEval]]
     * discount-table discipline).
     */
-  def benfordAudit(df: DataFrame, valueCol: String): DataFrame = {
+  def benfordAudit(df: DataFrame, valueCol: String): DataFrame =
+    benfordFromCounts(benfordDigitCounts(df, valueCol))
+
+  /** [[benfordAudit]]'s first-digit count cells `(digit, n)`, shared with
+    * the streamed digit log
+    * ([[graft.streaming.StreamingOps.benfordLogSink]]).
+    */
+  private[graft] def benfordDigitCounts(df: DataFrame, valueCol: String): DataFrame = {
     val v = col(valueCol).cast("long")
     val digit = when(v.isNull || v <= 0L, lit(0))
       .otherwise(substring(v.cast("string"), 1, 1).cast("int"))
-    benfordFromCounts(df.groupBy(digit.as("digit"))
-      .agg(count(lit(1)).as("n")))
+    df.groupBy(digit.as("digit")).agg(count(lit(1)).as("n"))
   }
 
   /** [[benfordAudit]] from pre-aggregated first-digit counts
@@ -1213,7 +1219,8 @@ object Validation {
     * Exactness: kept counts and the micro-value·count sum are exact
     * LONGs (the eager `max(n·|v|) ≤ 4e18` refusal keeps the per-group
     * weighted sum inside 2^63); one division + one 1e-6 descale at the
-    * end. NULL values refused loudly; NULL group keys are a group.
+    * end. NULL, NaN, ±Inf and |v| ≥ 9.2e12 values refused loudly
+    * ([[microValueCounts]]); NULL group keys are a group.
     * Output: `(keyCols…, n, n_kept, trimmed_mean)` rounded to 6.
     */
   def trimmedMean(
@@ -1222,18 +1229,42 @@ object Validation {
       valueCol: String,
       trim: Double = 0.1): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
-    val nulls = df.agg(count(when(col(valueCol).isNull, 1)).as("__b"))
-      .head().getAs[Long]("__b")
-    require(nulls == 0L,
-      s"trimmedMean: $nulls NULL `$valueCol` row(s) — a NULL has no " +
-        "rank; filter deliberately upstream")
-    val keys = keyCols.map(col)
     trimmedMeanFromValueCounts(
-      df.select(keys :+ round(col(valueCol).cast("double") * 1e6)
-          .cast("long").as("__v"): _*)
-        .groupBy(keys :+ col("__v"): _*)
-        .agg(count(lit(1)).as("__c")),
-      keyCols, trim)
+      microValueCounts(df, keyCols, valueCol, "trimmedMean"), keyCols, trim)
+  }
+
+  /** The per-(group, micro-value) count cells `(keyCols…, __v, __c)`
+    * that [[trimmedMean]] and [[groupedQuantiles]] are computed FROM:
+    * values micro-quantize at birth (`round(v·1e6)` as LONG). Shared
+    * with the streamed log
+    * ([[graft.streaming.StreamingOps.trimmedMeanSink]]), so a logged
+    * cell is the batch operator's cell by construction.
+    *
+    * Refused loudly, with counts from ONE aggregate: NULL values (a
+    * NULL has no rank) and values with no LONG micro-value — NaN, ±Inf
+    * and |v| ≥ 2^63/1e6 ≈ 9.2e12, which would otherwise fail the LONG
+    * cast mid-executor. `who` prefixes the messages.
+    */
+  private[graft] def microValueCounts(
+      df: DataFrame,
+      keyCols: Seq[String],
+      valueCol: String,
+      who: String): DataFrame = {
+    val micro = round(col(valueCol).cast("double") * 1e6)
+    // NaN orders above every double in Spark, so NaN fails `<` like ±Inf
+    val bad = df.agg(
+      count(when(col(valueCol).isNull, 1)),
+      count(when(!(abs(micro) < lit(9.223372036854775808e18)), 1))).head()
+    require(bad.getLong(0) == 0L,
+      s"$who: ${bad.getLong(0)} NULL `$valueCol` row(s) — a NULL has no " +
+        "rank; filter deliberately upstream")
+    require(bad.getLong(1) == 0L,
+      s"$who: ${bad.getLong(1)} NaN, infinite or |v| ≥ 9.2e12 `$valueCol` " +
+        "row(s) — no LONG micro-value; filter or rescale upstream")
+    val keys = keyCols.map(col)
+    df.select(keys :+ micro.cast("long").as("__v"): _*)
+      .groupBy(keys :+ col("__v"): _*)
+      .agg(count(lit(1)).as("__c"))
   }
 
   /** [[trimmedMean]] from its per-(group, micro-value) count cells —
@@ -1302,7 +1333,8 @@ object Validation {
     *
     * Engine-exact: `⌈p·n⌉` is the same IEEE multiply + ceil on both
     * engines (p a shared literal), the containment test pure integer.
-    * NULL values refused loudly (a NULL has no rank). Output:
+    * NULL, NaN, ±Inf and |v| ≥ 9.2e12 values refused loudly
+    * ([[microValueCounts]]). Output:
     * `(keyCols…, p, n, value)` — one row per (group, probability),
     * value rounded to 6.
     */
@@ -1316,17 +1348,8 @@ object Validation {
       s"probs must be non-empty probabilities in (0, 1], got $probs")
     require(probs.distinct.size == probs.size,
       s"probs must be distinct, got $probs")
-    val nulls = df.agg(count(when(col(valueCol).isNull, 1)).as("__b"))
-      .head().getAs[Long]("__b")
-    require(nulls == 0L,
-      s"groupedQuantiles: $nulls NULL `$valueCol` row(s) — a NULL has " +
-        "no rank; filter deliberately upstream")
-    val keys = keyCols.map(col)
     groupedQuantilesFromValueCounts(
-      df.select(keys :+ round(col(valueCol).cast("double") * 1e6)
-          .cast("long").as("__v"): _*)
-        .groupBy(keys :+ col("__v"): _*)
-        .agg(count(lit(1)).as("__c")),
+      microValueCounts(df, keyCols, valueCol, "groupedQuantiles"),
       keyCols, probs)
   }
 

@@ -1,15 +1,15 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Storage discipline for the per-batch stat logs the streaming sinks
-  * accrete ([[StreamingOps.funnelLogSink]] / `retentionLogSink` /
-  * `diversityPairSink` / `comboCountSink` / `fingerprintSink`): one
-  * `batch=b<id>` directory per micro-batch (overwrite-by-naming
-  * idempotency), folded on a maintenance schedule into a versioned
-  * `batch=c<seq>` partition.
+  * accrete (every sink built on [[sink]]): one `batch=b<id>` directory
+  * per micro-batch (overwrite-by-naming idempotency, [[writeBatch]]),
+  * folded on a maintenance schedule into a versioned `batch=c<seq>`
+  * partition.
   *
   * Two failure modes of the naive "distinct the whole log and swap the
   * directory" compactor motivate this design:
@@ -85,6 +85,27 @@ object StatLog {
   private val BDir = "^batch=b(\\d{12})$".r
   private val CDir = "^batch=c(\\d{12})$".r
   private def cName(seq: Long) = f"batch=c$seq%012d"
+
+  /** Land one micro-batch's cells under `batch=b<id>`. Overwrite by
+    * name: a replayed batch id rewrites its own directory, never adds
+    * a second copy (and a replay of an already-folded id is excluded
+    * by [[read]]).
+    */
+  private[graft] def writeBatch(cells: DataFrame, logPath: String, batchId: Long): Unit =
+    cells.write.mode("overwrite").parquet(f"$logPath/batch=b$batchId%012d")
+
+  /** A stat-log sink: records `kind` (see [[writeKind]]) now, then
+    * lands `cells(batch, batchId)` for every non-empty micro-batch via
+    * [[writeBatch]]. `cells` is the sink's whole per-batch logic — the
+    * sufficient-statistic builder it shares with its batch twin.
+    */
+  private[graft] def sink(events: DataFrame, logPath: String, kind: String)(
+      cells: (DataFrame, Long) => DataFrame): DataStreamWriter[Row] = {
+    writeKind(events.sparkSession, logPath, kind)
+    StreamingOps.foreachNonEmptyBatch(events) { (batch, batchId) =>
+      writeBatch(cells(batch, batchId), logPath, batchId)
+    }
+  }
 
   private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
 /** Event-stream operators over the `events` table shape
@@ -314,6 +314,16 @@ object StreamingOps {
       }
   }
 
+  /** `foreachBatch` over the non-empty micro-batches of `stream`: the
+    * one place the sinks here (and [[StatLog.sink]]) skip a trigger that
+    * delivered no rows, so an empty batch writes nothing.
+    */
+  private[streaming] def foreachNonEmptyBatch(stream: DataFrame)(
+      write: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      if (!batch.isEmpty) write(batch.toDF(), batchId)
+    }
+
   /** Stream documents into a continuously-deduped corpus: each micro-batch
     * dedups within itself, then against the persisted MinHash signature
     * index at `indexPath`; survivors append to `corpusPath` and their
@@ -341,56 +351,52 @@ object StreamingOps {
       shingleSize: Int = 3,
       threshold: Double = 0.5)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          // the ingest chain persists per-batch intermediates (signature
-          // rows, matched ids, component checkpoints inside dedupCorpus)
-          // with session lifetime — on an unbounded stream that is one
-          // leaked cache entry per micro-batch. A Caches scope records
-          // exactly what THIS batch pins (a global getPersistentRDDs diff
-          // would also catch RDDs pinned concurrently by other queries on
-          // the shared context), and the finally releases precisely that
-          // set once the batch's writes commit.
-          val (attempt, pins) = graft.core.Caches.collectPins(scala.util.Try {
-            val p = new org.apache.hadoop.fs.Path(indexPath)
-            val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-            // existence alone is not readiness: a first batch of only
-            // signature-less (empty-text) docs appends ZERO index rows,
-            // leaving a parquet dir with no data files that
-            // spark.read.parquet can never infer a schema from — probe for
-            // an actual data file (early-exit iteration, not a full listing)
-            def hasIndexData: Boolean = fs.exists(p) && {
-              val it = fs.listFiles(p, true)
-              var found = false
-              while (!found && it.hasNext) {
-                val f = it.next()
-                found = f.getLen > 0 && f.getPath.getName.endsWith(".parquet")
-              }
-              found
-            }
-            val index =
-              if (hasIndexData) // loadIndex: validates the stored build
-                // params (bands/shingleSize drift is a loud error)
-                graft.operators.DedupIndex.loadIndex(
-                  spark, indexPath, numPerms, bands, shingleSize)
-              else // bootstrap: empty index with the right schema
-                graft.operators.DedupIndex.indexRowsFor(
-                  batch.toDF().limit(0), idCol, textCol, numPerms, bands,
-                  shingleSize)
-            val (survivors, newRows) = graft.operators.DedupIndex.ingestBatch(
-              batch.toDF(), idCol, textCol, index, numPerms, bands,
-              shingleSize, threshold)
-            // survivors and newRows share the persisted signature rows
-            // inside ingestBatch — the batch text is hashed exactly once
-            survivors.write.mode("append").parquet(corpusPath)
-            graft.operators.DedupIndex.writeIndex(newRows, indexPath,
-              numPerms, bands, shingleSize)
-          })
-          pins.release()
-          attempt.get // a failed batch releases its pins, THEN propagates
+    foreachNonEmptyBatch(docs) { (batch, _) =>
+      val spark = batch.sparkSession
+      // the ingest chain persists per-batch intermediates (signature
+      // rows, matched ids, component checkpoints inside dedupCorpus)
+      // with session lifetime — on an unbounded stream that is one
+      // leaked cache entry per micro-batch. A Caches scope records
+      // exactly what THIS batch pins (a global getPersistentRDDs diff
+      // would also catch RDDs pinned concurrently by other queries on
+      // the shared context); the release frees precisely that set once
+      // the batch's writes commit, and collectPins itself frees it when
+      // the batch throws.
+      val (_, pins) = graft.core.Caches.collectPins {
+        val p = new org.apache.hadoop.fs.Path(indexPath)
+        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        // existence alone is not readiness: a first batch of only
+        // signature-less (empty-text) docs appends ZERO index rows,
+        // leaving a parquet dir with no data files that
+        // spark.read.parquet can never infer a schema from — probe for
+        // an actual data file (early-exit iteration, not a full listing)
+        def hasIndexData: Boolean = fs.exists(p) && {
+          val it = fs.listFiles(p, true)
+          var found = false
+          while (!found && it.hasNext) {
+            val f = it.next()
+            found = f.getLen > 0 && f.getPath.getName.endsWith(".parquet")
+          }
+          found
         }
+        val index =
+          if (hasIndexData) // loadIndex: validates the stored build
+            // params (bands/shingleSize drift is a loud error)
+            graft.operators.DedupIndex.loadIndex(
+              spark, indexPath, numPerms, bands, shingleSize)
+          else // bootstrap: empty index with the right schema
+            graft.operators.DedupIndex.indexRowsFor(
+              batch.limit(0), idCol, textCol, numPerms, bands, shingleSize)
+        val (survivors, newRows) = graft.operators.DedupIndex.ingestBatch(
+          batch, idCol, textCol, index, numPerms, bands, shingleSize,
+          threshold)
+        // survivors and newRows share the persisted signature rows
+        // inside ingestBatch — the batch text is hashed exactly once
+        survivors.write.mode("append").parquet(corpusPath)
+        graft.operators.DedupIndex.writeIndex(newRows, indexPath,
+          numPerms, bands, shingleSize)
+      }
+      pins.release()
     }
 
   /** Stream documents into a segmented BM25 search index: each micro-batch
@@ -416,13 +422,10 @@ object StreamingOps {
       numBuckets: Int = 64,
       lowercase: Boolean = true)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Search.appendSegment(
-            batch.toDF(), idCol, textCol, indexPath, numBuckets, lowercase,
-            segmentName = Some(f"seg_b$batchId%012d")): Unit
-        }
+    foreachNonEmptyBatch(docs) { (batch, batchId) =>
+      graft.operators.Search.appendSegment(
+        batch, idCol, textCol, indexPath, numBuckets, lowercase,
+        segmentName = Some(f"seg_b$batchId%012d"))
     }
 
   /** Stream documents through exact repeated-substring dedup: each
@@ -455,42 +458,38 @@ object StreamingOps {
       salt: String = "graft-es",
       buckets: Int = 64)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val es = graft.operators.ExactSubstrings
-          // scope the per-batch checkpoint + window-row pin exactly like
-          // dedupIngestSink: one leaked pin per micro-batch is an
-          // unbounded-stream leak
-          val (attempt, pins) = graft.core.Caches.collectPins(scala.util.Try {
-            // the pinned window rows serve the probe, the within-batch
-            // scan AND the index delta — the batch text hashes once
-            val (wins, spans) = es.winsAndSpans(batch.toDF(), indexPath,
-              idCol, textCol, w, salt, buckets, broadcastBatch = true)
-            // materialize BEFORE either append: the probe re-lists the
-            // index directory at execution time (see ingestBatch)
-            val cleaned = es.cutSpans(batch.toDF(), spans, idCol, textCol)
-              .localCheckpoint(true)
-            graft.core.Caches.registerCheckpoint(cleaned)
-            // fully-cut documents (everything they carried was already
-            // in the corpus) are DROPPED, not appended as empty rows —
-            // which also makes a fully-replayed batch whose index write
-            // committed self-suppressing: every window matches, every
-            // doc cuts to empty, nothing re-appends (the same property
-            // dedupIngestSink gets from its survivors-only append).
-            // Sub-w-token docs have no windows to match and duplicate
-            // on such a replay — healed downstream by exactDedup, the
-            // documented at-least-once trade.
-            cleaned.where(!(col("kept_text") === "" &&
-                col("removed_tokens") > 0))
-              .write.mode("append").parquet(corpusPath)
-            es.writeSubstrIndex(
-              wins.select("__hb", "__h1", "__h2").distinct(),
-              indexPath, w, salt, buckets)
-          })
-          pins.release()
-          attempt.get // a failed batch releases its pins, THEN propagates
-        }
+    foreachNonEmptyBatch(docs) { (batch, _) =>
+      val es = graft.operators.ExactSubstrings
+      // scope the per-batch checkpoint + window-row pin exactly like
+      // dedupIngestSink: one leaked pin per micro-batch is an
+      // unbounded-stream leak
+      val (_, pins) = graft.core.Caches.collectPins {
+        // the pinned window rows serve the probe, the within-batch
+        // scan AND the index delta — the batch text hashes once
+        val (wins, spans) = es.winsAndSpans(batch, indexPath,
+          idCol, textCol, w, salt, buckets, broadcastBatch = true)
+        // materialize BEFORE either append: the probe re-lists the
+        // index directory at execution time (see ingestBatch)
+        val cleaned = es.cutSpans(batch, spans, idCol, textCol)
+          .localCheckpoint(true)
+        graft.core.Caches.registerCheckpoint(cleaned)
+        // fully-cut documents (everything they carried was already
+        // in the corpus) are DROPPED, not appended as empty rows —
+        // which also makes a fully-replayed batch whose index write
+        // committed self-suppressing: every window matches, every
+        // doc cuts to empty, nothing re-appends (the same property
+        // dedupIngestSink gets from its survivors-only append).
+        // Sub-w-token docs have no windows to match and duplicate
+        // on such a replay — healed downstream by exactDedup, the
+        // documented at-least-once trade.
+        cleaned.where(!(col("kept_text") === "" &&
+            col("removed_tokens") > 0))
+          .write.mode("append").parquet(corpusPath)
+        es.writeSubstrIndex(
+          wins.select("__hb", "__h1", "__h2").distinct(),
+          indexPath, w, salt, buckets)
+      }
+      pins.release()
     }
 
   /** Stream into a mergeable-sketch STORE: each micro-batch reduces to
@@ -515,10 +514,8 @@ object StreamingOps {
       sketchBatch: DataFrame => DataFrame,
       storePath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          writeSketchBatch(sketchBatch(batch.toDF()), storePath, batchId)
+    foreachNonEmptyBatch(stream) { (batch, batchId) =>
+      writeSketchBatch(sketchBatch(batch), storePath, batchId)
     }
 
   /** One sketch-store batch commit ([[sketchStoreSink]]'s write path,
@@ -548,9 +545,8 @@ object StreamingOps {
       pathCol: String,
       corpusPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    files.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) writeWarcBatch(batch.toDF(), pathCol, corpusPath, batchId)
+    foreachNonEmptyBatch(files) { (batch, batchId) =>
+      writeWarcBatch(batch, pathCol, corpusPath, batchId)
     }
 
   /** One WARC-ingest batch commit (factored out so replay idempotency is
@@ -587,12 +583,9 @@ object StreamingOps {
       businessKeys: Seq[String],
       options: graft.ct.ChangeTrackingOptions = graft.ct.ChangeTrackingOptions())
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.ct.ChangeTracking.applyChangeTracking(
-            batch.sparkSession, batch.toDF(), target, mode, businessKeys, options)
-        }
+    foreachNonEmptyBatch(stream) { (batch, _) =>
+      graft.ct.ChangeTracking.applyChangeTracking(
+        batch.sparkSession, batch, target, mode, businessKeys, options)
     }
 
   /** Stream events into a funnel matched-event log — the streaming twin
@@ -614,24 +607,10 @@ object StreamingOps {
       userCol: String,
       tsCol: String,
       steps: Seq[(String, org.apache.spark.sql.Column)])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "distinct")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          writeFunnelBatch(batch.toDF(), logPath, userCol, tsCol, steps, batchId)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "distinct") { (batch, _) =>
+      graft.operators.Funnels.matchedStepEvents(batch, userCol, tsCol, steps)
     }
-  }
-
-  private[graft] def writeFunnelBatch(
-      batch: DataFrame,
-      logPath: String,
-      userCol: String,
-      tsCol: String,
-      steps: Seq[(String, org.apache.spark.sql.Column)],
-      batchId: Long): Unit =
-    graft.operators.Funnels.matchedStepEvents(batch, userCol, tsCol, steps)
-      .write.mode("overwrite").parquet(f"$logPath/batch=b$batchId%012d")
 
   /** The standing funnel over everything [[funnelLogSink]] ingested.
     * Duplicate matched rows (an event delivered under two batch ids)
@@ -661,25 +640,10 @@ object StreamingOps {
       userCol: String,
       tsCol: String,
       periodDays: Int = 7)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "distinct")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          writeRetentionBatch(batch.toDF(), logPath, userCol, tsCol,
-            periodDays, batchId)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "distinct") { (batch, _) =>
+      graft.operators.Funnels.activityPairs(batch, userCol, tsCol, periodDays)
     }
-  }
-
-  private[graft] def writeRetentionBatch(
-      batch: DataFrame,
-      logPath: String,
-      userCol: String,
-      tsCol: String,
-      periodDays: Int,
-      batchId: Long): Unit =
-    graft.operators.Funnels.activityPairs(batch, userCol, tsCol, periodDays)
-      .write.mode("overwrite").parquet(f"$logPath/batch=b$batchId%012d")
 
   /** The standing retention curve over everything [[retentionLogSink]]
     * ingested — [[graft.operators.Funnels.retentionFromPairs]] distincts
@@ -690,9 +654,8 @@ object StreamingOps {
     graft.operators.Funnels.retentionFromPairs(
       StatLog.read(spark, logPath))
 
-  /** Compact a stat log written by any of this family's sinks
-    * ([[funnelLogSink]] / [[retentionLogSink]] / [[diversityPairSink]] /
-    * [[comboCountSink]] / [[fingerprintSink]]): fold the accumulated
+  /** Compact a stat log written by any of this family's sinks (every
+    * sink built on [[StatLog.sink]]): fold the accumulated
     * per-batch directories into one versioned `batch=c<seq>` partition,
     * erasing the directory fan-out (a year of micro-batches is ~10⁵
     * directories of tiny files — the classic small-file decay).
@@ -725,10 +688,8 @@ object StreamingOps {
       docs: DataFrame,
       layoutPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Packing.appendToShards(batch.toDF(), layoutPath)
+    foreachNonEmptyBatch(docs) { (batch, _) =>
+      graft.operators.Packing.appendToShards(batch, layoutPath)
     }
 
   /** Stream a corpus's replication fingerprint: each micro-batch's
@@ -744,16 +705,10 @@ object StreamingOps {
       docs: DataFrame,
       cols: Seq[String],
       logPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(docs.sparkSession, logPath, "fingerprint")
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Validation.corpusFingerprint(batch.toDF(), cols)
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(docs, logPath, "fingerprint") { (batch, _) =>
+      graft.operators.Validation.corpusFingerprint(batch, cols)
     }
-  }
 
   /** The standing replication fingerprint over everything
     * [[fingerprintSink]] ingested — the exact merge of every delivered
@@ -778,14 +733,8 @@ object StreamingOps {
       logPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(quasiCols.nonEmpty, "quasiCols must be non-empty")
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF().groupBy(quasiCols.map(col): _*)
-            .agg(count(lit(1)).as("__kcnt"))
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+    StatLog.sink(events, logPath, "sum") { (batch, _) =>
+      batch.groupBy(quasiCols.map(col): _*).agg(count(lit(1)).as("__kcnt"))
     }
   }
 
@@ -816,16 +765,10 @@ object StreamingOps {
       logPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(quasiCols.nonEmpty, "quasiCols must be non-empty")
-    StatLog.writeKind(events.sparkSession, logPath, "distinct")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .where(col(sensitiveCol).isNotNull)
-            .select((quasiCols :+ sensitiveCol).map(col): _*)
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+    StatLog.sink(events, logPath, "distinct") { (batch, _) =>
+      batch.where(col(sensitiveCol).isNotNull)
+        .select((quasiCols :+ sensitiveCol).map(col): _*)
+        .distinct()
     }
   }
 
@@ -858,22 +801,16 @@ object StreamingOps {
       raterACol: String,
       raterBCol: String,
       logPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .groupBy(col(raterACol).cast("string").as("__a"),
-              col(raterBCol).cast("string").as("__b"))
-            .agg(count(lit(1)).as("__kcnt"))
-            .select(col("__a"), col("__b"),
-              col("__a").isNull.as("__a_null"),
-              col("__b").isNull.as("__b_null"), col("__kcnt"))
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "sum") { (batch, _) =>
+      batch
+        .groupBy(col(raterACol).cast("string").as("__a"),
+          col(raterBCol).cast("string").as("__b"))
+        .agg(count(lit(1)).as("__kcnt"))
+        .select(col("__a"), col("__b"),
+          col("__a").isNull.as("__a_null"),
+          col("__b").isNull.as("__b_null"), col("__kcnt"))
     }
-  }
 
   /** The folded contingency cells of a [[kappaLogSink]] log — the
     * shared sufficient statistic behind both standing agreement stats.
@@ -953,22 +890,16 @@ object StreamingOps {
       unitCol: String,
       valueCol: String,
       logPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .groupBy(col(unitCol).cast("string").as("__u"),
-              col(valueCol).cast("string").as("__v"))
-            .agg(count(lit(1)).as("__kcnt"))
-            .select(col("__u"), col("__v"),
-              col("__u").isNull.as("__u_null"),
-              col("__v").isNull.as("__v_null"), col("__kcnt"))
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "sum") { (batch, _) =>
+      batch
+        .groupBy(col(unitCol).cast("string").as("__u"),
+          col(valueCol).cast("string").as("__v"))
+        .agg(count(lit(1)).as("__kcnt"))
+        .select(col("__u"), col("__v"),
+          col("__u").isNull.as("__u_null"),
+          col("__v").isNull.as("__v_null"), col("__kcnt"))
     }
-  }
 
   /** Streamed per-(slice, term) token counts — the SUM-MERGEABLE
     * sufficient statistic behind BOTH standing slice comparators
@@ -985,19 +916,12 @@ object StreamingOps {
       keyCol: String,
       textCol: String,
       logPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.TextAnalysis
-            .sliceTermCounts(batch.toDF(), keyCol, textCol)
-            // __kcnt is the StatLog fold contract's count column
-            .withColumnRenamed("__c", "__kcnt")
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "sum") { (batch, _) =>
+      graft.operators.TextAnalysis.sliceTermCounts(batch, keyCol, textCol)
+        // __kcnt is the StatLog fold contract's count column
+        .withColumnRenamed("__c", "__kcnt")
     }
-  }
 
   private def termCountsFromLog(
       spark: SparkSession, logPath: String): DataFrame =
@@ -1098,22 +1022,11 @@ object StreamingOps {
       events: DataFrame,
       valueCol: String,
       logPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val v = col(valueCol).cast("long")
-          val digit = when(v.isNull || v <= 0L, lit(0))
-            .otherwise(substring(v.cast("string"), 1, 1).cast("int"))
-          batch.toDF()
-            .groupBy(digit.as("__d"))
-            .agg(count(lit(1)).as("__kcnt"))
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
-        }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "sum") { (batch, _) =>
+      graft.operators.Validation.benfordDigitCounts(batch, valueCol)
+        .select(col("digit").as("__d"), col("n").as("__kcnt"))
     }
-  }
 
   /** The standing Benford first-digit audit over a [[benfordLogSink]]
     * log — same output rows as the batch operator.
@@ -1139,20 +1052,14 @@ object StreamingOps {
       tsCol: String,
       valueCol: String,
       logPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .groupBy(col(keyCol).cast("string").as("__k"),
-              col(tsCol).cast("long").as("__t"),
-              col(valueCol).cast("long").as("__x"))
-            .agg(count(lit(1)).as("__kcnt"))
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "sum") { (batch, _) =>
+      batch
+        .groupBy(col(keyCol).cast("string").as("__k"),
+          col(tsCol).cast("long").as("__t"),
+          col(valueCol).cast("long").as("__x"))
+        .agg(count(lit(1)).as("__kcnt"))
     }
-  }
 
   /** The standing CUSUM scores over a [[cusumPointSink]] log — the
     * folded point cells re-expand (equal points are interchangeable in
@@ -1189,20 +1096,13 @@ object StreamingOps {
       events: DataFrame,
       valueCol: String,
       logPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .groupBy(col(valueCol).cast("double").as("__v"))
-            .agg(count(lit(1)).as("__kcnt"))
-            .select(col("__v"), col("__v").isNull.as("__is_null"),
-              col("__kcnt"))
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "sum") { (batch, _) =>
+      batch
+        .groupBy(col(valueCol).cast("double").as("__v"))
+        .agg(count(lit(1)).as("__kcnt"))
+        .select(col("__v"), col("__v").isNull.as("__is_null"), col("__kcnt"))
     }
-  }
 
   /** The standing two-sample KS statistic between two [[valueCountSink]]
     * logs — equal to the batch
@@ -1225,14 +1125,16 @@ object StreamingOps {
     * sum-mergeable cells [[graft.operators.Validation.trimmedMean]] is
     * computed FROM (the [[valueCountSink]] shape with group keys):
     * each micro-batch writes its `(keyCols…, __v, __kcnt)` partial
-    * counts under the stat-log `sum` fold law, values micro-quantized
-    * at birth exactly as the batch operator quantizes them.
+    * counts under the stat-log `sum` fold law, built by the batch
+    * operator's own cell builder
+    * ([[graft.operators.Validation.microValueCounts]]).
     * [[trimmedMeanFromLog]] replays the batch rank/band back end over
     * the folded log, EQUAL to the batch operator over everything
     * delivered — the standing robust-central-tendency monitor (per-
     * source latency/score/length dashboards) with no raw-row retention.
-    * NULL values are refused per batch (the batch operator's loud
-    * contract); NULL group keys are a group, as in batch.
+    * NULL, NaN, ±Inf and |v| ≥ 9.2e12 values are refused per batch
+    * (the batch operator's loud contract); NULL group keys are a group,
+    * as in batch.
     */
   def trimmedMeanSink(
       events: DataFrame,
@@ -1241,24 +1143,10 @@ object StreamingOps {
       logPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val nulls = batch.toDF()
-            .agg(count(when(col(valueCol).isNull, 1)).as("__b"))
-            .head().getAs[Long]("__b")
-          require(nulls == 0L,
-            s"trimmedMeanSink: $nulls NULL `$valueCol` row(s) in batch " +
-              s"$batchId — a NULL has no rank; filter upstream")
-          batch.toDF()
-            .groupBy(keyCols.map(col) :+
-              round(col(valueCol).cast("double") * 1e6).cast("long")
-                .as("__v"): _*)
-            .agg(count(lit(1)).as("__kcnt"))
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
-        }
+    StatLog.sink(events, logPath, "sum") { (batch, batchId) =>
+      graft.operators.Validation.microValueCounts(batch, keyCols, valueCol,
+          s"trimmedMeanSink batch $batchId")
+        .withColumnRenamed("__c", "__kcnt")
     }
   }
 
@@ -1322,16 +1210,10 @@ object StreamingOps {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(directions >= 1 && directions <= 64,
       s"directions must be in 1..64, got $directions")
-    StatLog.writeKind(vectors.sparkSession, logPath, "sum")
-    vectors.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Ann.swProjections(
-              batch.toDF(), sliceCol, vecCol, directions, salt)
-            .groupBy(col("__k"), col("__d"), col("__v"))
-            .agg(count(lit(1)).as("__kcnt"))
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+    StatLog.sink(vectors, logPath, "sum") { (batch, _) =>
+      graft.operators.Ann.swProjections(batch, sliceCol, vecCol, directions, salt)
+        .groupBy(col("__k"), col("__d"), col("__v"))
+        .agg(count(lit(1)).as("__kcnt"))
     }
   }
 
@@ -1377,34 +1259,17 @@ object StreamingOps {
       scoreCol: String,
       labelCol: String,
       logPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val y = col(labelCol).cast("int")
-          val bad = batch.toDF().agg(
-            count(when(y.isNull || (y =!= 0 && y =!= 1), 1)).as("__bady"),
-            count(when(col(scoreCol).isNull, 1)).as("__bads")).head()
-          require(bad.getAs[Long]("__bady") == 0L && bad.getAs[Long]("__bads") == 0L,
-            s"aucLogSink batch $batchId: labels outside {0,1} or NULL scores " +
-              "delivered — fix the producer; a silently-skipped row would " +
-              "bias every later read")
-          batch.toDF()
-            .groupBy(col(scoreCol).as("__s"))
-            .agg(sum(y.cast("long")).as("__pos"),
-              sum(lit(1L) - y.cast("long")).as("__neg"))
-            .select(col("__s"), explode(array(
-              struct(lit("p").as("__m"), col("__pos").as("__kcnt")),
-              struct(lit("n").as("__m"), col("__neg").as("__kcnt"))))
-              .as("__mv"))
-            .select(col("__s"), col("__mv.__m").as("__m"),
-              col("__mv.__kcnt").as("__kcnt"))
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
-        }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "sum") { (batch, batchId) =>
+      graft.operators.RankEval.aucScoreCounts(batch, scoreCol, labelCol,
+          Nil, s"aucLogSink batch $batchId")
+        .select(col("__s"), explode(array(
+          struct(lit("p").as("__m"), col("__pos").as("__kcnt")),
+          struct(lit("n").as("__m"), col("__neg").as("__kcnt"))))
+          .as("__mv"))
+        .select(col("__s"), col("__mv.__m").as("__m"),
+          col("__mv.__kcnt").as("__kcnt"))
     }
-  }
 
   /** The standing exact AUC over everything delivered to an
     * [[aucLogSink]] log — equal to the batch eval on the union.
@@ -1437,13 +1302,8 @@ object StreamingOps {
       logPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(dim >= 1 && dim <= 1024, s"dim $dim outside [1, 1024]")
-    StatLog.writeKind(vectors.sparkSession, logPath, "sum")
-    vectors.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.similarity.Pca.momentCells(batch.toDF(), vecCol, dim)
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+    StatLog.sink(vectors, logPath, "sum") { (batch, _) =>
+      graft.similarity.Pca.momentCells(batch, vecCol, dim)
     }
   }
 
@@ -1477,23 +1337,16 @@ object StreamingOps {
       keyCols: Seq[String],
       stepUs: Long,
       logPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Timeseries.cells(batch.toDF(), tsUsCol, valueCol,
-            keyCols, stepUs)
-            .select(keyCols.map(col) :+ col("__b") :+ explode(array(
-              struct(lit("n").as("__m"), col("n_events").as("__kcnt")),
-              struct(lit("v").as("__m"), col("value_micros").as("__kcnt"))))
-              .as("__mv"): _*)
-            .select(keyCols.map(col) :+ col("__b") :+
-              col("__mv.__m").as("__m") :+ col("__mv.__kcnt").as("__kcnt"): _*)
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "sum") { (batch, _) =>
+      graft.operators.Timeseries.cells(batch, tsUsCol, valueCol, keyCols, stepUs)
+        .select(keyCols.map(col) :+ col("__b") :+ explode(array(
+          struct(lit("n").as("__m"), col("n_events").as("__kcnt")),
+          struct(lit("v").as("__m"), col("value_micros").as("__kcnt"))))
+          .as("__mv"): _*)
+        .select(keyCols.map(col) :+ col("__b") :+
+          col("__mv.__m").as("__m") :+ col("__mv.__kcnt").as("__kcnt"): _*)
     }
-  }
 
   /** The standing regular grid over everything delivered to a
     * [[resampleSink]] log — equal to the batch
@@ -1534,18 +1387,12 @@ object StreamingOps {
       depth: Int = 4,
       width: Int = 2048,
       salt: String = "graft")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    StatLog.writeKind(events.sparkSession, logPath, "sum")
-    events.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Sketches.cmsSketches(batch.toDF(), groupCols,
-            keyCol, depth, width, salt)
-            .withColumnRenamed("cnt", "__kcnt")
-            .write.mode("overwrite")
-            .parquet(f"$logPath/batch=b$batchId%012d")
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    StatLog.sink(events, logPath, "sum") { (batch, _) =>
+      graft.operators.Sketches.cmsSketches(batch, groupCols, keyCol, depth,
+          width, salt)
+        .withColumnRenamed("cnt", "__kcnt")
     }
-  }
 
   /** The standing cell table over everything delivered to a
     * [[cmsSink]] log — equal to the batch
@@ -1577,11 +1424,9 @@ object StreamingOps {
       idCol: String,
       vecCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Ann.IvfPq.appendBatch(
-            batch.sparkSession, indexPath, batch.toDF(), idCol, vecCol)
+    foreachNonEmptyBatch(vectors) { (batch, _) =>
+      graft.operators.Ann.IvfPq.appendBatch(
+        batch.sparkSession, indexPath, batch, idCol, vecCol)
     }
 
   /** Stream records into a standing [[graft.operators.Linkage.Index]]:
@@ -1596,13 +1441,9 @@ object StreamingOps {
       records: DataFrame,
       indexPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    records.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Linkage.Index.ingestBatch(
-            batch.sparkSession, indexPath, batch.toDF())
-          ()
-        }
+    foreachNonEmptyBatch(records) { (batch, _) =>
+      graft.operators.Linkage.Index.ingestBatch(
+        batch.sparkSession, indexPath, batch)
     }
 
   final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)

@@ -687,6 +687,12 @@ class ValidationSpec extends SparkTestBase {
       Validation.trimmedMean(df, Seq("g"), "v", trim = 0.5))
     intercept[IllegalArgumentException](Validation.trimmedMean(
       Seq(("A", Option.empty[Double])).toDF("g", "v"), Seq("g"), "v"))
+    // no LONG micro-value: a require, not a mid-executor cast overflow
+    Seq(Double.NaN, Double.PositiveInfinity, 1e13).foreach { bad =>
+      val e = intercept[IllegalArgumentException](Validation.trimmedMean(
+        Seq(("A", 1.0), ("A", bad)).toDF("g", "v"), Seq("g"), "v"))
+      assert(e.getMessage.contains("1 NaN, infinite"), e.getMessage)
+    }
     // NULL group keys are a group (contract pin): the offsets/totals
     // joins are null-safe per key, so the NULL group survives with the
     // same trim band as any other — values {2,4,6,8,100}, k=1 keeps
@@ -739,6 +745,11 @@ class ValidationSpec extends SparkTestBase {
       df, Seq("g"), "v", Seq(0.5, 0.5)))
     intercept[IllegalArgumentException](Validation.groupedQuantiles(
       Seq(("A", Option.empty[Double])).toDF("g", "v"), Seq("g"), "v"))
+    Seq(Double.NaN, Double.PositiveInfinity, 1e13).foreach { bad =>
+      val e = intercept[IllegalArgumentException](Validation.groupedQuantiles(
+        Seq(("A", 1.0), ("A", bad)).toDF("g", "v"), Seq("g"), "v"))
+      assert(e.getMessage.contains("1 NaN, infinite"), e.getMessage)
+    }
   }
 
   test("groupedQuantiles under collectPins: pins.release() frees its rank checkpoint") {

@@ -533,11 +533,11 @@ class StreamingOpsSpec extends SparkTestBase {
         steps.map(_._1)).where(col("user_id") === 1L).collect().head
       assert(u1.getAs[Long]("steps_completed") == 3L)
       // replaying a batch id overwrites its own directory — no duplicates
-      StreamingOps.writeFunnelBatch(
+      StatLog.writeBatch(graft.operators.Funnels.matchedStepEvents(
         Seq((1L, ts("2026-01-01 10:00:00"), "view"),
           (3L, ts("2026-01-01 08:00:00"), "search"))
           .toDF("user_id", "ts", "event_type"),
-        log, "user_id", "ts", steps, batchId = 1L)
+        "user_id", "ts", steps), log, batchId = 1L)
       val replayed = StreamingOps.funnelUsersFromLog(spark, log,
         "user_id", steps.map(_._1))
         .collect().map(_.toString).sorted.toSeq
@@ -555,10 +555,10 @@ class StreamingOpsSpec extends SparkTestBase {
         "user_id", steps.map(_._1))
         .collect().map(_.toString).sorted.toSeq
       assert(compacted == batch, "compaction must not change the funnel")
-      StreamingOps.writeFunnelBatch(
+      StatLog.writeBatch(graft.operators.Funnels.matchedStepEvents(
         Seq((1L, ts("2026-01-01 10:00:00"), "view"))
           .toDF("user_id", "ts", "event_type"),
-        log, "user_id", "ts", steps, batchId = 1L)
+        "user_id", "ts", steps), log, batchId = 1L)
       val afterReplay = StreamingOps.funnelUsersFromLog(spark, log,
         "user_id", steps.map(_._1))
         .collect().map(_.toString).sorted.toSeq
@@ -935,14 +935,14 @@ class StreamingOpsSpec extends SparkTestBase {
     val steps = Seq(
       "view" -> (col("event_type") === "view"),
       "click" -> (col("event_type") === "click"))
-    StreamingOps.writeFunnelBatch(
+    StatLog.writeBatch(graft.operators.Funnels.matchedStepEvents(
       Seq((1L, java.sql.Timestamp.valueOf("2026-01-01 10:00:00"), "view"))
         .toDF("user_id", "ts", "event_type"),
-      log, "user_id", "ts", steps, batchId = 0L)
-    StreamingOps.writeFunnelBatch(
+      "user_id", "ts", steps), log, batchId = 0L)
+    StatLog.writeBatch(graft.operators.Funnels.matchedStepEvents(
       Seq((1L, java.sql.Timestamp.valueOf("2026-01-01 10:05:00"), "click"))
         .toDF("user_id", "ts", "event_type"),
-      log, "user_id", "ts", steps, batchId = 1L)
+      "user_id", "ts", steps), log, batchId = 1L)
     // a pre-existing log (written outside the sink constructors) must be
     // marked with its fold law before maintenance will touch it
     intercept[IllegalStateException](
@@ -1383,10 +1383,8 @@ class StreamingOpsSpec extends SparkTestBase {
       StreamingOps.compactStatLog(spark, log)
       assert(rows(StreamingOps.trimmedMeanFromLog(
         spark, log, Seq("g"), trim = 0.1)) == batch)
-      // a replayed micro-batch overwrites its own directory (exactly-
-      // once per batch id): re-adding data as a NEW batch is additive,
-      // but the existing dirs stay intact under the fold — checked by
-      // the count staying consistent after compaction above
+      // replaying one batch id (a second write counts once) is the
+      // StatLog.sink contract, tested on its own below
       // NULL values refuse loudly inside the stream
       val srcN = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(String, Option[Double])]
@@ -1401,7 +1399,47 @@ class StreamingOpsSpec extends SparkTestBase {
         Option(e.getCause).exists(_.getMessage.contains("NULL")),
         e.getMessage)
       qN.stop()
+      // so do values with no LONG micro-value (NaN, ±Inf, |v| ≥ 9.2e12)
+      val srcF = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(String, Double)]
+      val qF = StreamingOps.trimmedMeanSink(srcF.toDS().toDF("g", "v"),
+          Seq("g"), "v", root + "/tmf")
+        .option("checkpointLocation", root + "/ckf").start()
+      srcF.addData(("A", 1.0), ("A", Double.NaN),
+        ("A", Double.PositiveInfinity), ("A", 1e13))
+      val eF = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        qF.processAllAvailable()
+      }
+      assert(eF.getMessage.contains("3 NaN, infinite") ||
+        Option(eF.getCause).exists(_.getMessage.contains("3 NaN, infinite")),
+        eF.getMessage)
+      qF.stop()
     } finally q.stop()
+  }
+
+  test("StatLog.sink: an empty micro-batch writes no directory; a rewritten batch id counts once") {
+    import org.apache.spark.sql.functions._
+    implicit val sqlCtx = spark.sqlContext
+    val root = Files.createTempDirectory("graft_sink_").toString
+    val log = root + "/log"
+    val src = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Long]
+    val q = StatLog.sink(src.toDS().toDF("v").where(col("v") > 0L), log,
+        "sum") { (batch, _) => batch.groupBy("v").agg(count(lit(1)).as("__kcnt")) }
+      .option("checkpointLocation", root + "/ck").start()
+    try {
+      src.addData(-1L); q.processAllAvailable() // batch 0: filtered empty
+      src.addData(5L); q.processAllAvailable()
+    } finally q.stop()
+    val dirs = new java.io.File(log).listFiles()
+      .filter(_.getName.startsWith("batch=")).map(_.getName).toSeq
+    assert(dirs == Seq("batch=b000000000001"), s"unexpected dirs: $dirs")
+    val cells = Seq((9L, 2L)).toDF("v", "__kcnt")
+    StatLog.writeBatch(cells, log, 7L)
+    StatLog.writeBatch(cells, log, 7L)
+    def total(v: Long) = StatLog.read(spark, log).where(col("v") === v)
+      .agg(sum("__kcnt")).head().getLong(0)
+    assert(total(9L) == 2L && total(5L) == 1L)
   }
 
   test("swProjectionSink + swFromLog equals the batch slicedWasserstein") {
