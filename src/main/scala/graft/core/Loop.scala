@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The plumbing every iterative operator shares: a loop-width session
@@ -142,22 +142,28 @@ object Loop {
   /** A checkpoint-rotating loop over one state table. Round `r` (1-based)
     * calls `step(state, r)`: `None` ends the loop with `state` as the
     * result; `Some(next)` is checkpointed, the previous state released,
-    * and `until(checkpoint, r)` probed — `true` ends the loop. At most
-    * `rounds` rounds run; when they run out before the loop ended and
-    * `unconverged` is set, it is thrown as an [[IllegalStateException]]
+    * and `until(checkpoint, r, observed)` probed — `true` ends the loop.
+    * At most `rounds` rounds run; when they run out before the loop ended
+    * and `unconverged` is set, it is thrown as an [[IllegalStateException]]
     * (a truncated fixpoint is not an answer). Returns the last state,
     * registered with [[Caches]].
     *
+    * `observe` is a convergence signal that costs no Spark action: named
+    * aggregates riding on each round's checkpoint job (`Dataset.observe`);
+    * `observed` maps each name to its value (empty without `observe`).
+    * An `until` that probes the checkpoint instead adds a job per round.
+    *
     * `init` is the already-checkpointed round-0 state and the loop owns
     * it (released once round 1's checkpoint lands, or on throw). A
-    * derived `init` — e.g. a projection of the caller's checkpoint —
-    * leaves that checkpoint with the caller.
+    * derived `init` — e.g. a projection of the caller's checkpoint, or a
+    * lazy plan round 1 computes — leaves that checkpoint with the caller.
     */
   def iterate(
       init: DataFrame,
       rounds: Int = Int.MaxValue,
-      until: (DataFrame, Int) => Boolean = (_, _) => false,
-      unconverged: Option[String] = None)(
+      until: (DataFrame, Int, Map[String, Any]) => Boolean = (_, _, _) => false,
+      unconverged: Option[String] = None,
+      observe: Seq[Column] = Nil)(
       step: (DataFrame, Int) => Option[DataFrame]): DataFrame =
     holding { held =>
       var state = held.adopt(init)
@@ -166,13 +172,22 @@ object Loop {
       while (!done && r <= rounds) step(state, r) match {
         case None => done = true
         case Some(next) =>
-          val c = held(next)
+          val seen = Option.when(observe.nonEmpty)(Observation())
+          val c = held(seen.fold(next)(o => next.observe(o, observe.head, observe.tail: _*)))
           held.release(state)
           state = c
-          done = until(c, r)
+          done = until(c, r, seen.fold(Map.empty[String, Any])(_.get))
           r += 1
       }
       if (!done) unconverged.foreach(m => throw new IllegalStateException(m))
       state
     }
+
+  /** An [[iterate]] `until` that ends the loop the round its observed
+    * values repeat the previous round's; `round0` stands for the round
+    * before the first. */
+  def repeats(round0: Map[String, Any]): (DataFrame, Int, Map[String, Any]) => Boolean = {
+    var last = round0
+    (_, _, seen) => { val done = seen == last; last = seen; done }
+  }
 }

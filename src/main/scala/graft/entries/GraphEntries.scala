@@ -37,23 +37,24 @@ private[graft] object GraphEntries {
       operators.Graphs.degreeAssortativity(edges, "x", "y")
     }),
 
-    // ---- full coreness decomposition (ascending peel; FULL DuckDB
-    // twin — the peel is a bounded-round recursion, so the oracle
-    // replays it with a recursive CTE over incidence rows) ----
+    // ---- full coreness decomposition (h-index iteration; FULL DuckDB
+    // twin that stays the ascending peel as a recursive CTE over
+    // incidence rows — a different algorithm reaching the same core
+    // numbers, so the oracle is an independent check) ----
     "q_coreness" -> ((s, dir) => {
-      // sparse derived graph (~avg degree 6 at sf0.1): decomposition
-      // rounds track DEGENERACY, so the bench fixture is shaped like a
-      // real link graph, not a dense clique whose ~50 levels would
-      // measure scheduler overhead
+      // sparse derived graph (~avg degree 6 at sf0.1), shaped like a
+      // real link graph, not a dense clique whose values would take
+      // many rounds to descend from their degrees
       val edges = t(s, dir, "orders").select(
         (col("o_orderkey") % 50021).cast("string").as("x"),
         (col("o_custkey") % 50021).cast("string").as("y"))
       operators.Graphs.coreness(edges, "x", "y")
     }),
 
-    // ---- k-core extraction (iterative peeling to fixpoint; FULL
-    // DuckDB twin via the same recursive-CTE peel as q_coreness;
-    // cascade semantics also pinned in GraphsSpec) ----
+    // ---- k-core extraction (the h-index iteration capped at k; FULL
+    // DuckDB twin via the recursive-CTE peel, as for q_coreness — an
+    // independent algorithm; cascade semantics also pinned in
+    // GraphsSpec) ----
     "q_k_core" -> ((s, dir) => {
       val edges = t(s, dir, "orders").select(
         (col("o_orderkey") % 97).cast("string").as("x"),
@@ -879,7 +880,8 @@ private[graft] object GraphEntries {
         |  WHERE r.hops < 2)
         |SELECT node, CAST(min(hops) AS BIGINT) AS hops
         |FROM r GROUP BY node""".stripMargin,
-    // k-core peel as a bounded recursive CTE: the working table carries
+    // k-core peel as a bounded recursive CTE (the operator runs the
+    // capped h-index iteration instead): the working table carries
     // the FULL surviving incidence set per round (rows are (round, u, v),
     // two per undirected edge so count(*) OVER (PARTITION BY u) IS the
     // degree), one peel round per recursion step; the global min-degree
@@ -917,7 +919,8 @@ private[graft] object GraphEntries {
         |  WHERE 30 <= (SELECT min(least(du, dv)) FROM degs))
         |SELECT u AS node, CAST(count(*) AS BIGINT) AS degree
         |FROM final GROUP BY u""".stripMargin,
-    // Full coreness decomposition in ONE recursion: rows carry the
+    // Full coreness decomposition in ONE recursion (the peel; the
+    // operator runs the h-index iteration instead): rows carry the
     // current confirmed core level k; a round either peels (some node
     // under k+1 — drop its incident rows, k unchanged) or, at the
     // fixpoint (global min degree >= k+1, i.e. the set IS the

@@ -1293,13 +1293,13 @@ object Dedup {
     releaseInputs()
     // The changed-row count rides on each round's checkpoint job via
     // observe() — convergence detection costs zero extra actions.
-    var obs: org.apache.spark.sql.Observation = null
     Loop.iterate(labels0, rounds = maxIter,
-      until = (_, _) => obs.get("changed").asInstanceOf[Long] == 0L,
+      until = (_, _, seen) => seen("changed") == 0L,
       unconverged = Some(
         s"connectedComponents did not converge within $maxIter rounds; " +
-          "raise maxIter (rounds needed ~ component diameter)")) {
-      (state, r) =>
+          "raise maxIter (rounds needed ~ component diameter)"),
+      observe = Seq(count(when(col("comp") =!= col("prev"), 1)).as("changed"))) {
+      (state, _) =>
         val labels = state.select(col("node"), col("comp"))
         val msgs = edges
           .join(labels, edges("s") === labels("node"))
@@ -1307,15 +1307,12 @@ object Dedup {
         // Every node has exactly one own=true row (labels covers all
         // nodes), so prev is never null and comp <=> prev iff the node's
         // label held.
-        obs = org.apache.spark.sql.Observation(s"cc_lp_${r - 1}")
         Some(msgs
           .union(labels.select(col("node"), col("comp"), lit(true).as("own")))
           .groupBy("node")
           .agg(
             min("comp").as("comp"),
-            min(when(col("own"), col("comp"))).as("prev"))
-          .observe(obs,
-            count(when(col("comp") =!= col("prev"), 1)).as("changed")))
+            min(when(col("own"), col("comp"))).as("prev")))
     }.select(col("node"), col("comp"))
   }
 
@@ -1354,13 +1351,6 @@ object Dedup {
       Seq(count(lit(1)).as("n"), bit_xor(h).as("x"),
         sum(pmod(h, lit(1000000007L))).as("s"))
     }
-    def sigOf(m: Map[String, Any]): (Long, Long, Long) = {
-      def l(k: String): Long = m(k) match {
-        case null => 0L
-        case n: java.lang.Number => n.longValue()
-      }
-      (l("n"), l("x"), l("s"))
-    }
     Loop.holding { held =>
       // Every endpoint must come back labeled — including nodes whose only
       // "pair" is a self-loop, which the canonical orientation drops below.
@@ -1373,24 +1363,15 @@ object Dedup {
       releaseInputs()
       if (edges0.isEmpty) allNodes.select(col("node"), col("node").as("comp"))
       else {
-        var sig = {
-          val r = edges0.agg(sigExprs.head, sigExprs.tail: _*).head()
-          sigOf(Seq("n", "x", "s").zipWithIndex
-            .map { case (k, i) => k -> r.get(i) }.toMap)
-        }
+        val sig0 = edges0.agg(sigExprs.head, sigExprs.tail: _*).head()
         // the fixpoint signature rides on each round's checkpoint job via
         // observe() — no extra action per round
-        var obs: org.apache.spark.sql.Observation = null
         val edges = Loop.iterate(edges0, rounds = budget,
-          until = (_, _) => {
-            val nextSig = sigOf(obs.get)
-            val converged = nextSig == sig
-            sig = nextSig
-            converged
-          },
+          until = Loop.repeats(sig0.getValuesMap[Any](Seq("n", "x", "s"))),
           unconverged = Some(
-            s"connectedComponents(stars) did not converge within $budget rounds")) {
-          (edges, r) =>
+            s"connectedComponents(stars) did not converge within $budget rounds"),
+          observe = sigExprs) {
+          (edges, _) =>
             // large-star: symmetric view keyed on each node; m = min of
             // closed neighborhood; larger neighbors re-attach to m
             val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
@@ -1406,15 +1387,13 @@ object Dedup {
               .distinct()
             // small-star: keyed on the larger endpoint; node and all its
             // smaller neighbors attach to the minimum
-            obs = org.apache.spark.sql.Observation(s"cc_stars_${r - 1}")
             val mins2 = large.groupBy("u").agg(min(col("v")).as("m"))
             Some(large.join(mins2, "u")
               .select(col("v").as("n"), col("m"))
               .union(mins2.select(col("u").as("n"), col("m")))
               .where(col("n") =!= col("m"))
               .select(col("n").as("u"), col("m").as("v"))
-              .distinct()
-              .observe(obs, sigExprs.head, sigExprs.tail: _*))
+              .distinct())
         }
         val starLabels = edges.select(col("u").as("node"), col("v").as("comp"))
           .union(edges.select(col("v").as("node"), col("v").as("comp")))

@@ -74,7 +74,7 @@ object Graphs {
         eDeg,
         nodes.withColumn("__reset", lit((1.0 - damping) / n))
           .withColumn("__init", lit(1.0 / n)),
-        iterations, damping)
+        n, iterations, damping)
     }
     // finally, not success-path-only: the empty-graph require and any
     // mid-iteration failure would otherwise leak both session-lifetime
@@ -116,8 +116,8 @@ object Graphs {
       nodesOf(eDeg).join(seedSet, Seq("node"), "left")
         .select(col("node"), coalesce(col("__s"), lit(0)).as("__s")))
     try {
-      val k = flagged.agg(sum(col("__s")).cast("long").as("k"))
-        .head().getAs[Long]("k")
+      val nk = flagged.agg(count(lit(1)), coalesce(sum(col("__s")), lit(0L))).head()
+      val k = nk.getLong(1)
       require(k > 0, "personalizedPageRank: no seed is a node of the graph")
       val isSeed = col("__s") === 1
       pageRankIterations(
@@ -128,7 +128,7 @@ object Graphs {
           .withColumn("__init",
             when(isSeed, lit(1.0 / k)).otherwise(lit(0.0)))
           .drop("__s"),
-        iterations, damping)
+        nk.getLong(0), iterations, damping)
     } finally { eDeg.unpersist(); flagged.unpersist() }
   }
 
@@ -283,7 +283,7 @@ object Graphs {
         .localCheckpoint(true)
       Loop.iterate(visited0, rounds = maxHops,
         // fixpoint probe on the fresh checkpoint: no node is new at hop h
-        until = (visited, h) =>
+        until = (visited, h, _) =>
           visited.where(col("hops") === h).limit(1).count() == 0) {
         (visited, h) =>
           // the loud empty-seed path — the loop releases the seed checkpoint
@@ -368,17 +368,15 @@ object Graphs {
     * which every node keeps degree ≥ k — the standard "peel away the
     * fluff" cleanup before graph signals (a crawl graph's 2-core drops
     * every dead-end chain; spam sprays vanish long before organic
-    * communities). Returns the surviving `(node, degree)` rows (empty
-    * when no k-core exists).
+    * communities). Returns the surviving `(node, degree)` rows, `degree`
+    * counting member neighbours (empty when no k-core exists).
     *
-    * Iterative peeling to the FIXPOINT: drop nodes under degree k,
-    * recompute, repeat — deletions cascade (a chain anchored to a core
-    * unravels link by link), so the loop runs until an iteration
-    * deletes nothing. Per iteration: one degree aggregate + two
-    * left-semi joins, edge list checkpointed per round (released as
-    * soon as the next lands) so iteration count bounds neither plan
-    * depth nor storage. The edge-count fixpoint test reads the fresh
-    * checkpoint — a cheap cached count, no recompute.
+    * [[coreness]]'s loop with every value capped at `k`: a node stays at
+    * the cap exactly while ≥ k of its neighbours do, so the nodes at the
+    * cap shrink round for round as the synchronous peel's survivors (a
+    * chain anchored to a core unravels one link per round). The loop
+    * ends when the count at the cap stops changing: the cascade depth
+    * plus one round, and at least two (round 1 has no count to compare).
     */
   def kCore(
       edges: DataFrame,
@@ -386,92 +384,77 @@ object Graphs {
       dstCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    Loop.holding { held =>
-      val e0 = held(undirectedEdges(edges, srcCol, dstCol))
-      // peel rounds run loop-width on a session clone ([[Loop.session]])
-      val e0i = Loop.rebind(e0, Loop.session(edges.sparkSession, e0.count()))
-      val e = held.adopt(peelTo(e0i, k))
-      Loop.rebind(degreesOf(e).where(col("__deg") >= k)
-        .select(col("node"), col("__deg").as("degree")), edges.sparkSession)
-    }
-  }
-
-  /** Peel the (checkpointed) edge set to its k-core fixpoint. Always
-    * returns a FRESH checkpoint (never the input, which stays the
-    * caller's), with every intermediate round released as the next
-    * lands.
-    */
-  private def peelTo(e0: DataFrame, k: Int): DataFrame = {
-    var n = e0.count()
-    if (n == 0L) return e0.limit(0).localCheckpoint(true)
-    // a projection, not the leaf: the loop leaves `e0` to the caller
-    Loop.iterate(e0.select("__a", "__b"),
-      // count the fresh checkpoint (cheap — it is materialized)
-      until = (e, _) => {
-        val n2 = e.count()
-        val done = n2 == n || n2 == 0L
-        n = n2
-        done
-      }) { (e, _) =>
-      val keep = degreesOf(e).where(col("__deg") >= k).select("node")
-      Some(e
-        .join(keep.withColumnRenamed("node", "__a"), Seq("__a"), "left_semi")
-        .join(keep.withColumnRenamed("node", "__b"), Seq("__b"), "left_semi"))
-    }
+    hIndexLoop(edges, srcCol, dstCol, k, count(when(col("h") === k, 1)), _ => -1L)
+      .where(col("h") === k).select(col("node"), col("__atCap").as("degree"))
   }
 
   /** Full coreness decomposition: every node's core NUMBER (the largest
     * k with the node inside the k-core) — the graph-cleanup dial in one
-    * table instead of one [[kCore]] call per threshold. Ascending peel:
-    * the (k+1)-core is peeled FROM the k-core edges (never from the
-    * full graph again), nodes dropped at level k record coreness k, and
-    * the loop ends when the core empties — total rounds tracked by the
-    * graph's degeneracy, not its max degree. The accumulator is
-    * re-checkpointed per level so neither plan depth nor storage grows
-    * with k. Isolated nodes (no edges) do not appear, matching every
-    * other operator over edge lists.
+    * table instead of one [[kCore]] call per threshold. Isolated nodes
+    * (no edges) do not appear, matching every other operator over edge
+    * lists.
+    *
+    * h-index iteration (Lü, Zhou, Zhang & Stanley, Nat. Commun. 2016):
+    * every node starts at its degree, and each round replaces its value
+    * by the h-index of its neighbours' values (the largest h with ≥ h
+    * neighbours valued ≥ h). Values never increase and settle on the
+    * core number, so the loop ends the round their sum stops changing.
+    * The round count follows the longest chain of dependent decreases
+    * (on a power-law graph about the peel's cascade depth), not the
+    * degeneracy or the maximum degree.
     */
   def coreness(
       edges: DataFrame,
       srcCol: String,
-      dstCol: String): DataFrame = {
-    def nodesIn(e: DataFrame): DataFrame =
-      e.select(explode(array(col("__a"), col("__b"))).as("node")).distinct()
+      dstCol: String): DataFrame =
+    // round 0 sums the degrees: twice the simple edge count
+    hIndexLoop(edges, srcCol, dstCol, Long.MaxValue, coalesce(sum(col("h")), lit(0L)),
+      m => 2 * m).select(col("node"), col("h").as("coreness"))
+
+  /** The h-index loop over the simple undirected graph: `(node, h)`
+    * starts at `min(degree, cap)`, each round sets `h` to the h-index of
+    * the neighbours' values, and `__atCap` counts the neighbours that
+    * were at `cap`. The loop ends when `signal`, observed on the round's
+    * checkpoint job, repeats its previous value (`signal0(edge count)`
+    * stands for round 0). Returns the last state on the caller session.
+    *
+    * Per round, one checkpoint job (plus the state's broadcast while it
+    * is under the broadcast threshold): the both-orientation adjacency
+    * joins the state keyed on the neighbour — laid out by neighbour, so
+    * a state too big to broadcast joins without moving it; a hash
+    * aggregate counts `(node, neighbour value)` pairs with map-side
+    * partials, so a hub has one row per DISTINCT neighbour value, never
+    * one per neighbour; a node-keyed window over those rows takes the
+    * h-index as `max over values v of min(v, #neighbours valued ≥ v)`.
+    */
+  private def hIndexLoop(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      cap: Long, signal: org.apache.spark.sql.Column, signal0: Long => Long): DataFrame =
     Loop.holding { held =>
       val e0 = held(undirectedEdges(edges, srcCol, dstCol))
-      // peel rounds run loop-width on a session clone ([[Loop.session]]);
-      // the checkpointed edges rebind for free, the result rebinds back
-      var e = Loop.rebind(e0, Loop.session(edges.sparkSession, e0.count()))
-      var acc: DataFrame = null
-      var k = 1L
-      while (e.count() > 0L) {
-        // jump k to the core's current minimum degree: every level in
-        // between would peel nothing (all degrees ≥ minDeg), and on dense
-        // graphs those empty levels are most of them — the min-degree
-        // aggregate on the cached core is one cheap job vs a full no-op
-        // peel round per skipped level
-        val minDeg = degreesOf(e).agg(min(col("__deg")).as("m"))
-          .head().getAs[Long]("m")
-        k = math.max(k, minDeg)
-        val next = held.adopt(peelTo(e, (k + 1).toInt))
-        val dropped = nodesIn(e)
-          .join(nodesIn(next), Seq("node"), "left_anti")
-          .withColumn("coreness", lit(k))
-        val grown = held(if (acc == null) dropped else acc.unionByName(dropped))
-        held.release(acc)
-        acc = grown
-        held.release(e)
-        e = next
-        k += 1
-      }
-      if (acc == null)
-        edges.sparkSession.emptyDataFrame
-          .withColumn("node", lit(null).cast("string"))
-          .withColumn("coreness", lit(null).cast("bigint"))
-          .where(lit(false))
-      else Loop.rebind(acc, edges.sparkSession)
+      val m = e0.count()
+      // rounds run loop-width on a session clone ([[Loop.session]]),
+      // sized by the adjacency every round scans: both orientations
+      val e = Loop.rebind(e0, Loop.session(edges.sparkSession, 2 * m))
+      val adj = held(e.select(col("__a").as("node"), col("__b").as("nbr"))
+        .union(e.select(col("__b").as("node"), col("__a").as("nbr")))
+        .repartition(col("nbr")))
+      held.release(e0)
+      // round 0 is lazy (round 1's job computes it); the adjacency is
+      // symmetric, so a node's degree is its row count as a neighbour
+      val deg = adj.groupBy(col("nbr").as("node"))
+        .agg(least(count(lit(1)), lit(cap)).as("h"))
+      val byValue = org.apache.spark.sql.expressions.Window
+        .partitionBy("node").orderBy(col("h").desc)
+      Loop.rebind(Loop.iterate(deg, until = Loop.repeats(Map("signal" -> signal0(m))),
+        observe = Seq(signal.as("signal"))) { (h, _) =>
+        val pairs = adj.join(h.select(col("node").as("nbr"), col("h")), "nbr")
+          .groupBy("node", "h").agg(count(lit(1)).as("__n"))
+        Some(pairs.withColumn("__c", sum(col("__n")).over(byValue))
+          .groupBy("node").agg(max(least(col("h"), col("__c"))).as("h"),
+            sum(when(col("h") === cap, col("__n"))).as("__atCap")))
+      }, edges.sparkSession)
     }
-  }
 
   /** HITS (Kleinberg 1999): mutually recursive hub and authority
     * scores over a DIRECTED edge list — the [[pageRank]] sibling that
@@ -700,22 +683,31 @@ object Graphs {
       .unionByName(eDeg.select(col("__dst").as("node")))
       .distinct()
 
-  /** One power-iteration loop over nodes carrying per-node `__reset`
-    * (teleport mass per step) and `__init` (starting rank) — the shared
-    * core of uniform [[pageRank]] and [[personalizedPageRank]].
+  /** One power-iteration loop over the `n` nodes carrying per-node
+    * `__reset` (teleport mass per step) and `__init` (starting rank) —
+    * the shared core of uniform [[pageRank]] and [[personalizedPageRank]].
+    * It runs loop-width on a session clone ([[Loop.session]]): the pins
+    * built on the caller's session rebind for free (so `__wsum` keeps its
+    * partitioning; the nano-unit LONG sums are order-free), and the
+    * result rebinds back.
     */
   private def pageRankIterations(
-      eDeg: DataFrame,
+      pinnedEdges: DataFrame,
       nodesWithReset: DataFrame,
+      n: Long,
       iterations: Int,
       damping: Double): DataFrame = {
-    val nodes = nodesWithReset
+    val spark = pinnedEdges.sparkSession
+    val eDeg = Loop.rebind(pinnedEdges, Loop.session(spark, n))
+    val nodes = Loop.rebind(nodesWithReset, eDeg.sparkSession)
     def powerStep(pr: DataFrame): DataFrame = {
       // pr·w/Σw — for the unweighted form w = 1.0, so this is exactly
       // pr/Σw (multiplying by 1.0 is an IEEE identity; the unweighted
-      // oracle's pr/deg expression stays bit-for-bit)
+      // oracle's pr/deg expression stays bit-for-bit). Ranks hash to the
+      // edges' layout, not broadcast: with AQE off a broadcast is a job of
+      // its own, and a broadcastable rank table bounds every out-degree.
       val sums = eDeg
-        .join(pr.withColumnRenamed("node", "__src"), "__src")
+        .join(pr.withColumnRenamed("node", "__src").hint("shuffle_hash"), "__src")
         .select(col("__dst").as("node"),
           round(col("pr") * col("__w") / col("__wsum") * lit(1e9))
             .cast("long").as("__nano"))
@@ -733,11 +725,11 @@ object Graphs {
     // round r chains iterations 4r-3..4r lazily and is checkpointed.
     // The last checkpoint is the RESULT, registered with Caches (a
     // collectPins scope releases it after materializing downstream).
-    Loop.iterate(nodes.select(col("node"), col("__init").as("pr")),
+    Loop.rebind(Loop.iterate(nodes.select(col("node"), col("__init").as("pr")),
         rounds = (iterations + 3) / 4) { (pr, r) =>
       Some((4 * r - 3 to math.min(4 * r, iterations))
         .foldLeft(pr)((p, _) => powerStep(p)))
-    }
+    }, spark)
   }
 
   /** FUSED forward+backward min-label fixpoint: one loop carries both
@@ -759,7 +751,7 @@ object Graphs {
       nodes.select(col("node"), col("node").as("__f"), col("node").as("__b"))
         .localCheckpoint(true),
       rounds = maxIters,
-      until = (lab, _) => lab.where(col("__chg")).limit(1).count() == 0,
+      until = (lab, _, _) => lab.where(col("__chg")).limit(1).count() == 0,
       unconverged = Some(s"$what did not converge in $maxIters iterations — " +
         "the reachability depth exceeds maxIters; raise it")) { (lab, _) =>
       val candF = e
@@ -1376,7 +1368,7 @@ object Graphs {
             .withColumn("hops", lit(0L))
             .localCheckpoint(true),
           rounds = maxHops,
-          until = (visited, h) =>
+          until = (visited, h, _) =>
             visited.where(col("hops") === h).limit(1).count() == 0) {
           (visited, h) =>
             val frontier = visited.where(col("hops") === (h - 1))
@@ -1456,7 +1448,7 @@ object Graphs {
       var maxDist = 0
       // ---- forward: σ-accumulating BFS ----
       val visited = Loop.iterate(visited0, rounds = maxHops,
-        until = (visited, h) => {
+        until = (visited, h, _) => {
           val mx = visited.where(col("dist") === h)
             .agg(max(col("sigma")).as("m")).head().getAs[Any]("m")
           if (mx != null) {

@@ -111,30 +111,6 @@ object RankEval {
           col("__idcgN").cast("double"), 6).as("ndcg"))
   }
 
-  /** Exact ROC-AUC of a binary scorer — the Mann–Whitney identity
-    * `AUC = P(s⁺ > s⁻) + ½·P(s⁺ = s⁻)` computed from per-distinct-score
-    * counts, NOT from per-row global ranks:
-    *
-    *   2·AUC·P·N = Σₛ (2·posₛ·negBelowₛ + posₛ·negₛ)
-    *
-    * All terms are BIGINT up to the one final division, so the value is
-    * engine- and partitioning-exact (ties handled by the ½ term — the
-    * trapezoidal tie convention every library uses).
-    *
-    * Scale shape: ONE corpus-sized `groupBy(score)` with map-side
-    * partials; the neg-below prefix runs on the distinct-scores table
-    * via range-repartition + per-physical-partition window + a
-    * broadcast of per-partition offsets (the [[Sampling.deterministicShuffle]]
-    * discipline) — a plain un-partitioned window would collapse a
-    * continuous score column's distinct table into ONE task at 100×.
-    *
-    * Loud contracts: labels must be 0/1 after an int cast and scores
-    * non-NULL (a NULL score has no rank position; null ordering is not
-    * engine-portable) — violations fail with counts, never dilute.
-    * Output: one row `(n_pos, n_neg, auc)`; `auc` NULL when either
-    * class is absent (undefined, not 0 — an all-one-class eval set is
-    * a harness bug worth surfacing).
-    */
   /** Per-group ROC-AUC — the sliced-evaluation / fairness-audit form
     * of [[aucRoc]]: one AUC row per distinct value of `groupCols`
     * (NULL is a group), same exact-integer Mann–Whitney identity, same
@@ -176,6 +152,30 @@ object RankEval {
             (lit(2L) * col("n_pos") * col("n_neg"))), 6).as("auc")): _*)
   }
 
+  /** Exact ROC-AUC of a binary scorer — the Mann–Whitney identity
+    * `AUC = P(s⁺ > s⁻) + ½·P(s⁺ = s⁻)` computed from per-distinct-score
+    * counts, NOT from per-row global ranks:
+    *
+    *   2·AUC·P·N = Σₛ (2·posₛ·negBelowₛ + posₛ·negₛ)
+    *
+    * All terms are BIGINT up to the one final division, so the value is
+    * engine- and partitioning-exact (ties handled by the ½ term — the
+    * trapezoidal tie convention every library uses).
+    *
+    * Scale shape: ONE corpus-sized `groupBy(score)` with map-side
+    * partials; the neg-below prefix runs on the distinct-scores table
+    * via range-repartition + per-physical-partition window + a
+    * broadcast of per-partition offsets (the [[Sampling.deterministicShuffle]]
+    * discipline) — a plain un-partitioned window would collapse a
+    * continuous score column's distinct table into ONE task at 100×.
+    *
+    * Loud contracts: labels must be 0/1 after an int cast and scores
+    * non-NULL (a NULL score has no rank position; null ordering is not
+    * engine-portable) — violations fail with counts, never dilute.
+    * Output: one row `(n_pos, n_neg, auc)`; `auc` NULL when either
+    * class is absent (undefined, not 0 — an all-one-class eval set is
+    * a harness bug worth surfacing).
+    */
   def aucRoc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
     aucFromScoreCounts(aucScoreCounts(df, scoreCol, labelCol, Nil, "aucRoc"))
 

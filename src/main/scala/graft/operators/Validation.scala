@@ -675,9 +675,12 @@ object Validation {
     *
     * Rows with value ≤ 0 or NULL have no leading digit and are counted
     * out loudly in a separate `digit = 0` row (a silently-shrunk
-    * denominator would fake conformity). The leading digit comes from
-    * STRING formatting of the absolute integer part — engine-exact for
-    * integer-cast inputs (pass micros for decimals). χ² terms are
+    * denominator would fake conformity); so are rows with no LONG
+    * integer part — NaN, ±Inf, |v| ≥ 2^63 ≈ 9.2e18, non-numeric
+    * strings — which a plain ANSI cast would instead abort the job on.
+    * The leading digit comes from STRING formatting of the integer
+    * part — engine-exact for integer-cast inputs (pass micros for
+    * decimals). χ² terms are
     * nano-quantized; expected probabilities are embedded double
     * literals (log10 is not portable — the [[graft.operators.RankEval]]
     * discount-table discipline).
@@ -690,7 +693,7 @@ object Validation {
     * ([[graft.streaming.StreamingOps.benfordLogSink]]).
     */
   private[graft] def benfordDigitCounts(df: DataFrame, valueCol: String): DataFrame = {
-    val v = col(valueCol).cast("long")
+    val v = col(valueCol).try_cast("long")
     val digit = when(v.isNull || v <= 0L, lit(0))
       .otherwise(substring(v.cast("string"), 1, 1).cast("int"))
     df.groupBy(digit.as("digit")).agg(count(lit(1)).as("n"))

@@ -20,14 +20,16 @@ class CodegenReuseSpec extends SparkTestBase {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
-  // a 4-clique, a triangle hanging off it and a tail: three peel levels
+  // a 4-clique, a triangle hanging off it and a tail: three core levels
   private lazy val edges = Seq(
     (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
     (4L, 5L), (5L, 6L), (4L, 6L), (6L, 7L), (7L, 8L),
     (10L, 11L)).toDF("src", "dst")
 
   private val calls: Seq[(String, () => Unit)] = Seq(
+    "Graphs.pageRank" -> (() => Graphs.pageRank(edges, "src", "dst").collect()),
     "Graphs.coreness" -> (() => Graphs.coreness(edges, "src", "dst").collect()),
+    "Graphs.kCore" -> (() => Graphs.kCore(edges, "src", "dst", 2).collect()),
     "Dedup.connectedComponents(stars)" -> (() =>
       Dedup.connectedComponents(edges, "src", "dst", algorithm = "stars").collect()))
 

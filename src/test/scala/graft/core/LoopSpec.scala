@@ -31,7 +31,7 @@ class LoopSpec extends SparkTestBase {
     var probes = 0
     val ex = intercept[IllegalStateException] {
       Loop.iterate(spark.range(4).toDF("x").localCheckpoint(true),
-        rounds = 3, until = (_, _) => { probes += 1; false },
+        rounds = 3, until = (_, _, _) => { probes += 1; false },
         unconverged = Some("no fixpoint in 3 rounds")) { (s, _) =>
         Some(s.select(($"x" * 2).as("x")))
       }

@@ -264,18 +264,74 @@ class GraphsSpec extends SparkTestBase {
       val expect = out.filter(_._2 >= k).keySet
       assert(members == expect, s"k=$k: $members != $expect")
     }
-    // reference peel (min-degree removal) on a small random graph
+    // one disjoint union of graph families (ids prefixed per graph), so
+    // one Spark call covers them all, against the plain-Scala peel
     val rnd = new scala.util.Random(7)
-    val randEdges = (1 to 40).map(_ =>
-      (s"n${rnd.nextInt(12)}", s"n${rnd.nextInt(12)}"))
-      .filter(e => e._1 != e._2).distinct
-    val adj = scala.collection.mutable.Map.empty[String, scala.collection.mutable.Set[String]]
-    randEdges.foreach { case (x, y) =>
-      adj.getOrElseUpdate(x, scala.collection.mutable.Set()) += y
-      adj.getOrElseUpdate(y, scala.collection.mutable.Set()) += x
+    def erdosRenyi(n: Int, p: Double) =
+      for (i <- 0 until n; j <- i + 1 until n if rnd.nextDouble() < p)
+        yield (s"$i", s"$j")
+    def barabasiAlbert(n: Int, m: Int) = {
+      val ends = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      for (i <- 0 to m; j <- 0 until i) { out += ((s"$i", s"$j")); ends ++= Seq(i, j) }
+      (m + 1 until n).foreach { i =>
+        val targets = scala.collection.mutable.LinkedHashSet.empty[Int]
+        while (targets.size < m) targets += ends(rnd.nextInt(ends.size))
+        targets.foreach { t => out += ((s"$i", s"$t")); ends ++= Seq(i, t) }
+      }
+      out.toSeq
     }
-    // textbook ascending peel: at level k remove (cascading) every node
-    // of degree <= k; the removed have coreness k
+    def clique(ids: Seq[String]) =
+      for (i <- ids.indices; j <- i + 1 until ids.size) yield (ids(i), ids(j))
+    def path(ids: Seq[String]) = ids.zip(ids.tail)
+    val families: Seq[(String, Seq[(String, String)])] = Seq(
+      "er_sparse" -> erdosRenyi(30, 0.08),
+      "er_mid" -> erdosRenyi(30, 0.2),
+      "er_dense" -> erdosRenyi(30, 0.35),
+      "ba2" -> barabasiAlbert(60, 2),
+      "ba3" -> barabasiAlbert(60, 3),
+      "path30" -> path((0 until 30).map(_.toString)),
+      "star" -> (1 to 12).map(i => ("hub", s"l$i")),
+      "k6" -> clique((1 to 6).map(_.toString)),
+      "k5_chain" -> (clique((1 to 5).map(_.toString)) ++
+        path(Seq("5", "c1", "c2", "c3"))),
+      "two_k4" -> (clique(Seq("a1", "a2", "a3", "a4")) ++
+        clique(Seq("b1", "b2", "b3", "b4")) ++ path(Seq("a4", "p1", "p2", "b1"))),
+      "messy" -> Seq(("x", "y"), ("y", "x"), ("x", "y"), ("y", "z"), ("z", "x"),
+        ("z", "z"), ("w", "w"), (null, "x"), ("y", null), (null, null), ("z", "v")))
+    val union = families.flatMap { case (g, es) =>
+      def id(v: String) = if (v == null) null else s"$g:$v"
+      es.map { case (x, y) => (id(x), id(y)) }
+    }
+    val unionDf = union.toDF("src", "dst")
+    val want = referenceCoreness(union)
+    val got = Graphs.coreness(unionDf, "src", "dst")
+      .collect().map(r => r.getString(0) -> r.getAs[Long]("coreness")).toMap
+    assert(got == want, s"coreness differs from the peel at " +
+      (got.keySet ++ want.keySet).filter(v => got.get(v) != want.get(v)).take(5)
+        .map(v => s"$v: ${got.get(v)} vs ${want.get(v)}").mkString(", "))
+    // every k-core: membership and in-core degree, and one empty level
+    val adj = simpleAdjacency(union)
+    (1L to want.values.max + 1).foreach { k =>
+      val members = want.filter(_._2 >= k).keySet
+      val wantK = members.map(v => v -> adj(v).count(members).toLong).toMap
+      val gotK = Graphs.kCore(unionDf, "src", "dst", k.toInt)
+        .collect().map(r => r.getString(0) -> r.getAs[Long]("degree")).toMap
+      assert(gotK == wantK, s"k=$k: ${gotK.size} members vs ${wantK.size}")
+    }
+  }
+
+  /** The simple undirected graph of `edges`: NULL endpoints and
+    * self-loops drop, duplicate and reversed edges collapse. */
+  private def simpleAdjacency(edges: Seq[(String, String)]): Map[String, Set[String]] =
+    edges.collect { case (x, y) if x != null && y != null && x != y => Seq(x -> y, y -> x) }
+      .flatten.groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
+
+  /** Reference coreness: the textbook ascending peel — at level k remove,
+    * cascading, every node of degree ≤ k; the removed have coreness k. */
+  private def referenceCoreness(edges: Seq[(String, String)]): Map[String, Long] = {
+    val adj = scala.collection.mutable.Map.empty[String, scala.collection.mutable.Set[String]]
+    simpleAdjacency(edges).foreach { case (v, ns) => adj(v) = scala.collection.mutable.Set(ns.toSeq: _*) }
     val ref = scala.collection.mutable.Map.empty[String, Long]
     var k = 1L
     while (adj.nonEmpty) {
@@ -291,9 +347,7 @@ class GraphsSpec extends SparkTestBase {
       }
       k += 1
     }
-    val got = Graphs.coreness(randEdges.toDF("src", "dst"), "src", "dst")
-      .collect().map(r => r.getString(0) -> r.getAs[Long]("coreness")).toMap
-    assert(got == ref.toMap, s"random graph: $got != $ref")
+    ref.toMap
   }
 
   test("degreeAssortativity: star is -1, regular cycle has no variance (null)") {

@@ -440,6 +440,13 @@ class ValidationSpec extends SparkTestBase {
       .where(col("digit") > 0)
       .agg(sum(col("chi2_term"))).head().getDouble(0)
     assert(chi < 1.0, s"near-Benford sample chi2 was $chi")
+    // a DOUBLE column: NaN, ±Inf and |v| ≥ 2^63 have no LONG integer
+    // part, so they join the digit-0 bucket instead of aborting the job
+    val wild = Seq(12.5, 3.0, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1e19, -1e19)
+    val outW = Validation.benfordAudit(wild.toDF("v"), "v")
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(outW == Map(0 -> 5L, 1 -> 1L, 3 -> 1L), s"$outW")
   }
 
   test("ksStatistic matches the hand-walked CDF gap; exact edges") {

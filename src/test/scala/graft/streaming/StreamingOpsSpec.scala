@@ -1267,21 +1267,25 @@ class StreamingOpsSpec extends SparkTestBase {
     // --- benford
     val blog = root + "/benford"
     val srcB = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Option[Long]]
+      .MemoryStream[Option[Double]]
     val qB = StreamingOps.benfordLogSink(srcB.toDS().toDF("v"), "v", blog)
       .option("checkpointLocation", root + "/ckb").start()
-    val b1 = Seq.tabulate(50)(i => Some((i * 137 + 1).toLong))
-    val b2 = Seq.tabulate(30)(i => Some((i * 29 + 7).toLong)) ++
-      Seq(Some(-3L), None)
+    val b1 = Seq.tabulate(50)(i => Some((i * 137 + 1).toDouble))
+    val b2 = Seq.tabulate(30)(i => Some((i * 29 + 7).toDouble)) ++
+      Seq(Some(-3.0), None)
+    // no LONG integer part: the digit-0 bucket, not a failed batch
+    val b3 = Seq(Double.NaN, Double.PositiveInfinity, -1e19, 42.0).map(Some(_))
     try {
       srcB.addData(b1: _*); qB.processAllAvailable()
       srcB.addData(b2: _*); qB.processAllAvailable()
+      srcB.addData(b3: _*); qB.processAllAvailable()
       val streamed = StreamingOps.benfordFromLog(spark, blog)
         .collect().map(r => r.getInt(0) -> r.toSeq).toMap
       val batch = graft.operators.Validation.benfordAudit(
-        (b1 ++ b2).toDF("v"), "v")
+        (b1 ++ b2 ++ b3).toDF("v"), "v")
         .collect().map(r => r.getInt(0) -> r.toSeq).toMap
       assert(streamed == batch, s"$streamed vs $batch")
+      assert(streamed(0)(1) == 5L, s"digit 0: -3, NULL, NaN, +Inf, -1e19: $streamed")
     } finally qB.stop()
     // --- cusum
     val clog = root + "/cusum"
