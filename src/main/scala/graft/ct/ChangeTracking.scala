@@ -431,7 +431,9 @@ object ChangeTracking {
     * `ts` is already gone, its successor (starting at `ts`) is visible —
     * so every key resolves to AT MOST ONE row for any `ts`. Keys first
     * seen after `ts` are absent. Pure filter over the partition-prunable
-    * parquet — no shuffle, no window.
+    * parquet — no shuffle, no window. The target is read like every merge
+    * reads it ([[TableStore]]: path or catalog name, crash recovery
+    * first), without the internal bucket column.
     */
   def asOf(
       spark: SparkSession,
@@ -439,7 +441,8 @@ object ChangeTracking {
       ts: org.apache.spark.sql.Column,
       effectiveCol: String = "effective_start_ts",
       expiryCol: String = "effective_end_ts"): DataFrame = {
-    val df = spark.read.parquet(target)
+    require(TableStore.exists(spark, target), s"asOf: '$target' does not exist")
+    val df = TableStore.read(spark, target).drop(TableStore.BucketCol)
     require(df.columns.contains(effectiveCol) && df.columns.contains(expiryCol),
       s"asOf: '$target' is not a track-history table " +
         s"(missing $effectiveCol/$expiryCol)")

@@ -49,55 +49,17 @@ case class BpeApplyMerges(
   override def prettyName: String = "graft_bpe_apply"
 
   @transient private lazy val mergeArr: Array[(String, String, String)] =
-    merges.map { case (l, r) =>
-      val product =
-        if (contPrefix.nonEmpty && r.startsWith(contPrefix))
-          l + r.substring(contPrefix.length)
-        else l + r
-      (l, r, product)
-    }.toArray
+    BpeApplyMerges.prepare(merges, contPrefix)
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var syms = new java.util.ArrayList[String](n)
-    val present = new java.util.HashSet[String]()
+    val syms = new Array[String](arr.numElements())
     var i = 0
-    while (i < n) {
-      val s = arr.getUTF8String(i).toString
-      syms.add(s)
-      present.add(s): Unit
-      i += 1
-    }
-    var m = 0
-    while (m < mergeArr.length) {
-      val l = mergeArr(m)._1
-      val r = mergeArr(m)._2
-      val prod = mergeArr(m)._3
-      // necessary condition only — stale `present` entries (symbols fully
-      // consumed by earlier merges) cost a wasted pass, never wrong output
-      if (syms.size > 1 && present.contains(l) && present.contains(r)) {
-        val out = new java.util.ArrayList[String](syms.size)
-        var merged = false
-        var j = 0
-        while (j < syms.size) {
-          val x = syms.get(j)
-          if (!out.isEmpty && out.get(out.size - 1) == l && x == r) {
-            out.set(out.size - 1, prod)
-            merged = true
-          } else out.add(x): Unit
-          j += 1
-        }
-        if (merged) {
-          syms = out
-          present.add(prod): Unit
-        }
-      }
-      m += 1
-    }
-    val res = new Array[Any](syms.size)
+    while (i < syms.length) { syms(i) = arr.getUTF8String(i).toString; i += 1 }
+    val out = BpeApplyMerges.rewrite(syms, mergeArr)
+    val res = new Array[Any](out.length)
     var k = 0
-    while (k < syms.size) { res(k) = UTF8String.fromString(syms.get(k)); k += 1 }
+    while (k < out.length) { res(k) = UTF8String.fromString(out(k)); k += 1 }
     new GenericArrayData(res)
   }
 
@@ -106,6 +68,56 @@ case class BpeApplyMerges(
 }
 
 object BpeApplyMerges {
+  /** The symbol merging `l` with `r` produces: `l + r`, less `r`'s
+    * leading `contPrefix` when one is set. */
+  def product(l: String, r: String, contPrefix: String): String =
+    if (contPrefix.nonEmpty && r.startsWith(contPrefix))
+      l + r.substring(contPrefix.length)
+    else l + r
+
+  /** `(left, right, product)` per merge, in application order. */
+  def prepare(
+      merges: Seq[(String, String)],
+      contPrefix: String): Array[(String, String, String)] =
+    merges.map { case (l, r) => (l, r, product(l, r, contPrefix)) }.toArray
+
+  /** `syms` rewritten under the [[prepare]]d `merges` — the one definition
+    * of merge application, shared by this expression and the driver-side
+    * trainer (`graft.operators.MergeTraining`). `syms` is never mutated;
+    * the result may be `syms` itself when no merge applies.
+    */
+  def rewrite(syms: Array[String], merges: Array[(String, String, String)]): Array[String] = {
+    var cur = syms
+    var n = syms.length
+    val present = new java.util.HashSet[String]()
+    var i = 0
+    while (i < n) { present.add(cur(i)): Unit; i += 1 }
+    var m = 0
+    while (m < merges.length) {
+      val (l, r, prod) = merges(m)
+      // necessary condition only — stale `present` entries (symbols fully
+      // consumed by earlier merges) cost a wasted pass, never wrong output
+      if (n > 1 && present.contains(l) && present.contains(r)) {
+        val out = new Array[String](n)
+        var k = 0
+        var j = 0
+        while (j < n) {
+          val x = cur(j)
+          if (k > 0 && out(k - 1) == l && x == r) out(k - 1) = prod
+          else { out(k) = x; k += 1 }
+          j += 1
+        }
+        if (k < n) {
+          cur = out
+          n = k
+          present.add(prod): Unit
+        }
+      }
+      m += 1
+    }
+    if (n == cur.length) cur else java.util.Arrays.copyOf(cur, n)
+  }
+
   /** Column face: `syms` rewritten under `merges` in rank order. */
   def apply(syms: Column, merges: Seq[(String, String)]): Column =
     GraftSqlBridge.column(BpeApplyMerges(GraftSqlBridge.expression(syms), merges))

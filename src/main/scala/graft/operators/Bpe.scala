@@ -22,14 +22,17 @@ import graft.core.Loop
   *    iteration after that runs on vocabulary-sized data, not corpus-sized
   *    data. At 100 TB the word-type table is millions of rows, not
   *    billions.
-  *  - Each round is one aggregation over adjacent symbol pairs (weighted
-  *    `sum(count)`), a `TakeOrdered` argmax with a total (count desc,
-  *    pair asc) tie-break — deterministic across runs, engines, and
-  *    partitionings — and a pure-expression greedy left-to-right merge
-  *    fold (`aggregate`, no UDF) applied to the symbol arrays.
-  *  - Round state is `localCheckpoint`ed and the previous round's blocks
-  *    released, truncating the logical plan: an iterative chain that is
-  *    merely persisted re-analyzes its whole lineage every round (see the
+  *  - Each round counts adjacent symbol pairs (weighted `sum(count)`),
+  *    takes the top candidates with a total (count desc, pair asc)
+  *    tie-break — deterministic across runs, engines, and partitionings —
+  *    and applies the accepted merges to the symbol arrays with one
+  *    greedy left-to-right rewrite ([[graft.functions.BpeApplyMerges]]).
+  *  - A small word-type table (below [[MergeTraining.LocalCellBound]]
+  *    cells) is collected once and its rounds run in driver memory. A
+  *    larger one runs each round as Spark jobs whose state is
+  *    `localCheckpoint`ed and the previous round's blocks released,
+  *    truncating the logical plan: an iterative chain that is merely
+  *    persisted re-analyzes its whole lineage every round (see the
   *    measured blowup note in connectedComponents).
   *
   * Merges learn over whitespace word boundaries with the standard
@@ -86,17 +89,6 @@ object Bpe {
     graft.functions.BpeApplyMerges(syms,
       ms.sortBy(_.rank).map(m => (m.left, m.right)))
 
-  /** Adjacent-pair frequencies of the current word-type table:
-    * `(__l, __r, __cnt)` weighted by word count. */
-  private def pairCounts(wt: DataFrame): DataFrame =
-    wt.where(size(col("__syms")) >= 2)
-      .select(col("__n"), explode(transform(
-        sequence(lit(0), size(col("__syms")) - 2),
-        i => struct(element_at(col("__syms"), i + 1).as("l"),
-          element_at(col("__syms"), i + 2).as("r")))).as("__p"))
-      .groupBy(col("__p.l").as("__l"), col("__p.r").as("__r"))
-      .agg(sum(col("__n")).as("__cnt"))
-
   /** Learn up to `numMerges` merges from `docs`. Stops early when the best
     * remaining pair's weighted count falls below `minPairCount`. Returns
     * the merges in rank order (a driver-sized list by construction —
@@ -143,6 +135,19 @@ object Bpe {
     * changes another's count), and each carries its true corpus count as
     * of the start of its batch; only the cross-batch interleaving may
     * differ from the sequential algorithm's.
+    *
+    * Two backends run the rounds ([[MergeTraining]]); both apply the rule
+    * above and learn the same merges. The word-type table's size (rows +
+    * Σ|syms|) is observed on its checkpoint job. Below
+    * [[MergeTraining.LocalCellBound]] (1M) cells the table is collected
+    * once and every round runs in driver memory: a Spark round costs a
+    * few scheduled jobs (~75 ms on a few-thousand-row table, ~350 ms at
+    * 1M cells) whatever the data, and 12 merges took 14 of them. At or
+    * above the bound every round stays a Spark job, because the table is
+    * then too large to hold on the driver — the path a production
+    * vocabulary trained over a large corpus takes. The returned table is
+    * then a checkpoint; a driver-trained one is a driver-local frame of
+    * the same schema (the initial checkpoint when nothing merged).
     */
   def learnMerges(
       docs: DataFrame,
@@ -159,8 +164,11 @@ object Bpe {
     * syms)` word-type table — the whitespace/character alphabet
     * ([[learnMerges]]) and the GPT-2 byte alphabet
     * ([[learnByteMerges]]) differ only in how `__syms` was built; the
-    * selection rule, the barrier proof, and the checkpoint-rotation
-    * lifecycle are alphabet-agnostic.
+    * selection rule, the barrier proof, and the checkpoint lifecycle are
+    * alphabet-agnostic. The rounds run on the driver below
+    * [[MergeTraining.LocalCellBound]] cells and as Spark jobs at or above
+    * it (see [[learnMerges]]); the Spark path is the one that scales past
+    * driver memory.
     */
   private def learnLoop(
       wordTypes0: DataFrame,
@@ -173,65 +181,26 @@ object Bpe {
     require(minPairCount >= 1L, s"minPairCount must be >= 1, got $minPairCount")
     require(batchSize >= 1 && batchSize <= 256,
       s"batchSize must be in [1, 256], got $batchSize")
-    val merges = Seq.newBuilder[Merge]
-    var rank = 0
-    // the RETURNED state is registered (not released): the caller reads it
-    val wt = Loop.iterate(wordTypes0.localCheckpoint(true)) { (wt, _) =>
-      if (rank >= numMerges) None
-      else {
-        val want = math.min(batchSize, numMerges - rank)
-        // over-fetch so the disjointness scan has room to fill the batch;
-        // the size only bounds batch yield, never correctness
-        val topN = want * 4 + 8
-        val cands = pairCounts(wt)
-          .orderBy(col("__cnt").desc, col("__l").asc, col("__r").asc)
-          .limit(topN).collect()
-          .map(r => (r.getAs[String]("__l"), r.getAs[String]("__r"),
-            r.getAs[Long]("__cnt")))
-        if (cands.isEmpty || cands.head._3 < minPairCount) None
-        else {
-          // greedy disjoint scan; exact mode stops at the first sharing
-          // candidate and trims by the barrier (see scaladoc), approximate
-          // mode skips sharing candidates and keeps filling the batch
-          val used = scala.collection.mutable.Set.empty[String]
-          val picked = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-          var barrier = // unseen pairs exist only if the fetch truncated
-            if (cands.length == topN) cands.last._3 else Long.MinValue
-          var scanning = true
-          // exact-mode invariant: `barrier` ends ≥ the count of EVERY
-          // candidate not accepted — seen (sharing / batch-full / below
-          // min) or unseen (bounded by the count where the scan stopped,
-          // or by the truncation tail) — so `c > barrier` certifies no
-          // disturbed pair can tie an accepted merge
-          cands.iterator.takeWhile(_ => scanning).foreach { case c @ (l, r, _) =>
-            if (used.contains(l) || used.contains(r)) {
-              if (exact) {
-                barrier = math.max(barrier, c._3)
-                scanning = false // first sharing candidate caps the batch
-              } // approximate: skip and keep scanning
-            } else if (picked.size < want && c._3 >= minPairCount) {
-              picked += c; used += l; used += r
-            } else { // batch full, or counts sorted below minPairCount
-              barrier = math.max(barrier, c._3)
-              scanning = false
-            }
-          }
-          val safe =
-            if (exact) picked.head +: picked.tail
-              .takeWhile { case (_, _, c) => c > barrier && c >= minPairCount }
-            else picked.toSeq
-          val batch = safe.map { case (l, r, _) =>
-            val m = Merge(rank, l, r)
-            rank += 1
-            m
-          }.toSeq
-          merges ++= batch
-          // ONE merge-application expression for the whole batch
-          Some(wt.withColumn("__syms", applyMergesExpr(col("__syms"), batch)))
-        }
-      }
+    val rounds = new MergeTraining.Rounds(numMerges, batchSize, minPairCount, exact)
+    // the RETURNED table is registered (not released): the caller reads it
+    val wt = Loop.holding { held =>
+      val table = MergeTraining.open(held, wordTypes0)
+      table.learn(rounds, ByCount, contPrefix = "")
+      table.result()
     }
-    (merges.result(), wt)
+    (rounds.accepted.zipWithIndex.map { case ((l, r), i) => Merge(i, l, r) }, wt)
+  }
+
+  /** BPE's candidate order: weighted count desc, then the pair. */
+  private object ByCount extends MergeTraining.Ranking {
+    def onSpark(wt: DataFrame, n: Int): IndexedSeq[MergeTraining.Cand] =
+      MergeTraining.pairCounts(wt)
+        .orderBy(col("__cnt").desc, col("__l").asc, col("__r").asc)
+        .limit(n).collect().toIndexedSeq
+        .map(r => MergeTraining.Cand(r.getString(0), r.getString(1), r.getLong(2)))
+
+    def onDriver(t: MergeTraining.LocalTable, n: Int): IndexedSeq[MergeTraining.Cand] =
+      MergeTraining.top(t.pairs, n)(MergeTraining.ByCountOrder)
   }
 
   /** Apply learned merges to a NEW corpus: `(idCol, bpe_tokens)` with each

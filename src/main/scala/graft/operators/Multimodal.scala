@@ -73,13 +73,6 @@ object Multimodal {
     }(RowEncoder.encoderFor(outSchema))
   }
 
-  /** STUB resize: deterministic fake — digest of (content ++ "WxH") — with
-    * the real operator shape (binary in, binary out, target dims).
-    */
-  def resizeStub(content: org.apache.spark.sql.Column, width: Int, height: Int)
-      : org.apache.spark.sql.Column =
-    sha2(concat(content, lit(s"${width}x$height").cast("binary")), 256).cast("binary")
-
   /** Sample up to `n` fixed-size "frames" (chunks) from a binary payload —
     * the video-frame-sampling operator shape. Pure expressions: substr over
     * binary works bytewise.

@@ -21,9 +21,10 @@ import graft.core.Loop
   * (`##a + ##b → ##ab`).
   *
   * Scale shape — identical to [[Bpe.learnMerges]]: the corpus is
-  * touched EXACTLY ONCE (word-TYPE table), every round runs two
-  * vocabulary-sized aggregates (adjacent-pair counts; per-symbol
-  * counts for the score denominators), and rounds are batched with the
+  * touched EXACTLY ONCE (word-TYPE table), every round counts adjacent
+  * pairs and symbols (the score denominators) over the vocabulary-sized
+  * table — in driver memory below [[MergeTraining.LocalCellBound]]
+  * cells, as Spark aggregates otherwise — and rounds are batched with the
   * compatible-batching contract of `Bpe.learnMerges(exact = false)`:
   * candidates are scanned in (score desc, pair asc) order and accepted
   * while their symbols are disjoint from every previously accepted
@@ -72,28 +73,41 @@ object WordPiece {
       .withColumn("__syms", initialSymbols(col("__word")))
   }
 
-  /** Adjacent-pair counts + per-symbol counts → likelihood scores.
-    * `(__l, __r, __cnt, __score)`, `__cnt >= minPairCount` only.
+  /** WordPiece's candidate order: pairs counted at least `minPairCount`
+    * times, by likelihood score desc, then the pair. The score is
+    * `count(l·r) / (count(l) · count(r))` in doubles — on the driver the
+    * same IEEE operations Spark runs, so ties break identically.
     */
-  private def scoredPairs(wt: DataFrame, minPairCount: Long): DataFrame = {
-    val pairs = wt.where(size(col("__syms")) >= 2)
-      .select(col("__n"), explode(transform(
-        sequence(lit(0), size(col("__syms")) - 2),
-        i => struct(element_at(col("__syms"), i + 1).as("l"),
-          element_at(col("__syms"), i + 2).as("r")))).as("__p"))
-      .groupBy(col("__p.l").as("__l"), col("__p.r").as("__r"))
-      .agg(sum(col("__n")).as("__cnt"))
-      .where(col("__cnt") >= minPairCount)
-    val syms = wt.select(col("__n"), explode(col("__syms")).as("__s"))
-      .groupBy("__s").agg(sum(col("__n")).as("__sc"))
-    pairs
-      .join(syms.select(col("__s").as("__l"), col("__sc").as("__lc")), Seq("__l"))
-      .join(syms.select(col("__s").as("__r"), col("__sc").as("__rc")), Seq("__r"))
-      .withColumn("__score",
-        col("__cnt").cast("double") /
-          (col("__lc").cast("double") * col("__rc").cast("double")))
-      .select("__l", "__r", "__cnt", "__score")
+  private final case class ByLikelihood(minPairCount: Long) extends MergeTraining.Ranking {
+    def onSpark(wt: DataFrame, n: Int): IndexedSeq[MergeTraining.Cand] = {
+      val syms = MergeTraining.symbolCounts(wt)
+      MergeTraining.pairCounts(wt).where(col("__cnt") >= minPairCount)
+        .join(syms.select(col("__s").as("__l"), col("__sc").as("__lc")), Seq("__l"))
+        .join(syms.select(col("__s").as("__r"), col("__sc").as("__rc")), Seq("__r"))
+        .withColumn("__score",
+          col("__cnt").cast("double") /
+            (col("__lc").cast("double") * col("__rc").cast("double")))
+        .orderBy(col("__score").desc, col("__l").asc, col("__r").asc)
+        .select("__l", "__r", "__cnt")
+        .limit(n).collect().toIndexedSeq
+        .map(r => MergeTraining.Cand(r.getString(0), r.getString(1), r.getLong(2)))
+    }
+
+    def onDriver(t: MergeTraining.LocalTable, n: Int): IndexedSeq[MergeTraining.Cand] = {
+      val sc = t.symbolCounts
+      val scored = t.pairs.filter(_.cnt >= minPairCount).map { c =>
+        (c, c.cnt.toDouble / (sc.get(c.l)(0).toDouble * sc.get(c.r)(0).toDouble))
+      }
+      MergeTraining.top(scored, n)(ScoreOrder).map(_._1)
+    }
   }
+
+  /** (score desc, l, r), strings in Spark's order. */
+  private val ScoreOrder: Ordering[(MergeTraining.Cand, Double)] =
+    (a: (MergeTraining.Cand, Double), b: (MergeTraining.Cand, Double)) => {
+      val s = java.lang.Double.compare(b._2, a._2)
+      if (s != 0) s else MergeTraining.comparePairs(a._1, b._1)
+    }
 
   /** Train a WordPiece vocabulary of up to `vocabSize` pieces:
     * `[UNK]` (id 0), the corpus alphabet (every initial symbol, sorted
@@ -101,6 +115,16 @@ object WordPiece {
     * acceptance order, first-win deduplicated (two symbol-disjoint
     * merges can fuse to the same string, e.g. a+##bc and ab+##c).
     * Returns `(piece, token_id)`.
+    *
+    * The rounds run on [[Bpe.learnMerges]]' two backends
+    * ([[MergeTraining]]), which pick the same merges: below
+    * [[MergeTraining.LocalCellBound]] (1M) cells (rows + Σ|syms|,
+    * observed on the word-type checkpoint job) the table is collected
+    * once and every round — pair and symbol counts, scores, selection,
+    * rewrite — runs in driver memory, instead of the joins and
+    * checkpoint each Spark round schedules. At or above the bound every
+    * round stays a Spark job: the table is then too large for the
+    * driver, and the Spark path is the one that scales with it.
     */
   def train(
       docs: DataFrame,
@@ -116,10 +140,9 @@ object WordPiece {
       s"batchSize must be in [1, 256], got $batchSize")
     val spark = docs.sparkSession
     Loop.holding { held =>
-      val wt0 = held(wordTypes(docs, textCol, lowercase))
+      val table = MergeTraining.open(held, wordTypes(docs, textCol, lowercase))
       // the alphabet is driver-bounded by the corpus's distinct chars ×2
-      val alphabet = wt0.select(explode(col("__syms")).as("__s"))
-        .distinct().collect().map(_.getString(0)).sorted
+      val alphabet = table.alphabet().sorted
       require(alphabet.nonEmpty,
         "WordPiece.train: corpus has no tokens — nothing to train on")
       // [UNK] + the full alphabet are the coverage floor and are never
@@ -131,41 +154,16 @@ object WordPiece {
           s"(need >= ${1 + alphabet.length}); coverage floor is " +
           "non-negotiable, so raise vocabSize")
       val budget = vocabSize - 1 - alphabet.length // [UNK] + alphabet first
+      // compatible batching: accept symbol-disjoint candidates in score
+      // order, skip sharing ones (the Bpe exact=false contract)
+      val rounds = new MergeTraining.Rounds(budget, batchSize, minPairCount, exact = false)
+      table.learn(rounds, ByLikelihood(minPairCount), ContinuationPrefix)
       val pieces = new scala.collection.mutable.LinkedHashSet[String]
       pieces += UnkToken
       alphabet.foreach(pieces += _)
-      var accepted = 0
-      held.adopt(Loop.iterate(wt0) { (wt, _) =>
-        if (accepted >= budget) None
-        else {
-          val want = math.min(batchSize, budget - accepted)
-          val topN = want * 4 + 8
-          val cands = scoredPairs(wt, minPairCount)
-            .orderBy(col("__score").desc, col("__l").asc, col("__r").asc)
-            .limit(topN).collect()
-            .map(r => (r.getAs[String]("__l"), r.getAs[String]("__r")))
-          if (cands.isEmpty) None
-          else {
-            // compatible batching: accept symbol-disjoint candidates in
-            // score order, skip sharing ones (the exact=false contract)
-            val used = scala.collection.mutable.Set.empty[String]
-            val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-            cands.iterator.foreach { case (l, r) =>
-              if (batch.size < want && !used.contains(l) && !used.contains(r)) {
-                batch += ((l, r)); used += l; used += r
-              }
-            }
-            // non-empty by construction: the top candidate always fits
-            batch.foreach { case (l, r) =>
-              pieces += (if (r.startsWith(ContinuationPrefix))
-                l + r.substring(ContinuationPrefix.length) else l + r)
-            }
-            accepted += batch.size
-            Some(wt.withColumn("__syms", graft.functions.BpeApplyMerges(
-              col("__syms"), batch.toSeq, ContinuationPrefix)))
-          }
-        }
-      })
+      rounds.accepted.foreach { case (l, r) =>
+        pieces += graft.functions.BpeApplyMerges.product(l, r, ContinuationPrefix)
+      }
       // vocabSize caps merge products; [UNK] + the alphabet are never
       // evicted (the Unigram chars-floor discipline — coverage first)
       import spark.implicits._

@@ -76,6 +76,45 @@ class ChangeTrackingSpec extends SparkTestBase {
     assert(e.getMessage.contains("track-history"))
   }
 
+  test("asOf on a bucketed SCD2 target matches flat, without the bucket column") {
+    val flat = tmpTarget()
+    val bucketed = tmpTarget()
+    val b1 = (1L to 12L).map(i => (i, s"v$i", 100L)).toDF("id", "val", "ts")
+    val b2 = Seq((3L, "v3x", 200L), (13L, "v13", 200L)).toDF("id", "val", "ts")
+    for ((tgt, nb) <- Seq((flat, None), (bucketed, Some(4)))) {
+      ChangeTracking.trackHistoryUpsert(spark, b1, tgt, Seq("id"),
+        orderBy = Seq("ts"), loadTsExpr = ts1, numBuckets = nb)
+      ChangeTracking.trackHistoryUpsert(spark, b2, tgt, Seq("id"),
+        orderBy = Seq("ts"), loadTsExpr = ts2, numBuckets = nb)
+    }
+    def snap(tgt: String) = ChangeTracking.asOf(spark, tgt,
+      to_timestamp(lit("2020-01-15 00:00:00")))
+    val got = snap(bucketed)
+    assert(!got.columns.contains(TableStore.BucketCol), got.columns.toSeq)
+    assert(got.columns.toSet == snap(flat).columns.toSet)
+    val cols = got.columns.sorted.toSeq
+    assert(got.select(cols.map(col): _*).collect().toSet ==
+      snap(flat).select(cols.map(col): _*).collect().toSet)
+    assert(got.count() == 12L)
+  }
+
+  test("asOf reads a catalog-addressed SCD2 target") {
+    val table = "graft_ct_spec_asof_catalog"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    try {
+      val b1 = Seq((1L, "a", 100L), (2L, "b", 100L)).toDF("id", "val", "ts")
+      ChangeTracking.trackHistoryUpsert(spark, b1, table, Seq("id"),
+        orderBy = Seq("ts"), loadTsExpr = ts1)
+      val b2 = Seq((1L, "a2", 200L)).toDF("id", "val", "ts")
+      ChangeTracking.trackHistoryUpsert(spark, b2, table, Seq("id"),
+        orderBy = Seq("ts"), loadTsExpr = ts2)
+      def snap(t: String) = ChangeTracking.asOf(spark, table, to_timestamp(lit(t)))
+        .select("id", "val").as[(Long, String)].collect().toSet
+      assert(snap("2020-01-15 00:00:00") == Set(1L -> "a", 2L -> "b"))
+      assert(snap("2020-02-01 00:00:00") == Set(1L -> "a2", 2L -> "b"))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
   test("SCD2 within-batch multi-version processes ranks oldest to newest") {
     val target = tmpTarget()
     val b = Seq((1L, "v1", 100L), (1L, "v2", 200L), (1L, "v3", 300L))

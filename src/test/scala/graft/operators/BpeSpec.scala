@@ -182,6 +182,58 @@ class BpeSpec extends SparkTestBase {
     assert(m1 == m2)
   }
 
+  /** `learn` on the driver backend, then on the Spark backend: each side's
+    * merges, word-type rows and word-type schema. */
+  private def onBothBackends(learn: => (Seq[Bpe.Merge], org.apache.spark.sql.DataFrame))
+      : Seq[(Seq[Bpe.Merge], Set[(String, Long, Seq[String])], org.apache.spark.sql.types.StructType)] =
+    Seq(Long.MaxValue, 0L).map { bound =>
+      val (merges, wt) = MergeTraining.localBound.withValue(bound)(learn)
+      val rows = wt.as[(String, Long, Seq[String])].collect().toSet
+      graft.core.Caches.releaseCheckpoint(wt)
+      (merges, rows, wt.schema)
+    }
+
+  test("driver and Spark backends learn identical merges, segmentations and schemas") {
+    val docs = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val cases = Seq[(String, () => (Seq[Bpe.Merge], org.apache.spark.sql.DataFrame))](
+      "exact" -> (() => Bpe.learnMerges(docs, "text", numMerges = 12)),
+      "exact = false" -> (() => Bpe.learnMerges(docs, "text", numMerges = 12,
+        batchSize = 8, exact = false)),
+      "batchSize = 1" -> (() => Bpe.learnMerges(docs, "text", numMerges = 6,
+        batchSize = 1)),
+      "byte-level" -> (() => Bpe.learnByteMerges(docs, "text", numMerges = 12)),
+      "minPairCount stop" -> (() => Bpe.learnMerges(docs, "text", numMerges = 12,
+        minPairCount = 8L)),
+      "zero merges" -> (() => Bpe.learnMerges(Seq((1L, "ab cd")).toDF("doc_id", "text"),
+        "text", numMerges = 5)))
+    cases.foreach { case (name, learn) =>
+      val Seq(driver, onSpark) = onBothBackends(learn())
+      assert(driver._1 == onSpark._1, s"$name: merges differ")
+      assert(driver._2 == onSpark._2, s"$name: segmentations differ")
+      assert(driver._3 == onSpark._3, s"$name: schemas differ")
+      name match {
+        case "zero merges" => assert(driver._1.isEmpty)
+        case "minPairCount stop" =>
+          assert(driver._1.nonEmpty && driver._1.size < 12, driver._1)
+        case _ => assert(driver._1.nonEmpty)
+      }
+    }
+  }
+
+  test("candidate ties break in Spark's UTF-8 order on both backends") {
+    // after (a, </w>), the pairs led by U+FF01 and by U+1F600 tie at 2;
+    // UTF-8 bytes put U+FF01 (EF BC 81) first, UTF-16 units put U+1F600
+    // (D83D DE00) first
+    val docs = Seq((1L, "\uFF01a \uD83D\uDE00a \uFF01a \uD83D\uDE00a"))
+      .toDF("doc_id", "text")
+    val want = Seq(("a", Bpe.EndOfWord), ("\uFF01", "a" + Bpe.EndOfWord),
+      ("\uD83D\uDE00", "a" + Bpe.EndOfWord))
+    onBothBackends(Bpe.learnMerges(docs, "text", numMerges = 3)).foreach {
+      case (merges, _, _) => assert(merges.map(m => (m.left, m.right)) == want)
+    }
+  }
+
   // ---- byte-level (GPT-2 family) -----------------------------------
 
   private def refPreTokens(text: String): Vector[String] = {

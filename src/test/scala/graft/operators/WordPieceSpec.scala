@@ -47,6 +47,41 @@ class WordPieceSpec extends SparkTestBase {
       "##bc", "##bcd", "abcd"), s"got $vocab")
   }
 
+  test("driver and Spark backends train identical vocabularies") {
+    val words = (Seq.fill(10)("hug") ++ Seq.fill(5)("pug") ++ Seq.fill(5)("hugs") ++
+      Seq("the quick brown fox jumps over the lazy dog", "the jug the box the fox",
+        "\uFF01a \uD83D\uDE00a \uFF01a \uD83D\uDE00a")).toDF("text")
+    val cases = Seq(
+      ("batchSize = 1", 8, 1L, 1),
+      ("batched", 64, 1L, 8),
+      ("minPairCount stop", 64, 3L, 16),
+      ("zero merges", 0, 2L, 16))
+    val alphabet = 1 + WordPiece.wordTypes(words, "text")
+      .select(explode(col("__syms"))).distinct().count().toInt
+    cases.foreach { case (name, merges, minPairCount, batchSize) =>
+      val Seq(driver, onSpark) = Seq(Long.MaxValue, 0L).map { bound =>
+        val v = MergeTraining.localBound.withValue(bound)(
+          WordPiece.train(words, "text", vocabSize = alphabet + merges,
+            minPairCount = minPairCount, batchSize = batchSize))
+        (v.collect().map(r => (r.getString(0), r.getInt(1))).toSeq, v.schema)
+      }
+      assert(driver == onSpark, s"$name: vocabularies differ")
+      val products = driver._1.size - alphabet
+      if (merges == 0) assert(products == 0, name)
+      else assert(products > 0 && products <= merges, s"$name: $products products")
+      if (name == "minPairCount stop") assert(products < merges, name)
+    }
+    // the U+FF01 / U+1F600 pairs tie on score; Spark's UTF-8 order takes
+    // U+FF01 first
+    val tie = Seq.fill(2)("\uFF01a \uD83D\uDE00a").toDF("text")
+    Seq(Long.MaxValue, 0L).foreach { bound =>
+      val v = MergeTraining.localBound.withValue(bound)(
+        WordPiece.train(tie, "text", vocabSize = 5, minPairCount = 1, batchSize = 1))
+        .select("piece").as[String].collect().toSeq
+      assert(v.last == "\uFF01a", s"got $v")
+    }
+  }
+
   test("encode: greedy longest-match-first, whole-word UNK, maxInputChars, order restored") {
     val vocab = Seq("[UNK]", "un", "##aff", "##able", "##ably", "a",
       "##b", "ab").zipWithIndex.toDF("piece", "token_id")
