@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Exact-lifecycle tracking for the caches and local checkpoints that graft
@@ -19,12 +20,21 @@ import org.apache.spark.storage.StorageLevel
   * SparkContext.
   *
   * Mechanism: a thread-local pin scope. Operators route their internal
-  * persists through [[pin]] and their retained local checkpoints through
-  * [[registerCheckpoint]]; a caller that wants deterministic release wraps
+  * persists through [[pin]]; a caller that wants deterministic release wraps
   * the computation in [[collectPins]], materializes the result (write /
   * collect), then calls [[Pins.release]] on exactly what that computation
   * pinned — nothing else on the context is touched. With no active scope the
   * behavior is unchanged: pins live until the session clears them.
+  *
+  * The one rule for checkpoints: every `localCheckpoint` an operator takes
+  * is owned by one [[holding]] block (`held(df)` takes it). On return the
+  * block registers the checkpoints the result reads with the active scope
+  * and releases the rest; on throw it releases them all. Operators never
+  * register or release a checkpoint by hand — and never `unpersist()` one:
+  * `Dataset.unpersist()` on a `localCheckpoint`ed frame is a no-op, the
+  * storage sits on the RDD behind its plan. The one exception is a
+  * checkpoint handed straight to [[Loop.iterate]] as its round-0 state,
+  * which the loop owns.
   *
   * Thread model: DataFrame *construction* (where `persist`/`localCheckpoint`
   * calls happen) is synchronous on the calling thread, so a scope opened and
@@ -90,27 +100,74 @@ object Caches {
     p
   }
 
-  /** Register an already-`localCheckpoint`ed Dataset's backing RDD with the
-    * active scope, if any. Use for checkpoints the *returned* DataFrame
-    * still references (iteration finals) — intermediates consumed inside
-    * the operator should be freed directly via [[releaseCheckpoint]].
+  /** The checkpoints one [[holding]] block owns, keyed by backing RDD (a
+    * [[Loop.rebind]]ed frame is the same checkpoint). Frames that are not
+    * checkpoint leaves — projections, pinned caches, the caller's
+    * checkpoints seen through a derived plan — are never held, so
+    * `adopt`/`release` on them are no-ops.
     */
-  def registerCheckpoint(df: Dataset[_]): Unit = {
-    val scope = active.get
-    if (scope != null) checkpointRdd(df).foreach(scope.addRdd)
+  final class Held private[Caches] () {
+    private val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** Eager `localCheckpoint(true)` of `df`, held from now on. */
+    def apply(df: DataFrame): DataFrame = adopt(df.localCheckpoint(true))
+
+    /** Hold an existing checkpoint (e.g. a nested loop's result). */
+    def adopt(df: DataFrame): DataFrame = {
+      if (checkpointRdd(df).isDefined) live += df
+      df
+    }
+
+    /** Release `df`'s checkpoint NOW, if held: nothing may read it again. */
+    def release(df: DataFrame): Unit =
+      if (df != null) checkpointRdd(df).foreach { rdd =>
+        val i = live.indexWhere(h => checkpointRdd(h).contains(rdd))
+        if (i >= 0) releaseCheckpoint(live.remove(i))
+      }
+
+    private[Caches] def finish(result: DataFrame): Unit = {
+      val reads: Seq[RDD[_]] = result.queryExecution.analyzed.collectLeaves()
+        .collect { case l: LogicalRDD => l.rdd }
+      val scope = Option(active.get)
+      live.flatMap(checkpointRdd(_)).foreach { rdd =>
+        if (reads.contains(rdd)) scope.foreach(_.addRdd(rdd))
+        else rdd.unpersist(false)
+      }
+      live.clear()
+    }
+
+    private[Caches] def releaseAll(): Unit = {
+      live.foreach(releaseCheckpoint(_))
+      live.clear()
+    }
+  }
+
+  /** Run `body` with the checkpoints it takes through a [[Held]]: on throw
+    * every held checkpoint is released before the exception propagates;
+    * on return the held checkpoints the result reads are registered with
+    * the active [[collectPins]] scope and the rest released. A loop over
+    * one state table is [[Loop.iterate]], which runs on this.
+    */
+  def holding(body: Held => DataFrame): DataFrame = {
+    val held = new Held
+    val result = try body(held)
+    catch { case t: Throwable => held.releaseAll(); throw t }
+    held.finish(result)
+    result
   }
 
   /** The persisted RDD behind a `localCheckpoint`ed Dataset (None when the
     * plan is not a checkpoint/RDD leaf). */
-  def checkpointRdd(df: Dataset[_]): Option[RDD[_]] =
+  private def checkpointRdd(df: Dataset[_]): Option[RDD[_]] =
     df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
+      case l: LogicalRDD => Some(l.rdd)
       case _ => None
     }
 
   /** Unpersist the RDD behind a `localCheckpoint`ed Dataset NOW. Only safe
     * once nothing will read the Dataset again — a truncated-lineage plan
-    * cannot recompute. */
+    * cannot recompute. For callers that own a checkpoint an operator
+    * returned to them; operators release through [[holding]]. */
   def releaseCheckpoint(df: Dataset[_], blocking: Boolean = false): Unit =
     checkpointRdd(df).foreach(_.unpersist(blocking))
 }

@@ -1,8 +1,6 @@
 package graft.core
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** The plumbing every iterative operator shares: a loop-width session
   * clone, and the lifecycle of the eager `localCheckpoint`s that truncate
@@ -13,14 +11,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * the previous one), so analysis cost grows with the round count.
   * Checkpointing truncates the logical plan to materialized blocks — but
   * a checkpoint is storage held until someone releases it, and a
-  * truncated-lineage plan cannot be recomputed once it is released. The
-  * rules this object enforces once, for every loop:
-  *  - a round's checkpoint releases its predecessor only after it is
-  *    materialized;
-  *  - a throw releases every checkpoint the loop still holds;
-  *  - on return, the checkpoints the result still reads are registered
-  *    with [[Caches]] (a `collectPins` scope frees them after the
-  *    caller materializes); every other one is released.
+  * truncated-lineage plan cannot be recomputed once it is released.
+  * [[iterate]] runs on [[Caches.holding]]: a round's checkpoint releases
+  * its predecessor only after it is materialized; a throw releases every
+  * checkpoint the loop still holds; on return the checkpoints the result
+  * still reads are registered with the caller's `collectPins` scope and
+  * every other one is released.
   */
 object Loop {
 
@@ -83,62 +79,6 @@ object Loop {
   def rebind(df: DataFrame, spark: SparkSession): DataFrame =
     GraftSqlBridge.rebind(df, spark)
 
-  /** The checkpoints one [[holding]] block owns, keyed by backing RDD (a
-    * [[rebind]]ed frame is the same checkpoint). Frames that are not
-    * checkpoint leaves — projections, pinned caches, the caller's
-    * checkpoints seen through a derived plan — are never held, so
-    * `adopt`/`release` on them are no-ops.
-    */
-  final class Held private[Loop] () {
-    private val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-    /** Eager `localCheckpoint(true)` of `df`, held from now on. */
-    def apply(df: DataFrame): DataFrame = adopt(df.localCheckpoint(true))
-
-    /** Hold an existing checkpoint (e.g. a nested loop's result). */
-    def adopt(df: DataFrame): DataFrame = {
-      if (Caches.checkpointRdd(df).isDefined) live += df
-      df
-    }
-
-    /** Release `df`'s checkpoint NOW, if held: nothing may read it again. */
-    def release(df: DataFrame): Unit =
-      if (df != null) Caches.checkpointRdd(df).foreach { rdd =>
-        val i = live.indexWhere(h => Caches.checkpointRdd(h).contains(rdd))
-        if (i >= 0) Caches.releaseCheckpoint(live.remove(i))
-      }
-
-    private[Loop] def finish(result: DataFrame): Unit = {
-      val reads: Seq[RDD[_]] = result.queryExecution.analyzed.collectLeaves()
-        .collect { case l: LogicalRDD => l.rdd }
-      live.foreach { h =>
-        if (Caches.checkpointRdd(h).exists(reads.contains)) Caches.registerCheckpoint(h)
-        else Caches.releaseCheckpoint(h)
-      }
-      live.clear()
-    }
-
-    private[Loop] def releaseAll(): Unit = {
-      live.foreach(Caches.releaseCheckpoint(_))
-      live.clear()
-    }
-  }
-
-  /** Run `body` with the checkpoints it takes through a [[Held]]: on throw
-    * every held checkpoint is released before the exception propagates;
-    * on return the held checkpoints the result reads are registered with
-    * [[Caches]] and the rest released. For loops carrying more than one
-    * rotating table and for checkpoints taken around a loop; a loop over
-    * one state table is [[iterate]].
-    */
-  def holding(body: Held => DataFrame): DataFrame = {
-    val held = new Held
-    val result = try body(held)
-    catch { case t: Throwable => held.releaseAll(); throw t }
-    held.finish(result)
-    result
-  }
-
   /** A checkpoint-rotating loop over one state table. Round `r` (1-based)
     * calls `step(state, r)`: `None` ends the loop with `state` as the
     * result; `Some(next)` is checkpointed, the previous state released,
@@ -165,7 +105,7 @@ object Loop {
       unconverged: Option[String] = None,
       observe: Seq[Column] = Nil)(
       step: (DataFrame, Int) => Option[DataFrame]): DataFrame =
-    holding { held =>
+    Caches.holding { held =>
       var state = held.adopt(init)
       var r = 1
       var done = false

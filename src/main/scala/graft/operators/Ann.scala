@@ -115,7 +115,7 @@ object Ann {
       .withColumn("maxsim_micros", lit(0L))
       .localCheckpoint(true)
     // the picks rotate beside the candidate state
-    graft.core.Loop.holding { held =>
+    graft.core.Caches.holding { held =>
       var selected: DataFrame = null
       held.adopt(graft.core.Loop.iterate(state0, rounds = k) { (state, r) =>
         val mmr = (lit(lambdaMicros) * col("score_micros") -
@@ -2062,7 +2062,7 @@ object Ann {
     // pin the value-count table: the slice guard, the totals and the
     // rank prefix all read it, and its parent is a corpus pass
     val vcp = graft.core.Caches.pin(vc)
-    try {
+    try graft.core.Caches.holding { held =>
     val totals = vcp.groupBy(col("__k"), col("__d"))
       .agg(sum(col("__c")).as("__n"))
     val nSlices = totals.agg(countDistinct(col("__k")).as("__ns"))
@@ -2092,7 +2092,7 @@ object Ann {
       col("__v").as("__va"), col("__n").as("n_a"))
     val b = quants.select(col("__k").as("key_b"), col("__d"), col("__g"),
       col("__v").as("__vb"), col("__n").as("n_b"))
-    a.join(b, Seq("__d", "__g"))
+    held(a.join(b, Seq("__d", "__g"))
       .where(col("key_a") < col("key_b"))
       .groupBy(col("key_a"), col("key_b"))
       .agg(max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b"),
@@ -2100,8 +2100,7 @@ object Ann {
           .as("__s"))
       .select(col("key_a"), col("key_b"), col("n_a"), col("n_b"),
         round(col("__s").cast("double") /
-          lit(directions.toLong * grid) / lit(1e9), 6).as("sw"))
-      .localCheckpoint(true)
+          lit(directions.toLong * grid) / lit(1e9), 6).as("sw")))
     } finally vcp.unpersist()
   }
 }

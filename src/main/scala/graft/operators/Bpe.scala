@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Loop
+import graft.core.Caches
 
 /** Distributed byte-pair-encoding (Sennrich et al. 2016) merge learning
   * and application — the tokenizer-TRAINING step in front of the
@@ -183,7 +183,7 @@ object Bpe {
       s"batchSize must be in [1, 256], got $batchSize")
     val rounds = new MergeTraining.Rounds(numMerges, batchSize, minPairCount, exact)
     // the RETURNED table is registered (not released): the caller reads it
-    val wt = Loop.holding { held =>
+    val wt = Caches.holding { held =>
       val table = MergeTraining.open(held, wordTypes0)
       table.learn(rounds, ByCount, contPrefix = "")
       table.result()

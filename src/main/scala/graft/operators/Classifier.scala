@@ -345,7 +345,7 @@ object Classifier {
         "or score snapshots from a broadcast table instead")
     val feats = graft.core.Caches.pin(
       docFeatures(df, textCol, labelCol, dim, keepCols = Seq(idCol)))
-    try {
+    try graft.core.Caches.holding { held =>
       val c = feats.agg(
         count(lit(1)).as("__n"),
         count(when(col("__y").isNull ||
@@ -373,15 +373,14 @@ object Classifier {
       val nCorrect = aggregate(pArr, lit(0L), (acc, x) =>
         acc + when(x > 500000L, 1L).otherwise(0L))
       val k = lit(iters.toLong)
-      feats.select(col(idCol), col("__y").as("label"),
+      held(feats.select(col(idCol), col("__y").as("label"),
           s1.as("__s1"), s2.as("__s2"), nCorrect.as("n_correct"))
         .select(col(idCol), col("label"),
           round(col("__s1").cast("double") / (k * lit(1e6)), 6)
             .as("confidence"),
           round(sqrt((k * col("__s2") - col("__s1") * col("__s1"))
             .cast("double")) / (k * lit(1e6)), 6).as("variability"),
-          col("n_correct"))
-        .localCheckpoint(true)
+          col("n_correct")))
     } finally feats.unpersist()
   }
 
@@ -444,7 +443,7 @@ object Classifier {
       docFeatures(train, textCol, labelCol, dim, keepCols = Seq(idCol)))
     val pfeats = graft.core.Caches.pin(
       docFeatures(probes, textCol, labelCol, dim, keepCols = Seq(idCol)))
-    try {
+    try graft.core.Caches.holding { held =>
       def contract(f: DataFrame, what: String): Long = {
         val c = f.agg(count(lit(1)).as("__n"),
           count(when(col("__y").isNull ||
@@ -497,12 +496,11 @@ object Classifier {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("probe_id"))
         .orderBy(col("influence_micros").desc, col("train_id"))
-      dots.join(trErr, "train_id").join(broadcast(prErr), "probe_id")
+      held(dots.join(trErr, "train_id").join(broadcast(prErr), "probe_id")
         .select(col("probe_id"), col("train_id"), col("dot"),
           infl.as("influence_micros"))
         .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= topK)
-        .localCheckpoint(true)
+        .where(col("rank") <= topK))
     } finally { feats.unpersist(); pfeats.unpersist() }
   }
 
@@ -757,7 +755,7 @@ object Classifier {
       .repartitionByRange(spark.sparkContext.defaultParallelism, col("__s"))
       .sortWithinPartitions(col("__s"))
       .withColumn("__pid", spark_partition_id()))
-    try {
+    try graft.core.Caches.holding { held =>
       val w = org.apache.spark.sql.expressions.Window
       val offsets = g.groupBy(col("__pid")).agg(sum(col("__c")).as("__p"))
         .withColumn("__off", coalesce(sum(col("__p")).over(
@@ -770,8 +768,7 @@ object Classifier {
         .join(broadcast(offsets), "__pid")
         .where(col("__r") + col("__off") >= k)
         .agg(min(col("__s")).as("threshold"))
-      thr.select(lit(n).as("n"), lit(k).as("k"), col("threshold"))
-        .localCheckpoint(true)
+      held(thr.select(lit(n).as("n"), lit(k).as("k"), col("threshold")))
     } finally g.unpersist()
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Loop
+import graft.core.{Caches, Loop}
 import graft.operators.TextAnalysis.{hash28, hash60, shingles, tokens, MinhashPrime}
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -435,23 +435,22 @@ object Dedup {
     // and AFTER the spread, so it never runs at one-file parallelism
     val sigs0 = spreadForCompute(df)
       .select(col(idCol).as("__id"), fingerprint.as("__sh"))
-    val sigs = (if (dropZero) sigs0.where(col("__sh") =!= 0L) else sigs0)
-      .localCheckpoint(true)
-    // the result still reads this checkpoint — scope-register, don't free
-    graft.core.Caches.registerCheckpoint(sigs)
-    val banded = sigs.select(col("__id"), col("__sh"),
-      posexplode(simhashBands(col("__sh"), bits, bands))
-        .as(Seq("__band", "__bv")))
-    val left = banded.select(col("__band"), col("__bv"),
-      col("__id").as("id_a"), col("__sh").as("__sha"))
-    val right = banded.select(col("__band"), col("__bv"),
-      col("__id").as("id_b"), col("__sh").as("__shb"))
-    left.join(right, Seq("__band", "__bv"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hammingDistance(col("__sha"), col("__shb")).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
+    Caches.holding { held =>
+      val sigs = held(if (dropZero) sigs0.where(col("__sh") =!= 0L) else sigs0)
+      val banded = sigs.select(col("__id"), col("__sh"),
+        posexplode(simhashBands(col("__sh"), bits, bands))
+          .as(Seq("__band", "__bv")))
+      val left = banded.select(col("__band"), col("__bv"),
+        col("__id").as("id_a"), col("__sh").as("__sha"))
+      val right = banded.select(col("__band"), col("__bv"),
+        col("__id").as("id_b"), col("__sh").as("__shb"))
+      left.join(right, Seq("__band", "__bv"))
+        .where(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"),
+          hammingDistance(col("__sha"), col("__shb")).as("hamming"))
+        .where(col("hamming") <= maxHamming)
+        .dropDuplicates("id_a", "id_b")
+    }
   }
 
   /** Jaccard similarity of the two texts' distinct word n-gram shingle sets. */
@@ -1177,42 +1176,39 @@ object Dedup {
     // re-plans AND re-executes the caller's whole candidate-generation
     // pipeline (for LSH input that is the shingle→minhash→band-join plan —
     // measured as the dominant cost of the operator, far above the rounds).
-    val p = pairs.select(col(aCol).as("s"), col(bCol).as("d"))
-      .localCheckpoint(true)
-    val edgesRaw = p
-      .union(p.select(col("d").as("s"), col("s").as("d")))
-      .distinct()
-      .localCheckpoint(true)
-    val edgeCount = edgesRaw.count() // cheap: counts the checkpointed blocks
-    if (algorithm == "local" && edgeCount > LocalEdgeThreshold)
-      throw new IllegalArgumentException(
-        s"algorithm='local' on $edgeCount edges exceeds LocalEdgeThreshold " +
-          s"($LocalEdgeThreshold); use 'labelprop', 'stars', or 'auto'")
-    if (algorithm == "local" ||
-      (algorithm == "auto" && edgeCount <= LocalEdgeThreshold)) {
-      val out = localUnionFind(edgesRaw)
-      // union-find collected the edges; both input checkpoints are dead and
-      // the result (a parallelized local relation) references neither
-      graft.core.Caches.releaseCheckpoint(p)
-      graft.core.Caches.releaseCheckpoint(edgesRaw)
-      return out
+    Caches.holding { held =>
+      val p = held(pairs.select(col(aCol).as("s"), col(bCol).as("d")))
+      val edgesRaw = held(p
+        .union(p.select(col("d").as("s"), col("s").as("d")))
+        .distinct())
+      val edgeCount = edgesRaw.count() // cheap: counts the checkpointed blocks
+      if (algorithm == "local" && edgeCount > LocalEdgeThreshold)
+        throw new IllegalArgumentException(
+          s"algorithm='local' on $edgeCount edges exceeds LocalEdgeThreshold " +
+            s"($LocalEdgeThreshold); use 'labelprop', 'stars', or 'auto'")
+      // the loops call this once their own initial checkpoints are
+      // materialized — from then on nothing reads the raw inputs
+      val releaseInputs = () => { held.release(p); held.release(edgesRaw) }
+      if (algorithm == "local" ||
+        (algorithm == "auto" && edgeCount <= LocalEdgeThreshold)) {
+        // union-find collected the edges; the result (a parallelized local
+        // relation) reads neither input checkpoint
+        val out = localUnionFind(edgesRaw)
+        releaseInputs()
+        out
+      } else {
+        // the rounds run loop-width on a session clone ([[Loop.session]]);
+        // the result rebinds to the caller's session (downstream plans must
+        // use CALLER conf)
+        val edgesIso = Loop.rebind(edgesRaw,
+          Loop.session(pairs.sparkSession, edgeCount))
+        val out =
+          if (algorithm == "stars" || algorithm == "auto")
+            starsLoop(edgesIso, maxIter, edgeCount, releaseInputs)
+          else labelPropLoop(edgesIso, maxIter, releaseInputs)
+        Loop.rebind(out, pairs.sparkSession)
+      }
     }
-    // the loops call this once their own initial checkpoints are
-    // materialized — from then on nothing reads the raw inputs
-    val releaseInputs = () => {
-      graft.core.Caches.releaseCheckpoint(p)
-      graft.core.Caches.releaseCheckpoint(edgesRaw)
-    }
-    // the rounds run loop-width on a session clone ([[Loop.session]]);
-    // the result rebinds to the caller's session (downstream plans must
-    // use CALLER conf)
-    val edgesIso = Loop.rebind(edgesRaw,
-      Loop.session(pairs.sparkSession, edgeCount))
-    val out =
-      if (algorithm == "stars" || algorithm == "auto")
-        starsLoop(edgesIso, maxIter, edgeCount, releaseInputs)
-      else labelPropLoop(edgesIso, maxIter, releaseInputs)
-    Loop.rebind(out, pairs.sparkSession)
   }
 
   /** Path-compressed, size-united union-find over the collected (bounded —
@@ -1282,7 +1278,7 @@ object Dedup {
     */
   private def labelPropLoop(
       edgesRaw: DataFrame, maxIter: Int,
-      releaseInputs: () => Unit): DataFrame = Loop.holding { held =>
+      releaseInputs: () => Unit): DataFrame = Caches.holding { held =>
     // Co-partition edges on the join key once (at the loop session's
     // width): localCheckpoint preserves the hash partitioning, so every
     // round's join re-shuffles only the (much smaller) labels side.
@@ -1351,7 +1347,7 @@ object Dedup {
       Seq(count(lit(1)).as("n"), bit_xor(h).as("x"),
         sum(pmod(h, lit(1000000007L))).as("s"))
     }
-    Loop.holding { held =>
+    Caches.holding { held =>
       // Every endpoint must come back labeled — including nodes whose only
       // "pair" is a self-loop, which the canonical orientation drops below.
       val allNodes = held(edgesRaw.select(col("s").as("node")).distinct())

@@ -497,7 +497,7 @@ object ExactSubstrings {
       broadcastBatch: Boolean = true): DataFrame = {
     val (wins, spans) = winsAndSpans(batch, path, idCol, textCol, w, salt,
       buckets, broadcastBatch)
-    try {
+    try graft.core.Caches.holding { held =>
       // Materialize the cleaned batch BEFORE appending to the index: the
       // probe plan re-lists the index directory at execution time, so a
       // lazily-evaluated result read after the append would see the
@@ -505,9 +505,7 @@ object ExactSubstrings {
       // document to nothing. The checkpoint is batch-sized; callers
       // running inside [[graft.core.Caches.collectPins]] release it with
       // the scope.
-      val cleaned = cutSpans(batch, spans, idCol, textCol)
-        .localCheckpoint(true)
-      graft.core.Caches.registerCheckpoint(cleaned)
+      val cleaned = held(cutSpans(batch, spans, idCol, textCol))
       writeSubstrIndex(
         wins.select("__hb", "__h1", "__h2").distinct(),
         path, w, salt, buckets)

@@ -215,12 +215,11 @@ object Funnels {
       minSupportMicros: Long = 0L): DataFrame = {
     require(minSupportMicros >= 0L && minSupportMicros <= 1000000L,
       s"minSupportMicros out of [0, 1e6]: $minSupportMicros")
-    val si = df
-      .where(col(sessionCol).isNotNull && col(itemCol).isNotNull)
-      .select(col(sessionCol).as("__s"), col(itemCol).cast("string").as("__i"))
-      .distinct()
-      .localCheckpoint(true)
-    try {
+    graft.core.Caches.holding { held =>
+      val si = held(df
+        .where(col(sessionCol).isNotNull && col(itemCol).isNotNull)
+        .select(col(sessionCol).as("__s"), col(itemCol).cast("string").as("__i"))
+        .distinct())
       val nSessions = si.select(col("__s")).distinct().count()
       require(nSessions > 0, "associationRules: no sessions")
       val itemN = si.groupBy(col("__i")).agg(count(lit(1)).as("__ni"))
@@ -230,7 +229,7 @@ object Funnels {
         .groupBy(col("antecedent"), col("consequent"))
         .agg(count(lit(1)).as("n_both"))
         .where(col("n_both") * lit(1000000L) >= lit(minSupportMicros) * nSessions)
-      val out = pairs
+      held(pairs
         .join(itemN.select(col("__i").as("antecedent"), col("__ni").as("__na")),
           "antecedent")
         .join(itemN.select(col("__i").as("consequent"), col("__ni").as("__nb")),
@@ -240,11 +239,8 @@ object Funnels {
           expr(s"(n_both * 1000000L) div ${nSessions}L").as("support_micros"),
           expr("(n_both * 1000000L) div __na").as("confidence_micros"),
           round((col("n_both") * lit(nSessions)).cast("double") /
-            (col("__na") * col("__nb")), 6).as("lift"))
-        .localCheckpoint(true)
-      graft.core.Caches.registerCheckpoint(out)
-      out
-    } finally graft.core.Caches.releaseCheckpoint(si)
+            (col("__na") * col("__nb")), 6).as("lift")))
+    }
   }
 
   /** Behavioral path n-grams: per user, the ordered event-type stream's

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Loop
+import graft.core.{Caches, Loop}
 
 /** Iterative graph analytics over edge DataFrames — the operator class
   * (alongside [[Dedup.connectedComponents]]) for link-structure signals
@@ -215,7 +215,7 @@ object Graphs {
         .localCheckpoint(true)
       // the frontier rotates beside the distance table; round 1's is the
       // seed table itself, which the distance loop (not this block) holds
-      Loop.holding { held =>
+      Caches.holding { held =>
         var frontier = dist0
         Loop.iterate(dist0, rounds = maxRounds) { (dist, r) =>
           if (r == 1 && dist.limit(1).count() == 0)
@@ -335,34 +335,33 @@ object Graphs {
     * times. Registered with [[graft.core.Caches]]; callers in
     * long-lived sessions release via a `collectPins` scope.
     */
-  private def triangleCore(und: DataFrame, deg: DataFrame): DataFrame = {
-    // orient low (deg, id) -> high (deg, id); struct comparison is
-    // lexicographic, exactly the total order we need
-    val withDeg = und
-      .join(deg.select(col("node").as("__a"), col("__deg").as("__da")), "__a")
-      .join(deg.select(col("node").as("__b"), col("__deg").as("__db")), "__b")
-    val oriented = withDeg.select(
-      when(struct(col("__da"), col("__a")) < struct(col("__db"), col("__b")),
-        struct(col("__a").as("s"), col("__b").as("t"),
-          col("__db").as("dt")))
-        .otherwise(struct(col("__b").as("s"), col("__a").as("t"),
-          col("__da").as("dt"))).as("e"))
-      .select(col("e.s").as("__s"), col("e.t").as("__t"), col("e.dt").as("__dt"))
-      .localCheckpoint(true)
-    graft.core.Caches.registerCheckpoint(oriented)
-    val wedges = oriented.as("e1")
-      .join(oriented.as("e2"), col("e1.__s") === col("e2.__s") &&
-        (struct(col("e1.__dt"), col("e1.__t")) <
-          struct(col("e2.__dt"), col("e2.__t"))))
-      .select(col("e1.__s").as("__w0"), col("e1.__t").as("__w1"),
-        col("e2.__t").as("__w2"))
-    val closed = wedges.join(
-      oriented.select(col("__s").as("__w1"), col("__t").as("__w2")),
-      Seq("__w1", "__w2"))
-    closed
-      .select(explode(array(col("__w0"), col("__w1"), col("__w2"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("triangles"))
-  }
+  private def triangleCore(und: DataFrame, deg: DataFrame): DataFrame =
+    Caches.holding { held =>
+      // orient low (deg, id) -> high (deg, id); struct comparison is
+      // lexicographic, exactly the total order we need
+      val withDeg = und
+        .join(deg.select(col("node").as("__a"), col("__deg").as("__da")), "__a")
+        .join(deg.select(col("node").as("__b"), col("__deg").as("__db")), "__b")
+      val oriented = held(withDeg.select(
+        when(struct(col("__da"), col("__a")) < struct(col("__db"), col("__b")),
+          struct(col("__a").as("s"), col("__b").as("t"),
+            col("__db").as("dt")))
+          .otherwise(struct(col("__b").as("s"), col("__a").as("t"),
+            col("__da").as("dt"))).as("e"))
+        .select(col("e.s").as("__s"), col("e.t").as("__t"), col("e.dt").as("__dt")))
+      val wedges = oriented.as("e1")
+        .join(oriented.as("e2"), col("e1.__s") === col("e2.__s") &&
+          (struct(col("e1.__dt"), col("e1.__t")) <
+            struct(col("e2.__dt"), col("e2.__t"))))
+        .select(col("e1.__s").as("__w0"), col("e1.__t").as("__w1"),
+          col("e2.__t").as("__w2"))
+      val closed = wedges.join(
+        oriented.select(col("__s").as("__w1"), col("__t").as("__w2")),
+        Seq("__w1", "__w2"))
+      closed
+        .select(explode(array(col("__w0"), col("__w1"), col("__w2"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("triangles"))
+    }
 
   /** The k-core of the undirected simple graph: the maximal subgraph in
     * which every node keeps degree ≥ k — the standard "peel away the
@@ -430,7 +429,7 @@ object Graphs {
   private def hIndexLoop(
       edges: DataFrame, srcCol: String, dstCol: String,
       cap: Long, signal: org.apache.spark.sql.Column, signal0: Long => Long): DataFrame =
-    Loop.holding { held =>
+    Caches.holding { held =>
       val e0 = held(undirectedEdges(edges, srcCol, dstCol))
       val m = e0.count()
       // rounds run loop-width on a session clone ([[Loop.session]]),
@@ -508,7 +507,7 @@ object Graphs {
             (coalesce(col("__r"), lit(0L)).cast("double") / col("__t"))
               .as(outCol))
       }
-      Loop.holding { held =>
+      Caches.holding { held =>
         var h = nodes.select(col("node"), lit(1.0 / n).as("h"))
         var a: DataFrame = null
         (1 to iterations).foreach { _ =>
@@ -823,7 +822,7 @@ object Graphs {
       // ([[Loop.session]]); the pinned edges move across for free (shared
       // cache manager) and the result rebinds to the caller at the end
       val e0i = Loop.rebind(e0, Loop.session(edges.sparkSession, e0.count()))
-      Loop.holding { held =>
+      Caches.holding { held =>
         var active = held(e0i.select(col("__s").as("node"))
           .unionByName(e0i.select(col("__d").as("node"))).distinct())
         // the pinned input is never held: releasing it is a no-op
@@ -976,16 +975,16 @@ object Graphs {
         col(nodeCol).cast("string").as("node"),
         col(commCol).cast("string").as("__c"))
         .where(col("node").isNotNull).distinct()
-      val labeled = und
-        .join(labels.select(col("node").as("__a"), col("__c").as("__ca")),
-          Seq("__a"), "left")
-        .join(labels.select(col("node").as("__b"), col("__c").as("__cb")),
-          Seq("__b"), "left")
-        .select(
-          coalesce(col("__ca"), col("__a")).as("__ca"),
-          coalesce(col("__cb"), col("__b")).as("__cb"))
-        .localCheckpoint(true) // read twice below (intra counts + degrees)
-      try {
+      Caches.holding { held =>
+        // read twice below (intra counts + degrees)
+        val labeled = held(und
+          .join(labels.select(col("node").as("__a"), col("__c").as("__ca")),
+            Seq("__a"), "left")
+          .join(labels.select(col("node").as("__b"), col("__c").as("__cb")),
+            Seq("__b"), "left")
+          .select(
+            coalesce(col("__ca"), col("__a")).as("__ca"),
+            coalesce(col("__cb"), col("__b")).as("__cb")))
         val m = labeled.count()
         require(m > 0, "modularity: empty graph")
         val intra = labeled.where(col("__ca") === col("__cb"))
@@ -1005,7 +1004,7 @@ object Graphs {
         import spark.implicits._
         Seq((m, agg.getAs[Long]("__nc"), agg.getAs[Long]("__qn")))
           .toDF("m", "n_communities", "modularity_nanos")
-      } finally graft.core.Caches.releaseCheckpoint(labeled)
+      }
     } finally und.unpersist()
   }
 
@@ -1172,43 +1171,37 @@ object Graphs {
     require(!seed.contains(":"),
       "seed must not contain ':' (it delimits the hash preimage)")
     val e = graft.core.Caches.pin(kHopEdges(edges, srcCol, dstCol))
-    try {
-      var frontier = e.select(col("__s").as("origin")).distinct()
+    try Caches.holding { held =>
+      var frontier = held(e.select(col("__s").as("origin")).distinct()
         .crossJoin(broadcast(spark_rangeless(walksPerNode)))
         .select(col("origin"), col("walk"), lit(0).as("step"),
-          col("origin").as("node"))
-        .localCheckpoint(true)
+          col("origin").as("node")))
       val steps = scala.collection.mutable.ArrayBuffer(frontier)
-      try {
-        var s = 0
-        var live = true
-        while (s < walkLength && live) {
-          // rendezvous pick: hash every (state, neighbor) candidate,
-          // keep the per-(origin, walk) min struct — dead ends simply
-          // produce no candidates and the walk stops
-          val next = frontier
-            .join(e.select(col("__s").as("node"), col("__d")), Seq("node"))
-            .select(col("origin"), col("walk"),
-              struct(
-                graft.functions.VectorFunctions.hexPrefixToLong(
-                  sha2(concat_ws(":", lit(seed), col("origin"),
-                    col("walk").cast("string"), lit(s).cast("string"),
-                    col("node"), col("__d")), 256), 15).as("__h"),
-                col("__d")).as("__c"))
-            .groupBy(col("origin"), col("walk"))
-            .agg(min(col("__c")).as("__m"))
-            .select(col("origin"), col("walk"), lit(s + 1).as("step"),
-              col("__m.__d").as("node"))
-            .localCheckpoint(true)
-          steps += next
-          frontier = next
-          live = frontier.limit(1).count() > 0
-          s += 1
-        }
-        val out = steps.reduce(_ unionByName _).localCheckpoint(true)
-        graft.core.Caches.registerCheckpoint(out)
-        out
-      } finally steps.foreach(f => graft.core.Caches.releaseCheckpoint(f))
+      var s = 0
+      var live = true
+      while (s < walkLength && live) {
+        // rendezvous pick: hash every (state, neighbor) candidate,
+        // keep the per-(origin, walk) min struct — dead ends simply
+        // produce no candidates and the walk stops
+        val next = held(frontier
+          .join(e.select(col("__s").as("node"), col("__d")), Seq("node"))
+          .select(col("origin"), col("walk"),
+            struct(
+              graft.functions.VectorFunctions.hexPrefixToLong(
+                sha2(concat_ws(":", lit(seed), col("origin"),
+                  col("walk").cast("string"), lit(s).cast("string"),
+                  col("node"), col("__d")), 256), 15).as("__h"),
+              col("__d")).as("__c"))
+          .groupBy(col("origin"), col("walk"))
+          .agg(min(col("__c")).as("__m"))
+          .select(col("origin"), col("walk"), lit(s + 1).as("step"),
+            col("__m.__d").as("node")))
+        steps += next
+        frontier = next
+        live = frontier.limit(1).count() > 0
+        s += 1
+      }
+      held(steps.reduce(_ unionByName _))
     } finally e.unpersist()
   }
 
@@ -1275,7 +1268,7 @@ object Graphs {
       val adj = graft.core.Caches.pin(
         und.select(col("__s").as("__z"), col("__d").as("__n"))
           .join(deg, "__z"))
-      try {
+      try Caches.holding { held =>
       val wedges = adj
         .select(col("__z"), col("__aa"), col("__ra"), col("__n").as("node_a"))
         .join(adj.select(col("__z"), col("__n").as("node_b")), Seq("__z"))
@@ -1311,14 +1304,11 @@ object Graphs {
           round(col("n_common") * lit(1000000.0) /
             (col("__da") + col("__db") - col("n_common"))).cast("long")
             .as("jaccard_micros"))
-      val out = (if (!excludeExisting) scored
+      held(if (!excludeExisting) scored
         else scored.join(
           und.select(least(col("__s"), col("__d")).as("node_a"),
             greatest(col("__s"), col("__d")).as("node_b")).distinct(),
           Seq("node_a", "node_b"), "left_anti"))
-        .localCheckpoint(true)
-      graft.core.Caches.registerCheckpoint(out)
-      out
       } finally adj.unpersist()
     } finally und.unpersist()
   }
@@ -1361,7 +1351,7 @@ object Graphs {
       require(nSeeds <= 64,
         s"harmonicCentrality: $nSeeds seeds — the per-seed BFS state is " +
           "|seeds| x reachable; sample seeds to <= 64 upstream")
-      Loop.holding { held =>
+      Caches.holding { held =>
         val visited = held.adopt(Loop.iterate(
           seedSet
             .withColumn("node", col("seed"))
@@ -1431,9 +1421,11 @@ object Graphs {
       s"maxHops must be in 1..32, got $maxHops")
     val e = graft.core.Caches.pin(kHopEdges(edges, srcCol, dstCol))
     try {
-      val seedSet = seeds.select(col(seedCol).cast("string").as("seed"))
-        .where(col("seed").isNotNull).distinct().localCheckpoint(true)
-      val visited0 = try {
+      // the seed checkpoint is released before the loop; the loop owns
+      // its round-0 state
+      val visited0 = Caches.holding { held =>
+        val seedSet = held(seeds.select(col(seedCol).cast("string").as("seed"))
+          .where(col("seed").isNotNull).distinct())
         val n = seedSet.count()
         require(n > 0, "sampledBetweenness: no seeds")
         require(n <= 64,
@@ -1444,7 +1436,7 @@ object Graphs {
           .withColumn("dist", lit(0L))
           .withColumn("sigma", lit(1.0))
           .localCheckpoint(true)
-      } finally graft.core.Caches.releaseCheckpoint(seedSet)
+      }
       var maxDist = 0
       // ---- forward: σ-accumulating BFS ----
       val visited = Loop.iterate(visited0, rounds = maxHops,
@@ -1472,7 +1464,7 @@ object Graphs {
           .select("seed", "node", "dist", "sigma")))
       }
       // ---- backward: per-level dependency accumulation ----
-      Loop.holding { held =>
+      Caches.holding { held =>
         held.adopt(visited)
         val noDelta = visited.limit(0).select(col("seed"), col("node"),
           col("dist"), lit(0L).as("delta_micros"))

@@ -478,13 +478,13 @@ object Linkage {
         scorePairs(aligned, idCol, blockCols, fields, threshold)
       val crossPairs = scoreBetween(aligned, standing, idCol, blockCols,
         fields, threshold, withinOne = false)
-      val newPairs = withinBatch.unionByName(crossPairs).distinct()
-        .localCheckpoint(true) // materialize BEFORE the appends mutate dirs
-      try {
+      graft.core.Caches.holding { held =>
+        // materialize BEFORE the appends mutate dirs
+        val newPairs = held(withinBatch.unionByName(crossPairs).distinct())
         newPairs.write.mode("append").parquet(s"$path/pairs")
         aligned.write.mode("append").parquet(s"$path/records")
-      } finally graft.core.Caches.registerCheckpoint(newPairs)
-      newPairs
+        newPairs
+      }
     }
 
     /** The standing entity map: connected components over every pair

@@ -7,7 +7,7 @@ import scala.util.DynamicVariable
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
-import graft.core.Loop
+import graft.core.{Caches, Loop}
 import graft.functions.BpeApplyMerges
 
 /** The merge-training core [[Bpe]] and [[WordPiece]] share: the rounds
@@ -262,7 +262,7 @@ private[operators] object MergeTraining {
     def result(): DataFrame
   }
 
-  private final class Distributed(held: Loop.Held, wt0: DataFrame) extends Table {
+  private final class Distributed(held: Caches.Held, wt0: DataFrame) extends Table {
     private var last = wt0
 
     def alphabet(): Array[String] =
@@ -304,7 +304,7 @@ private[operators] object MergeTraining {
     * and pick the backend: the driver below [[localBound]] cells, Spark
     * otherwise.
     */
-  def open(held: Loop.Held, wordTypes: DataFrame): Table = {
+  def open(held: Caches.Held, wordTypes: DataFrame): Table = {
     val seen = Observation()
     val wt0 = held(wordTypes.observe(seen,
       count(lit(1)).as("rows"), coalesce(sum(size(col("__syms"))), lit(0L)).as("syms")))

@@ -220,7 +220,7 @@ object RankEval {
         counts.sparkSession.sparkContext.defaultParallelism, col("__s"))
       .sortWithinPartitions(col("__s"))
       .withColumn("__pid", spark_partition_id()))
-    try {
+    try graft.core.Caches.holding { held =>
       val offsets = g.groupBy(col("__pid"))
         .agg(sum(col("__neg")).as("__pn"))
         .withColumn("__off", coalesce(
@@ -235,7 +235,7 @@ object RankEval {
         .join(broadcast(offsets), "__pid")
         .select(col("__pos"), col("__neg"),
           (col("__run") + col("__off")).as("__below"))
-      below.agg(
+      held(below.agg(
           coalesce(sum(col("__pos")), lit(0L)).as("n_pos"),
           coalesce(sum(col("__neg")), lit(0L)).as("n_neg"),
           coalesce(sum(col("__pos") * (lit(2L) * col("__below") + col("__neg"))),
@@ -243,8 +243,7 @@ object RankEval {
         .select(col("n_pos"), col("n_neg"),
           round(when(col("n_pos") === 0L || col("n_neg") === 0L, lit(null))
             .otherwise(col("__num2").cast("double") /
-              (lit(2L) * col("n_pos") * col("n_neg"))), 6).as("auc"))
-        .localCheckpoint(true)
+              (lit(2L) * col("n_pos") * col("n_neg"))), 6).as("auc")))
     } finally g.unpersist()
   }
 
@@ -464,7 +463,7 @@ object RankEval {
     // length scalars all read this narrow projection (9 passes)
     val base = graft.core.Caches.pin(df.select(col(idCol).as("__id"),
       toks(col(refCol)).as("__rt"), toks(col(hypCol)).as("__ht")))
-    try {
+    try graft.core.Caches.holding { held =>
     def sideCounts(arrCol: String, cname: String): DataFrame =
       (1 to 4).map { n =>
         base.select(col("__id"),
@@ -498,15 +497,14 @@ object RankEval {
     val bleu = when(anyZero || col("__hl") === 0L, lit(0.0))
       .otherwise(bp * exp(
         (log(p(1)) + log(p(2)) + log(p(3)) + log(p(4))) / lit(4.0)))
-    cells.crossJoin(lens)
+    held(cells.crossJoin(lens)
       .select(Seq(col("__hl").as("hyp_tokens"), col("__rl").as("ref_tokens"))
         ++ (1 to 4).flatMap(n => Seq(col(s"m$n"), col(s"t$n"),
           round(when(col(s"t$n") === 0L, lit(0.0)).otherwise(p(n)), 6)
             .as(s"p$n")))
         ++ Seq(round(when(col("__hl") === 0L, lit(0.0)).otherwise(bp), 6)
             .as("bp"),
-          round(bleu, 6).as("bleu")): _*)
-        .localCheckpoint(true)
+          round(bleu, 6).as("bleu")): _*))
     } finally base.unpersist()
   }
 

@@ -294,11 +294,10 @@ object Sampling {
       .select(col(termCol).cast("string").as("__t"),
         col(weightCol).cast("long").as("__w"))
       .where(col("__t").isNotNull && col("__w") > 0L)
-    val intervals = Validation.rangePrefix(v, "__t", "__w", "__lo")
-      .withColumn("__hi", col("__lo") + col("__w") - lit(1L))
-      .select(col("__t").as("neg_term"), col("__lo"), col("__hi"))
-      .localCheckpoint(true)
-    try {
+    graft.core.Caches.holding { held =>
+      val intervals = held(Validation.rangePrefix(v, "__t", "__w", "__lo")
+        .withColumn("__hi", col("__lo") + col("__w") - lit(1L))
+        .select(col("__t").as("neg_term"), col("__lo"), col("__hi")))
       val total = intervals.agg(max(col("__hi"))).head()
       require(!total.isNullAt(0),
         "negativeSamples: vocab has no positive-weight terms")
@@ -310,15 +309,12 @@ object Sampling {
             sha2(concat_ws(":", lit(seed),
               col(centerCol).cast("string"), col(contextCol).cast("string"),
               col("__j").cast("string")), 256), 15) % lit(totalW))
-      val out = RangeJoin.pointInInterval(points, intervals, "__u", "__lo",
+      held(RangeJoin.pointInInterval(points, intervals, "__u", "__lo",
           "__hi", bucketWidth = math.max(1L, totalW / 4096L),
           broadcastWideIntervals = true)
         .drop("__u", "__lo", "__hi")
-        .withColumnRenamed("__j", "j")
-        .localCheckpoint(true)
-      graft.core.Caches.registerCheckpoint(out)
-      out
-    } finally graft.core.Caches.releaseCheckpoint(intervals)
+        .withColumnRenamed("__j", "j"))
+    }
   }
 
   private val Window = org.apache.spark.sql.expressions.Window

@@ -80,7 +80,7 @@ object TextAnalysis {
     val counts = graft.core.Caches.pin(rawCounts
       .groupBy(col("__k"), col("__t"))
       .agg(sum(col("__c")).as("__c")))
-    try {
+    try graft.core.Caches.holding { held =>
       // eager slice-cardinality guard: the self-join below is quadratic
       // in slices sharing a term — fine for sources/snapshots (tens to
       // hundreds), a silent detonation for a doc-granularity key
@@ -102,7 +102,7 @@ object TextAnalysis {
         .where(col("key_a") < col("key_b"))
         .groupBy(col("key_a"), col("key_b"))
         .agg(sum(col("__ca") * col("__cb")).as("dot"))
-      dots
+      held(dots
         .join(broadcast(norms.select(col("__k").as("key_a"),
           col("__ss").as("__ssa"))), "key_a")
         .join(broadcast(norms.select(col("__k").as("key_b"),
@@ -110,8 +110,7 @@ object TextAnalysis {
         .select(col("key_a"), col("key_b"), col("dot"),
           round(col("dot").cast("double") /
             (sqrt(col("__ssa").cast("double")) *
-              sqrt(col("__ssb").cast("double"))), 6).as("cosine"))
-        .localCheckpoint(true)
+              sqrt(col("__ssb").cast("double"))), 6).as("cosine")))
     } finally counts.unpersist()
   }
 
@@ -158,7 +157,7 @@ object TextAnalysis {
     val counts = graft.core.Caches.pin(rawCounts
       .groupBy(col("__k"), col("__t"))
       .agg(sum(col("__c")).as("__c")))
-    try {
+    try graft.core.Caches.holding { held =>
       val nSlices = counts.agg(countDistinct(col("__k")).as("__ns"))
         .head().getAs[Long]("__ns")
       require(nSlices <= maxSlices,
@@ -197,7 +196,7 @@ object TextAnalysis {
       val termB = round(col("__cb").cast("double") / col("__nb") *
         log(lit(2.0) * (col("__cb") * col("__na")).cast("double") / cross) *
         lit(1e9)).cast("long")
-      joined
+      held(joined
         .groupBy(col("key_a"), col("key_b"))
         .agg(count(lit(1)).as("n_common_terms"),
           sum(col("__ca")).as("__cas"), sum(col("__cb")).as("__cbs"),
@@ -209,8 +208,7 @@ object TextAnalysis {
               col("__san").cast("double") / lit(1e9)) +
             lit(0.5) * (ln2 * (lit(1.0) -
               col("__cbs").cast("double") / col("__nb")) +
-              col("__sbn").cast("double") / lit(1e9)), 6).as("jsd"))
-        .localCheckpoint(true)
+              col("__sbn").cast("double") / lit(1e9)), 6).as("jsd")))
     } finally counts.unpersist()
   }
 
@@ -2078,7 +2076,7 @@ object TextAnalysis {
       .repartitionByRange(parts, col("__c").desc, col("__t"))
       .sortWithinPartitions(col("__c").desc, col("__t"))
       .withColumn("__pid", spark_partition_id()))
-    try {
+    try graft.core.Caches.holding { held =>
       val w = org.apache.spark.sql.expressions.Window
       val offsets = keyed.groupBy(col("__pid"))
         .agg(count(lit(1)).as("__pn"))
@@ -2107,12 +2105,11 @@ object TextAnalysis {
       val sxx = col("__sxx") / 1e9
       val denom = n * sxx - sx * sx
       val slope = (n * sxy - sx * sy) / denom
-      sums.select(col("__n").as("n_terms"),
+      held(sums.select(col("__n").as("n_terms"),
           round(when(col("__n") < 2 || denom === 0.0, lit(null))
             .otherwise(slope), 6).as("slope"),
           round(when(col("__n") < 2 || denom === 0.0, lit(null))
-            .otherwise((sy - slope * sx) / n), 6).as("intercept"))
-        .localCheckpoint(true)
+            .otherwise((sy - slope * sx) / n), 6).as("intercept")))
     } finally keyed.unpersist()
   }
 
@@ -2302,7 +2299,7 @@ object TextAnalysis {
       .groupBy("__w1").agg(count(lit(1)).as(cnt))
     val uniT = graft.core.Caches.pin(uni(target, "__cut"))
     val uniD = graft.core.Caches.pin(uni(draft, "__cud"))
-    try {
+    try graft.core.Caches.holding { held =>
       val nT = uniT.agg(coalesce(sum(col("__cut")), lit(0L))).head().getLong(0)
       val nD = uniD.agg(coalesce(sum(col("__cud")), lit(0L))).head().getLong(0)
       require(nT >= 2L && nD >= 2L,
@@ -2333,7 +2330,7 @@ object TextAnalysis {
           (coalesce(col("__cud"), lit(0L)) + col("__v")).as("__dq"),
           col("__v"))
       val targetWins = col("__np") * col("__dq") <= col("__nq") * col("__dp")
-      j.groupBy(col("__w1"))
+      held(j.groupBy(col("__w1"))
         .agg(sum(when(targetWins, col("__np")).otherwise(0L)).as("__sp"),
           sum(when(targetWins, lit(0L)).otherwise(col("__nq"))).as("__sq"),
           count(lit(1)).as("n_seen"),
@@ -2346,8 +2343,7 @@ object TextAnalysis {
           round(col("__sp").cast("double") / col("__dp") +
             col("__sq").cast("double") / col("__dq") +
             (col("__v") - col("n_seen")).cast("double") /
-              greatest(col("__dp"), col("__dq")), 6).as("acceptance"))
-        .localCheckpoint(true)
+              greatest(col("__dp"), col("__dq")), 6).as("acceptance")))
     } finally { uniT.unpersist(); uniD.unpersist() }
   }
 
@@ -2412,14 +2408,14 @@ object TextAnalysis {
       tokenCounts: org.apache.spark.sql.DataFrame,
       keys: Seq[Column]): org.apache.spark.sql.DataFrame = {
     val counts = graft.core.Caches.pin(tokenCounts)
-    try {
+    try graft.core.Caches.holding { held =>
       val mx = counts.groupBy(keys: _*).agg(count(lit(1)).as("__v"))
         .agg(max(col("__v"))).head()
       val biggest = if (mx.isNullAt(0)) 0L else mx.getLong(0)
       require(biggest <= 1000000000L,
         s"vocabularyCoverage: a slice holds $biggest types (> 1e9) — " +
           "the Chao1 numerator f1·(f1−1) would overflow 2^63")
-      counts.groupBy(keys: _*)
+      held(counts.groupBy(keys: _*)
         .agg(sum(col("__c")).as("n_tokens"),
           count(lit(1)).as("vocab"),
           count(when(col("__c") === 1L, 1)).as("f1"),
@@ -2429,8 +2425,7 @@ object TextAnalysis {
           round(col("vocab") + (col("f1") * (col("f1") - 1L)).cast("double")
             / (lit(2L) * (col("f2") + 1L)), 6).as("chao1"),
           round(lit(1.0) - col("f1").cast("double") / col("n_tokens"), 6)
-            .as("coverage")): _*)
-        .localCheckpoint(true)
+            .as("coverage")): _*))
     } finally counts.unpersist()
   }
 

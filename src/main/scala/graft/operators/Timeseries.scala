@@ -296,12 +296,11 @@ object Timeseries {
     require(maxBucketsPerKey >= 1,
       s"maxBucketsPerKey must be >= 1, got $maxBucketsPerKey")
     val keys = keyCols.map(col)
-    val agg = rawCells
-      .groupBy(keys :+ col("__b"): _*)
-      .agg(sum(col("n_events")).as("n_events"),
-        sum(col("value_micros")).as("value_micros"))
-      .localCheckpoint(true)
-    try {
+    graft.core.Caches.holding { held =>
+      val agg = held(rawCells
+        .groupBy(keys :+ col("__b"): _*)
+        .agg(sum(col("n_events")).as("n_events"),
+          sum(col("value_micros")).as("value_micros")))
       val spine = agg
         .groupBy(keys: _*)
         .agg(min(col("__b")).as("__minb"), max(col("__b")).as("__maxb"))
@@ -323,14 +322,13 @@ object Timeseries {
       val cond = keyCols
         .map(c => col(c) <=> col(s"__r_$c"))
         .foldLeft(col("__b") === col("__rb"))(_ && _)
-      spine
+      held(spine
         .join(aggR, cond, "left")
         .select(keys ++ Seq(
           (col("__b") * stepUs).as("bucket_us"),
           coalesce(col("n_events"), lit(0L)).as("n_events"),
-          coalesce(col("value_micros"), lit(0L)).as("value_micros")): _*)
-        .localCheckpoint(true)
-    } finally agg.unpersist()
+          coalesce(col("value_micros"), lit(0L)).as("value_micros")): _*))
+    }
   }
 
   /** Last-observation-carried-forward over a per-key ordered frame:

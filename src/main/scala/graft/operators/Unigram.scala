@@ -85,15 +85,14 @@ object Unigram {
     require(maxPieceLen >= 1 && maxPieceLen <= 64,
       s"maxPieceLen must be in 1..64, got $maxPieceLen")
     val spark = docs.sparkSession
-    val wt = wordTypes(docs, textCol, lowercase).localCheckpoint(true)
-    try {
+    graft.core.Caches.holding { held =>
+      val wt = held(wordTypes(docs, textCol, lowercase))
       require(wt.limit(1).count() > 0, "Unigram.train: no words in corpus")
       // ---- seed: top substrings by weighted frequency + all chars ----
-      val subCounts = wt
+      val subCounts = held(wt
         .select(explode(substringsExpr(col("__word"), maxPieceLen))
           .as("__p"), col("__n"))
-        .groupBy("__p").agg(sum(col("__n")).as("__c"))
-        .localCheckpoint(true)
+        .groupBy("__p").agg(sum(col("__n")).as("__c")))
       val top = subCounts
         .orderBy(col("__c").desc, col("__p").asc).limit(seedSize)
       val singles = subCounts.where(length(col("__p")) <= 2)
@@ -101,7 +100,7 @@ object Unigram {
       val seed = top.unionByName(singles).groupBy("__p")
         .agg(max(col("__c")).as("__c"))
         .collect().map(r => r.getString(0) -> r.getLong(1))
-      graft.core.Caches.releaseCheckpoint(subCounts)
+      held.release(subCounts)
       val singleSet = seed.collect {
         case (p, _) if p.codePointCount(0, p.length) == 1 => p
       }.toSet
@@ -154,7 +153,7 @@ object Unigram {
         .map { case ((p, s, _), i) => (p, s, i) }
       import spark.implicits._
       fin.toSeq.toDF("piece", "score", "token_id")
-    } finally graft.core.Caches.releaseCheckpoint(wt)
+    }
   }
 
   /** Encode a corpus under a trained vocabulary: per document, the

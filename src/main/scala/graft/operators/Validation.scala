@@ -639,7 +639,7 @@ object Validation {
         col("__v"))
       .sortWithinPartitions(col("__v"))
       .withColumn("__pid", spark_partition_id()))
-    try {
+    try graft.core.Caches.holding { held =>
       val w = org.apache.spark.sql.expressions.Window
       val offsets = g.groupBy(col("__pid")).agg(sum(col("__c")).as("__p"))
         .withColumn("__off", coalesce(sum(col("__p")).over(
@@ -651,7 +651,7 @@ object Validation {
             .rowsBetween(Long.MinValue, -1)), lit(0L)))
         .join(broadcast(offsets), "__pid")
         .select(col("__v"), col("__c"), (col("__r") + col("__off")).as("__b"))
-      cells.agg(
+      held(cells.agg(
           coalesce(sum(col("__c")), lit(0L)).as("n"),
           coalesce(sum(col("__v") * col("__c")), lit(0L)).as("__sx"),
           coalesce(sum(col("__v") * (col("__c") * col("__b") +
@@ -660,8 +660,7 @@ object Validation {
           round(when(col("__sx") === 0L, lit(null))
             .otherwise(lit(2.0) * col("__rs") /
               (col("n") * col("__sx")).cast("double") -
-              (col("n") + lit(1L)).cast("double") / col("n")), 6).as("gini"))
-        .localCheckpoint(true)
+              (col("n") + lit(1L)).cast("double") / col("n")), 6).as("gini")))
     } finally g.unpersist()
   }
 
@@ -800,7 +799,7 @@ object Validation {
         before.sparkSession.sparkContext.defaultParallelism, col("__v"))
       .sortWithinPartitions(col("__v"))
       .withColumn("__pid", spark_partition_id()))
-    try {
+    try graft.core.Caches.holding { held =>
       val w = org.apache.spark.sql.expressions.Window
       val offsets = merged.groupBy(col("__pid"))
         .agg(sum(col("__c1")).as("__p1"), sum(col("__c2")).as("__p2"))
@@ -818,13 +817,12 @@ object Validation {
         .select(abs((col("__r1") + col("__o1")) * lit(n2) -
           (col("__r2") + col("__o2")) * lit(n1)).as("__d"))
         .agg(coalesce(max(col("__d")), lit(0L)).as("__dnum"))
-      dNum.select(
+      held(dNum.select(
           lit(n1).as("n_before"), lit(n2).as("n_after"),
           lit(nl1).as("null_before"), lit(nl2).as("null_after"),
           round(when(lit(n1) === 0L || lit(n2) === 0L, lit(null))
             .otherwise(col("__dnum").cast("double") / (lit(n1) * lit(n2))), 6)
-            .as("ks"))
-        .localCheckpoint(true)
+            .as("ks")))
     } finally merged.unpersist()
   }
 
@@ -910,12 +908,11 @@ object Validation {
     * [[graft.streaming.StreamingOps.kappaLogSink]] log shape; cells
     * are sum-mergeable, so the standing value equals the batch one.
     */
-  def cohenKappaFromCells(rawCells: DataFrame): DataFrame = {
-    val cells = rawCells
-      .groupBy(col("__a"), col("__b"))
-      .agg(sum(col("__nab")).as("__nab"))
-      .localCheckpoint(true)
-    try {
+  def cohenKappaFromCells(rawCells: DataFrame): DataFrame =
+    graft.core.Caches.holding { held =>
+      val cells = held(rawCells
+        .groupBy(col("__a"), col("__b"))
+        .agg(sum(col("__nab")).as("__nab")))
       val margA = cells.groupBy(col("__a")).agg(sum(col("__nab")).as("__na"))
       val margB = cells.groupBy(col("__b")).agg(sum(col("__nab")).as("__nb"))
       val peNum = margA
@@ -926,14 +923,12 @@ object Validation {
         coalesce(sum(when(col("__a") <=> col("__b"), col("__nab"))
           .otherwise(lit(0L))), lit(0L)).as("agree"))
       val denom = col("n") * col("n") - col("__pe_num")
-      totals.crossJoin(peNum)
+      held(totals.crossJoin(peNum)
         .select(col("n"), col("agree"),
           round(when(denom === 0L, lit(null))
             .otherwise((col("n") * col("agree") - col("__pe_num"))
-              .cast("double") / denom), 6).as("kappa"))
-        .localCheckpoint(true)
-    } finally cells.unpersist()
-  }
+              .cast("double") / denom), 6).as("kappa")))
+    }
 
   /** Fleiss' kappa (Fleiss 1971) over long-format ratings
     * `(itemCol, labelCol)` — one row per individual rating — for ≥ 2
@@ -961,12 +956,11 @@ object Validation {
     * Output: one row `(n_items, n_raters, kappa)`; kappa rounded to
     * 6 dp, NULL when every rating is the same single category.
     */
-  def fleissKappa(df: DataFrame, itemCol: String, labelCol: String): DataFrame = {
-    val cells = df
-      .groupBy(col(itemCol).as("__i"), col(labelCol).as("__j"))
-      .agg(count(lit(1)).as("__nij"))
-      .localCheckpoint(true)
-    try {
+  def fleissKappa(df: DataFrame, itemCol: String, labelCol: String): DataFrame =
+    graft.core.Caches.holding { held =>
+      val cells = held(df
+        .groupBy(col(itemCol).as("__i"), col(labelCol).as("__j"))
+        .agg(count(lit(1)).as("__nij")))
       val perItem = cells.groupBy(col("__i")).agg(
         sum(col("__nij")).as("__n"),
         sum(col("__nij") * col("__nij")).as("__sq"))
@@ -985,16 +979,14 @@ object Validation {
         .agg(coalesce(sum(col("__cj") * col("__cj")), lit(0L)).as("__B"))
       val denom =
         lit(n - 1) * (col("n_items") * col("n_items") * lit(n * n) - col("__B"))
-      a.crossJoin(b)
+      held(a.crossJoin(b)
         .select(col("n_items"), lit(n).as("n_raters"),
           round(when(denom === 0L, lit(null))
             .otherwise(
               (col("__A") * col("n_items") * lit(n) - col("__B") * lit(n - 1))
                 .cast("double") / denom),
-            6).as("kappa"))
-        .localCheckpoint(true)
-    } finally cells.unpersist()
-  }
+            6).as("kappa")))
+    }
 
   /** Cliff's delta — the ordinal two-sample effect size for A/B audits
     * (did the new filter SHIFT the length/quality/score distribution,
@@ -1059,7 +1051,7 @@ object Validation {
         rawCounts.sparkSession.sparkContext.defaultParallelism, col("__v"))
       .sortWithinPartitions(col("__v"))
       .withColumn("__pid", spark_partition_id()))
-    try {
+    try graft.core.Caches.holding { held =>
       val offsets = g.groupBy(col("__pid"))
         .agg(sum(col("__ca")).as("__pa"), sum(col("__cb")).as("__pb"))
         .withColumn("__offa", coalesce(
@@ -1071,7 +1063,7 @@ object Validation {
         .select(col("__pid"), col("__offa"), col("__offb"))
       val pw = w.partitionBy(col("__pid")).orderBy(col("__v"))
         .rowsBetween(Long.MinValue, -1)
-      g.withColumn("__ra", coalesce(sum(col("__ca")).over(pw), lit(0L)))
+      held(g.withColumn("__ra", coalesce(sum(col("__ca")).over(pw), lit(0L)))
         .withColumn("__rb", coalesce(sum(col("__cb")).over(pw), lit(0L)))
         .join(broadcast(offsets), "__pid")
         .agg(
@@ -1088,8 +1080,7 @@ object Validation {
           round(when(col("__na") === 0L || col("__nb") === 0L, lit(null))
             .otherwise((col("__wins").cast("double") +
               col("__ties") / lit(2.0)) /
-              (col("__na") * col("__nb"))), 6).as("auc"))
-        .localCheckpoint(true)
+              (col("__na") * col("__nb"))), 6).as("auc")))
     } finally g.unpersist()
   }
 
@@ -1121,7 +1112,7 @@ object Validation {
         counts.sparkSession.sparkContext.defaultParallelism, col(orderCol))
       .sortWithinPartitions(col(orderCol))
       .withColumn("__sm_pid", spark_partition_id()))
-    try {
+    try graft.core.Caches.holding { held =>
       // per-partition mins, then the min over all HIGHER partitions —
       // partitions-sized, always broadcast
       val offsets = g.groupBy(col("__sm_pid"))
@@ -1133,14 +1124,10 @@ object Validation {
       val local = min(col(minCol)).over(
         w.partitionBy(col("__sm_pid")).orderBy(col(orderCol).desc)
           .rowsBetween(Long.MinValue, 0))
-      val out = g.join(broadcast(offsets), Seq("__sm_pid"))
+      held(g.join(broadcast(offsets), Seq("__sm_pid"))
         .withColumn(outCol,
           least(local, coalesce(col("__sm_off"), lit(Long.MaxValue))))
-        .drop("__sm_pid", "__sm_off")
-        .localCheckpoint(true)
-      // the caller's result reads it: a collectPins scope frees it
-      graft.core.Caches.registerCheckpoint(out)
-      out
+        .drop("__sm_pid", "__sm_off"))
     } finally g.unpersist()
   }
 
@@ -1168,7 +1155,7 @@ object Validation {
         counts.sparkSession.sparkContext.defaultParallelism, ord: _*)
       .sortWithinPartitions(ord: _*)
       .withColumn("__rp_pid", spark_partition_id()))
-    try {
+    try graft.core.Caches.holding { held =>
       val offsets = g.groupBy(col("__rp_pid") +: keys: _*)
         .agg(sum(col(sumCol)).as("__rp_p"))
         .withColumn("__rp_off", coalesce(
@@ -1195,16 +1182,12 @@ object Validation {
           g.join(o, cond).drop("__rp_pid_o")
             .drop(keyCols.map("__rp_o_" + _): _*)
         }
-      val out = withOff.withColumn("__rp_run", coalesce(
+      held(withOff.withColumn("__rp_run", coalesce(
           sum(col(sumCol)).over(w.partitionBy(col("__rp_pid") +: keys: _*)
             .orderBy(col(orderCol)).rowsBetween(Long.MinValue, -1)),
           lit(0L)))
         .withColumn(outCol, col("__rp_run") + col("__rp_off"))
-        .drop("__rp_pid", "__rp_run", "__rp_off")
-        .localCheckpoint(true)
-      // the caller's result reads it: a collectPins scope frees it
-      graft.core.Caches.registerCheckpoint(out)
-      out
+        .drop("__rp_pid", "__rp_run", "__rp_off"))
     } finally g.unpersist()
   }
 
@@ -1536,7 +1519,7 @@ object Validation {
       .agg(count(lit(1)).as("n"),
         count(when(col(successCol), 1)).as("successes"))
       .withColumn("__pm", expr("successes * 1000000 div n")))
-    try {
+    try graft.core.Caches.holding { held =>
       val gcnt = g.count()
       require(gcnt >= 2L,
         "shrunkenRates: fewer than 2 groups — the prior is " +
@@ -1566,13 +1549,12 @@ object Validation {
       val k = m * (1.0 - m) / v - 1.0
       val alpha = m * k
       val beta = (1.0 - m) * k
-      g.select(keys ++ Seq(col("n"), col("successes"),
+      held(g.select(keys ++ Seq(col("n"), col("successes"),
           round(col("successes").cast("double") / col("n"), 6).as("rate"),
           round((col("successes") + lit(alpha)) /
             (col("n") + lit(alpha) + lit(beta)), 6).as("shrunk_rate"),
           round(lit(alpha), 6).as("alpha"),
-          round(lit(beta), 6).as("beta")): _*)
-        .localCheckpoint(true)
+          round(lit(beta), 6).as("beta")): _*))
     } finally g.unpersist()
   }
 
@@ -1826,7 +1808,7 @@ object Validation {
     val g = graft.core.Caches.pin(cells
       .groupBy(col("__x"), col("__y"))
       .agg(sum(col("__n")).as("__n")))
-    try {
+    try graft.core.Caches.holding { held =>
       val bad = g.agg(count(when(col("__x").isNull || col("__y").isNull,
         1)).as("__b"), sum(col("__n")).as("__t")).head()
       require(bad.getAs[Long]("__b") == 0L,
@@ -1844,7 +1826,7 @@ object Validation {
           w.orderBy(col(vCol)).rowsBetween(Long.MinValue, -1)), lit(0L)))
         .select(col(vCol),
           (lit(2L) * col("__b") + col("__c") + 1L - n - 1L).as(out))
-      g.join(rank2("__x", "__dx"), Seq("__x"))
+      held(g.join(rank2("__x", "__dx"), Seq("__x"))
         .join(rank2("__y", "__dy"), Seq("__y"))
         .agg(sum(col("__n") * col("__dx") * col("__dy")).as("sum_dxdy"),
           sum(col("__n") * col("__dx") * col("__dx")).as("__sxx"),
@@ -1853,8 +1835,7 @@ object Validation {
           when(col("__sxx") === 0L || col("__syy") === 0L, lit(null))
             .otherwise(round(col("sum_dxdy").cast("double") /
               (sqrt(col("__sxx").cast("double")) *
-                sqrt(col("__syy").cast("double"))), 6)).as("rho"))
-        .localCheckpoint(true)
+                sqrt(col("__syy").cast("double"))), 6)).as("rho")))
     } finally g.unpersist()
   }
 

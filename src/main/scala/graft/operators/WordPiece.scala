@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Loop
+import graft.core.Caches
 
 /** WordPiece tokenizer — the third member of the tokenizer tier next to
   * [[Bpe]] (frequency merges) and [[Unigram]] (likelihood pruning): the
@@ -139,7 +139,7 @@ object WordPiece {
     require(batchSize >= 1 && batchSize <= 256,
       s"batchSize must be in [1, 256], got $batchSize")
     val spark = docs.sparkSession
-    Loop.holding { held =>
+    Caches.holding { held =>
       val table = MergeTraining.open(held, wordTypes(docs, textCol, lowercase))
       // the alphabet is driver-bounded by the corpus's distinct chars ×2
       val alphabet = table.alphabet().sorted

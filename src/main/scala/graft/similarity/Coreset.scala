@@ -67,21 +67,23 @@ object Coreset {
     val seedVec = seedRow.head.getSeq[Double](1).toArray
     val picked = scala.collection.mutable.ArrayBuffer(
       (0, seedId, 0.0))
-    // the last state only feeds `picked`: release it on return
-    graft.core.Caches.releaseCheckpoint(Loop.iterate(
-      base.select(col("__id"), col("__v"), distTo(seedVec).as("__d"))
-        .localCheckpoint(true), rounds = k - 1) { (cur, r) =>
-      val far = cur.orderBy(col("__d").desc, col("__id")).limit(1)
-        .select(col("__id"), col("__v"), col("__d")).head(1)
-      // fewer distinct points than k: stop early rather than repeat
-      if (far.isEmpty || far.head.getDouble(2) == 0.0) None
-      else {
-        picked += ((r, far.head.getString(0), far.head.getDouble(2)))
-        val vec = far.head.getSeq[Double](1).toArray
-        Some(cur.select(col("__id"), col("__v"),
-          least(col("__d"), distTo(vec)).as("__d")))
-      }
-    })
-    picked.toSeq.toDF("center_rank", idCol, "dist")
+    // the last state only feeds `picked`: released on return
+    graft.core.Caches.holding { held =>
+      held.adopt(Loop.iterate(
+        base.select(col("__id"), col("__v"), distTo(seedVec).as("__d"))
+          .localCheckpoint(true), rounds = k - 1) { (cur, r) =>
+        val far = cur.orderBy(col("__d").desc, col("__id")).limit(1)
+          .select(col("__id"), col("__v"), col("__d")).head(1)
+        // fewer distinct points than k: stop early rather than repeat
+        if (far.isEmpty || far.head.getDouble(2) == 0.0) None
+        else {
+          picked += ((r, far.head.getString(0), far.head.getDouble(2)))
+          val vec = far.head.getSeq[Double](1).toArray
+          Some(cur.select(col("__id"), col("__v"),
+            least(col("__d"), distTo(vec)).as("__d")))
+        }
+      })
+      picked.toSeq.toDF("center_rank", idCol, "dist")
+    }
   }
 }

@@ -229,6 +229,14 @@ object StatLog {
     spark.read.parquet(dirs: _*)
   }
 
+  /** [[read]] with the `sum` fold law applied: one row per distinct
+    * cell (every column but `__kcnt`), `__kcnt` summed over every batch
+    * that delivered it — the standing table a `sum` log's readers
+    * compute from.
+    */
+  def readSum(spark: SparkSession, logPath: String): DataFrame =
+    fold("sum", read(spark, logPath))
+
   private def fold(kind: String, df: DataFrame): DataFrame = kind match {
     case "distinct" => df.distinct()
     case "sum" =>

@@ -468,26 +468,27 @@ object StreamingOps {
         // scan AND the index delta — the batch text hashes once
         val (wins, spans) = es.winsAndSpans(batch, indexPath,
           idCol, textCol, w, salt, buckets, broadcastBatch = true)
-        // materialize BEFORE either append: the probe re-lists the
-        // index directory at execution time (see ingestBatch)
-        val cleaned = es.cutSpans(batch, spans, idCol, textCol)
-          .localCheckpoint(true)
-        graft.core.Caches.registerCheckpoint(cleaned)
-        // fully-cut documents (everything they carried was already
-        // in the corpus) are DROPPED, not appended as empty rows —
-        // which also makes a fully-replayed batch whose index write
-        // committed self-suppressing: every window matches, every
-        // doc cuts to empty, nothing re-appends (the same property
-        // dedupIngestSink gets from its survivors-only append).
-        // Sub-w-token docs have no windows to match and duplicate
-        // on such a replay — healed downstream by exactDedup, the
-        // documented at-least-once trade.
-        cleaned.where(!(col("kept_text") === "" &&
-            col("removed_tokens") > 0))
-          .write.mode("append").parquet(corpusPath)
-        es.writeSubstrIndex(
-          wins.select("__hb", "__h1", "__h2").distinct(),
-          indexPath, w, salt, buckets)
+        graft.core.Caches.holding { held =>
+          // materialize BEFORE either append: the probe re-lists the
+          // index directory at execution time (see ingestBatch)
+          val cleaned = held(es.cutSpans(batch, spans, idCol, textCol))
+          // fully-cut documents (everything they carried was already
+          // in the corpus) are DROPPED, not appended as empty rows —
+          // which also makes a fully-replayed batch whose index write
+          // committed self-suppressing: every window matches, every
+          // doc cuts to empty, nothing re-appends (the same property
+          // dedupIngestSink gets from its survivors-only append).
+          // Sub-w-token docs have no windows to match and duplicate
+          // on such a replay — healed downstream by exactDedup, the
+          // documented at-least-once trade.
+          cleaned.where(!(col("kept_text") === "" &&
+              col("removed_tokens") > 0))
+            .write.mode("append").parquet(corpusPath)
+          es.writeSubstrIndex(
+            wins.select("__hb", "__h1", "__h2").distinct(),
+            indexPath, w, salt, buckets)
+          cleaned // the batch scope releases it below
+        }
       }
       pins.release()
     }
@@ -738,6 +739,20 @@ object StreamingOps {
     }
   }
 
+  /** [[StatLog.readSum]] of a `sum` log whose cells are keyed by exactly
+    * `cellCols`. The fold groups by the log's own columns, so a reader
+    * naming fewer keys than its sink wrote would get unrolled-up cells —
+    * refused instead.
+    */
+  private def readSumOf(
+      spark: SparkSession, logPath: String, cellCols: Seq[String]): DataFrame = {
+    val cells = StatLog.readSum(spark, logPath)
+    require(cells.columns.toSet == cellCols.toSet + "__kcnt",
+      s"stat log '$logPath' holds cells (${cells.columns.mkString(", ")}); " +
+        s"the reader expects (${cellCols.mkString(", ")}, __kcnt) — pass the sink's keys")
+    cells
+  }
+
   /** Combinations whose TOTAL delivered count reaches `k` — the
     * standing k-anonymity pass list over a [[comboCountSink]] log.
     */
@@ -746,9 +761,8 @@ object StreamingOps {
       logPath: String,
       quasiCols: Seq[String],
       k: Long): DataFrame =
-    StatLog.read(spark, logPath)
-      .groupBy(quasiCols.map(col): _*)
-      .agg(sum(col("__kcnt")).as("n"))
+    readSumOf(spark, logPath, quasiCols)
+      .select(quasiCols.map(col) :+ col("__kcnt").as("n"): _*)
       .where(col("n") >= k)
 
   /** Stream distinct (quasi…, sensitive) pairs — the l-diversity twin's
@@ -817,13 +831,11 @@ object StreamingOps {
     */
   private def contingencyCellsFromLog(
       spark: SparkSession, logPath: String): DataFrame =
-    StatLog.read(spark, logPath)
-      .groupBy(col("__a"), col("__b"), col("__a_null"), col("__b_null"))
-      .agg(sum(col("__kcnt")).as("__nab"))
+    StatLog.readSum(spark, logPath)
       .select(
         when(col("__a_null"), lit(null)).otherwise(col("__a")).as("__a"),
         when(col("__b_null"), lit(null)).otherwise(col("__b")).as("__b"),
-        col("__nab"))
+        col("__kcnt").as("__nab"))
 
   /** The standing Cohen's kappa over everything delivered to a
     * [[kappaLogSink]] log — same output row as the batch operator.
@@ -925,9 +937,7 @@ object StreamingOps {
 
   private def termCountsFromLog(
       spark: SparkSession, logPath: String): DataFrame =
-    StatLog.read(spark, logPath)
-      .groupBy(col("__k"), col("__t"))
-      .agg(sum(col("__kcnt")).as("__c"))
+    StatLog.readSum(spark, logPath).withColumnRenamed("__kcnt", "__c")
 
   /** Standing slice-mirror detection (term-count cosine) over
     * everything delivered to a [[termCountSink]] log — same output
@@ -967,9 +977,7 @@ object StreamingOps {
     * [[graft.operators.Validation.krippendorffAlpha]].
     */
   def krippendorffFromLog(spark: SparkSession, logPath: String): DataFrame = {
-    val folded = StatLog.read(spark, logPath)
-      .groupBy(col("__u"), col("__v"), col("__u_null"), col("__v_null"))
-      .agg(sum(col("__kcnt")).as("__c"))
+    val folded = StatLog.readSum(spark, logPath).withColumnRenamed("__kcnt", "__c")
     val bad = folded.agg(count(when(col("__u_null") || col("__v_null"), 1))
       .as("__bad")).head().getAs[Long]("__bad")
     require(bad == 0L,
@@ -992,9 +1000,7 @@ object StreamingOps {
       logA: String,
       logB: String): DataFrame = {
     def side(path: String, out: String): DataFrame = {
-      val c = StatLog.read(spark, path)
-        .groupBy(col("__v"), col("__is_null"))
-        .agg(sum(col("__kcnt")).as("__c"))
+      val c = StatLog.readSum(spark, path).withColumnRenamed("__kcnt", "__c")
       val bad = c.agg(
         count(when(col("__is_null") ||
           col("__v") =!= col("__v").cast("long").cast("double"), 1))
@@ -1033,10 +1039,8 @@ object StreamingOps {
     */
   def benfordFromLog(spark: SparkSession, logPath: String): DataFrame =
     graft.operators.Validation.benfordFromCounts(
-      StatLog.read(spark, logPath)
-        .groupBy(col("__d"))
-        .agg(sum(col("__kcnt")).as("n"))
-        .select(col("__d").as("digit"), col("n")))
+      StatLog.readSum(spark, logPath)
+        .select(col("__d").as("digit"), col("__kcnt").as("n")))
 
   /** Stream a keyed integer time series into a replayable point log
     * for the standing CUSUM monitor: CUSUM is ORDER-dependent (no
@@ -1072,11 +1076,9 @@ object StreamingOps {
       target: Long,
       slack: Long,
       threshold: Long): DataFrame = {
-    val pts = StatLog.read(spark, logPath)
-      .groupBy(col("__k"), col("__t"), col("__x"))
-      .agg(sum(col("__kcnt")).as("__n"))
+    val pts = StatLog.readSum(spark, logPath)
       .select(col("__k"), col("__t"), col("__x"),
-        explode(expr("sequence(1, __n)")).as("__i"))
+        explode(expr("sequence(1, __kcnt)")).as("__i"))
       .drop("__i")
     graft.operators.Timeseries.cusumChangepoints(
       pts, Seq("__k"), "__t", "__x", target, slack, threshold)
@@ -1114,12 +1116,8 @@ object StreamingOps {
       beforeLog: String,
       afterLog: String): DataFrame =
     graft.operators.Validation.ksFromValueCounts(
-      StatLog.read(spark, beforeLog)
-        .groupBy(col("__v"), col("__is_null"))
-        .agg(sum(col("__kcnt")).as("__c")),
-      StatLog.read(spark, afterLog)
-        .groupBy(col("__v"), col("__is_null"))
-        .agg(sum(col("__kcnt")).as("__c")))
+      StatLog.readSum(spark, beforeLog).withColumnRenamed("__kcnt", "__c"),
+      StatLog.readSum(spark, afterLog).withColumnRenamed("__kcnt", "__c"))
 
   /** Stream rows into a KEYED per-(group, micro-value) count log — the
     * sum-mergeable cells [[graft.operators.Validation.trimmedMean]] is
@@ -1162,9 +1160,7 @@ object StreamingOps {
       keyCols: Seq[String],
       trim: Double = 0.1): DataFrame =
     graft.operators.Validation.trimmedMeanFromValueCounts(
-      StatLog.read(spark, logPath)
-        .groupBy(keyCols.map(col) :+ col("__v"): _*)
-        .agg(sum(col("__kcnt")).as("__c")),
+      readSumOf(spark, logPath, keyCols :+ "__v").withColumnRenamed("__kcnt", "__c"),
       keyCols, trim)
 
   /** Standing EXACT per-group quantiles over a [[trimmedMeanSink]] log
@@ -1179,9 +1175,7 @@ object StreamingOps {
       keyCols: Seq[String],
       probs: Seq[Double] = Seq(0.5, 0.9, 0.95, 0.99)): DataFrame =
     graft.operators.Validation.groupedQuantilesFromValueCounts(
-      StatLog.read(spark, logPath)
-        .groupBy(keyCols.map(col) :+ col("__v"): _*)
-        .agg(sum(col("__kcnt")).as("__c")),
+      readSumOf(spark, logPath, keyCols :+ "__v").withColumnRenamed("__kcnt", "__c"),
       keyCols, probs)
 
   /** Stream embedding rows into a sum-mergeable SLICED-WASSERSTEIN
@@ -1230,9 +1224,7 @@ object StreamingOps {
       directions: Int = 8,
       grid: Int = 32,
       maxSlices: Int = 64): DataFrame = {
-    val vc = StatLog.read(spark, logPath)
-      .groupBy(col("__k"), col("__d"), col("__v"))
-      .agg(sum(col("__kcnt")).as("__c"))
+    val vc = StatLog.readSum(spark, logPath).withColumnRenamed("__kcnt", "__c")
     val dStats = vc.agg(countDistinct(col("__d")).as("__nd"),
       max(col("__d")).as("__maxd")).head()
     require(dStats.getAs[Long]("__nd") == directions.toLong &&
@@ -1404,9 +1396,8 @@ object StreamingOps {
       spark: SparkSession,
       logPath: String,
       groupCols: Seq[String]): DataFrame =
-    StatLog.read(spark, logPath)
-      .groupBy((groupCols :+ "__d" :+ "__b").map(col): _*)
-      .agg(sum(col("__kcnt")).as("cnt"))
+    readSumOf(spark, logPath, groupCols :+ "__d" :+ "__b")
+      .select((groupCols :+ "__d" :+ "__b").map(col) :+ col("__kcnt").as("cnt"): _*)
 
   /** Stream embeddings into a persisted IVF-PQ index
     * ([[graft.operators.Ann.IvfPq.appendBatch]] per micro-batch):

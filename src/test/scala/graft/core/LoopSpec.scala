@@ -43,7 +43,7 @@ class LoopSpec extends SparkTestBase {
   test("on return the checkpoints the result reads stay pinned in the caller's scope; the rest are released") {
     val before = pinnedNow
     val (out, pins) = Caches.collectPins {
-      Loop.holding { held =>
+      Caches.holding { held =>
         val a = held(spark.range(5).toDF("x"))
         val b = held(a.select(($"x" * 2).as("y")))
         held(spark.range(3).toDF("z")) // the result never reads this one

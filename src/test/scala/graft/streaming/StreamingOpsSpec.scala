@@ -784,6 +784,20 @@ class StreamingOpsSpec extends SparkTestBase {
     } finally { qk.stop(); ql.stop() }
   }
 
+  test("sum-log readers fold by the cells' own keys and refuse other keys") {
+    val log = Files.createTempDirectory("graft_sum_log_").toString
+    Seq(("en", "web", 2L), ("de", "web", 1L)).toDF("lang", "source", "__kcnt")
+      .write.parquet(log + "/batch=b000000000000")
+    Seq(("en", "web", 1L)).toDF("lang", "source", "__kcnt")
+      .write.parquet(log + "/batch=b000000000001")
+    val pass = StreamingOps.passingCombosFromLog(spark, log,
+      Seq("source", "lang"), 3L).as[(String, String, Long)].collect().toSeq
+    assert(pass == Seq(("web", "en", 3L)), "cells sum across batches")
+    // a subset of the sink's keys would read partial cells as combos
+    intercept[IllegalArgumentException](
+      StreamingOps.passingCombosFromLog(spark, log, Seq("lang"), 3L))
+  }
+
   test("cmsSink: streamed cells equal the batch sketch; fold + replay are no-ops") {
     import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
